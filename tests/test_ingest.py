@@ -8,7 +8,11 @@ import json
 import time
 import urllib.error
 import urllib.request
+from collections import Counter
 
+from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.core import (
+    windowed_counts_scaled,
+)
 from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.ingest import (
     IngestGateway,
     ingest_stream,
@@ -164,3 +168,54 @@ def test_close_final_drain_spools_unflushed_residue(tmp_path):
     assert sorted(m["user_id"] for m in lines) == sorted(
         m["user_id"] for m in msgs
     )
+
+
+def test_backlog_drain_lists_files_without_a_spark_job(spark, tmp_path):
+    """A backlog of more spool files than Spark's parallel-listing
+    threshold (32) drains in one micro-batch whose file index is built
+    on the driver: the local session launches no file-listing job, and
+    the windowed counts equal the tallies of the written files."""
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    emojis = ["🔥", "🎉", "😂", "👍"]
+    tally: Counter = Counter()
+    for f in range(40):
+        lines = []
+        for i in range(25):
+            n = f * 25 + i
+            emoji = emojis[n % len(emojis)]
+            minute, second = divmod(n // 5, 60)
+            lines.append(json.dumps({
+                "user_id": f"user_{n}",
+                "emoji_type": emoji,
+                "timestamp": f"2024-01-01T00:{minute:02d}:{second:02d}.000000",
+            }, ensure_ascii=False))
+            tally[(emoji, f"2024-01-01 00:{minute:02d}")] += 1
+        # the gateway's spool format: one JSON object per line
+        (spool / f"part-backlog0-{f:08d}.json").write_text(
+            "\n".join(lines) + "\n", encoding="utf-8"
+        )
+    listing_jobs = (
+        spark._jvm.org.apache.spark.metrics.source.HiveCatalogMetrics
+        .METRIC_PARALLEL_LISTING_JOB_COUNT()
+    )
+    before = listing_jobs.getCount()
+    q = (
+        windowed_counts_scaled(
+            ingest_stream(spark, str(spool)), key_col="emoji_type"
+        )
+        .writeStream.format("memory")
+        .queryName("backlog_drain")
+        .outputMode("complete")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert listing_jobs.getCount() == before
+    rows = spark.sql(
+        "SELECT emoji_type, date_format(window.start, 'yyyy-MM-dd HH:mm')"
+        " AS minute, cnt FROM backlog_drain"
+    ).collect()
+    assert {(r.emoji_type, r.minute): r.cnt for r in rows} == dict(tally)
