@@ -3,8 +3,8 @@
 All batch queries take ``(spark, sf_dir)`` and load via :func:`table` so the
 parquet scan gets Catalyst's predicate pushdown + column pruning for free.
 
-The reader *DataFrame* (the unresolved scan plan) is memoized per
-(session, sf_dir, table) — round-10 optimization. ``spark.read.parquet``
+The reader *DataFrame* (the unresolved scan plan) is a session memo
+per (sf_dir, table) — round-10 optimization. ``spark.read.parquet``
 re-lists the directory and re-reads footers for schema inference on
 EVERY call (~90 ms of driver-side work, measured at sf0.1), and the
 contract tables are immutable fixtures, so repeated inference is pure
@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (used in expr strings)
 from pyspark.sql import types as T
+
+from .caches import session_memo
 
 TABLES = (
     "region",
@@ -42,31 +44,14 @@ TABLES = (
 _NANO_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
-# (applicationId, sf_dir, name) -> reader DataFrame. Keyed by
-# applicationId so a memoized plan never outlives its SparkSession;
-# entries from stopped sessions are dropped on the next miss (sessions
-# are sequential in every harness, so the memo never holds more than
-# one app's handles).
-_READER_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def clear_table_memo() -> None:
-    """Drop every memoized reader plan (no persisted blocks to free —
-    the memo holds unresolved scan plans, never rows)."""
-    _READER_MEMO.clear()
-
-
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, name)
-    hit = _READER_MEMO.get(key)
-    if hit is not None:
-        return hit
-    stale = [k for k in _READER_MEMO if k[0] != app_id]
-    for k in stale:
-        del _READER_MEMO[k]
+    return _reader(spark, sf_dir, name)
+
+
+@session_memo("table_reader_plans")
+def _reader(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name in _NANO_TS_COLS:
         # Scoped: the conf is consulted at schema-resolution (read) time
         # and captured into the relation, so restoring it immediately
@@ -95,7 +80,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                     "TIMESTAMP_NTZ '1970-01-01 00:00:00')"
                 ),
             )
-    _READER_MEMO[key] = df
     return df
 
 

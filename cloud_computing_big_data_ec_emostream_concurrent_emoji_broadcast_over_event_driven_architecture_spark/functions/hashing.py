@@ -95,12 +95,3 @@ def minhash_signature(hashed_shingles: Column) -> Column:
             ),
         ),
     )
-
-
-def minhash_signature_sql(hashed_col: str) -> list[str]:
-    """DuckDB SQL expressions (one per hash fn) mirroring
-    :func:`minhash_signature`, as aggregates over an unnested hash column."""
-    return [
-        f"MIN(({a} * {hashed_col} + {b}) % {MERSENNE_P})"
-        for a, b in MINHASH_AB
-    ]

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..caches import session_memo
 from ..catalog import table
 from ..plans.registry import register
 
@@ -862,19 +863,7 @@ def q_xcorr_best_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WORDS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_words_cache() -> None:
-    """Unpersist and drop the audience bitmap-word session cache."""
-    for df in _WORDS_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _WORDS_CACHE.clear()
-
-
+@session_memo("audience_bitmap_words")
 def _audience_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, word_id, word) — each type's user set OR-compressed
     into 64-bit bitmap words; session-persisted (round-11, the round-10
@@ -885,28 +874,25 @@ def _audience_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a full fact scan. At 100× events (/tmp/sfev100) the persisted
     form measured 0.82-1.34 s vs 1.11-5.06 s for the derive-twice form;
     at sf0.1 the build is ~0.5 s slower than one derivation, which the
-    session memo amortizes away from the second call on. Released by
-    ``clear_words_cache`` (caches.SESSION_CACHE_CLEARERS)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _WORDS_CACHE:
-        ev = table(spark, sf_dir, "events")
-        _WORDS_CACHE[key] = (
-            ev.select(
-                "event_type",
-                F.expr(
-                    f"(user_id - pmod(user_id, {_BITMAP_WORD_BITS}))"
-                    f" div {_BITMAP_WORD_BITS}"
-                ).alias("word_id"),
-                F.expr(
-                    f"shiftleft(1L, CAST(pmod(user_id, {_BITMAP_WORD_BITS})"
-                    " AS INT))"
-                ).alias("bit"),
-            )
-            .groupBy("event_type", "word_id")
-            .agg(F.bit_or("bit").alias("word"))
-            .persist()
+    session memo amortizes away from the second call on. Released with
+    the ``audience_bitmap_words`` family."""
+    ev = table(spark, sf_dir, "events")
+    return (
+        ev.select(
+            "event_type",
+            F.expr(
+                f"(user_id - pmod(user_id, {_BITMAP_WORD_BITS}))"
+                f" div {_BITMAP_WORD_BITS}"
+            ).alias("word_id"),
+            F.expr(
+                f"shiftleft(1L, CAST(pmod(user_id, {_BITMAP_WORD_BITS})"
+                " AS INT))"
+            ).alias("bit"),
         )
-    return _WORDS_CACHE[key]
+        .groupBy("event_type", "word_id")
+        .agg(F.bit_or("bit").alias("word"))
+        .persist()
+    )
 
 
 @register(

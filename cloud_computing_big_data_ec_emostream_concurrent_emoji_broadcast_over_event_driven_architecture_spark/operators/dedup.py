@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caches import session_memo
 from ..catalog import table
 from ..functions.hashing import (
     BAND_SIZE,
@@ -86,21 +87,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HASHSET_CACHE: dict[tuple[str, str, str], tuple[DataFrame, ...]] = {}
-
-
-def clear_hashset_cache() -> None:
-    """Unpersist and drop every cached dedup intermediate (tests / memory
-    pressure)."""
-    for frames in _HASHSET_CACHE.values():
-        for df in frames:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-    _HASHSET_CACHE.clear()
-
-
+@session_memo("dedup_shingle_hashsets")
 def _hashed_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, hs: array<long>, n) — the distinct md5-hashed 3-word
     shingles of each document as ONE row per doc, persisted.
@@ -115,85 +102,77 @@ def _hashed_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     Docs with fewer than k words (empty shingle set) are excluded — they
     can participate in no pair, and their null minhashes would otherwise
     band together."""
-    # Keyed by applicationId so a cached plan never outlives its
-    # SparkSession (a stale entry would reference a stopped context);
-    # the persisted frame is retained so clear_hashset_cache() can
-    # actually free the blocks.
-    key = (spark.sparkContext.applicationId, sf_dir, "hs")
-    if key not in _HASHSET_CACHE:
-        docs = table(spark, sf_dir, "documents")
-        # Low-SF local files arrive as a single split; fan the expensive
-        # expression work (shingle + md5 per doc) across the cluster. At
-        # real scale the file splits already provide parallelism and this
-        # branch is a no-op — no gratuitous full shuffle of 100 TB.
-        # (inputFiles(), not rdd.getNumPartitions(): the latter forces
-        # physical planning and costs seconds of driver time.)
-        par = spark.sparkContext.defaultParallelism
-        if len(docs.inputFiles()) < par:
-            docs = docs.repartition(par)
-        # sorted at build: set semantics are order-insensitive everywhere
-        # (intersect/min/explode), and the prefix tier's per-query
-        # array_sort becomes a free slice of the cached form
-        hs = F.array_sort(
-            F.array_distinct(
-                F.transform(shingles(tokens(F.col("text"))), md5_long)
-            )
+    docs = table(spark, sf_dir, "documents")
+    # Low-SF local files arrive as a single split; fan the expensive
+    # expression work (shingle + md5 per doc) across the cluster. At
+    # real scale the file splits already provide parallelism and this
+    # branch is a no-op — no gratuitous full shuffle of 100 TB.
+    # (inputFiles(), not rdd.getNumPartitions(): the latter forces
+    # physical planning and costs seconds of driver time.)
+    par = spark.sparkContext.defaultParallelism
+    if len(docs.inputFiles()) < par:
+        docs = docs.repartition(par)
+    # sorted at build: set semantics are order-insensitive everywhere
+    # (intersect/min/explode), and the prefix tier's per-query
+    # array_sort becomes a free slice of the cached form
+    hs = F.array_sort(
+        F.array_distinct(
+            F.transform(shingles(tokens(F.col("text"))), md5_long)
         )
-        # ROUND-10 OPTIMIZATION (guide §2.4/§5 — one materialization, not
-        # two): `base` used to be a SECOND persisted frame whose only job
-        # was (a) evaluating the shingle+md5 expression once and (b)
-        # acting as a projection-collapse barrier — without a barrier
-        # Catalyst inlines `hs` into every downstream expression (16
-        # signature mins would each re-shingle the document; measured
-        # ~16× slower). A Generate node is the same barrier for free:
-        # explode(array(hs)) evaluates the pipeline ONCE per row and
-        # downstream projections reference the generator's output
-        # attribute, which CollapseProject cannot inline (plan proof:
-        # the enriched build contains exactly one md5() per Generate
-        # branch, plans/r10/cache_build_after.txt). The hot-list branch
-        # re-derives `hs` once more instead of reading a cache — at
-        # fixture scale that is cheaper than the cache write it replaces
-        # (build 1.40 s -> 0.93 s min-of-3 at sf0.1), and at 100 TB it
-        # removes a corpus-sized executor cache that was read twice and
-        # never touched again (guide §5: cache only when reuse outweighs
-        # the memory pressure).
-        gen = docs.select("doc_id", F.explode(F.array(hs)).alias("hs"))
-        # Round-11 examined-and-rejected: a `gen.repartition(par,
-        # "doc_id")` ABOVE the derivation makes the hot-list branch and
-        # the enriched branch share one ReusedExchange (derive the
-        # shingle pipeline once instead of twice), but the slim-row
-        # shuffle measured SLOWER than the re-derivation it saves —
-        # steady-state rebuild 0.97-1.11 s -> 1.44 s at sf0.1 (min of 5
-        # warm rebuilds, both directions measured). The two-derivation
-        # form stays; OPTIMIZATION_r11.md records both numbers.
-        sig = minhash_signature(F.col("hs"))
-        # hs_idx: the DF-CAPPED index view of hs — shingles whose corpus
-        # document frequency exceeds JACCARD_DF_CAP removed via one
-        # array_except against the (tiny, broadcast) hot list. Computed
-        # here, at index-build time, so the exact tier's self-join reads
-        # it as a cache column instead of re-deriving the df aggregation
-        # on both sides of the join (measured 3.4× slower that way).
-        hot_arr = (
-            gen.select(F.explode("hs").alias("h"))
-            .groupBy("h")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > JACCARD_DF_CAP)
-            .agg(F.collect_list("h").alias("hot"))
+    )
+    # ROUND-10 OPTIMIZATION (guide §2.4/§5 — one materialization, not
+    # two): `base` used to be a SECOND persisted frame whose only job
+    # was (a) evaluating the shingle+md5 expression once and (b)
+    # acting as a projection-collapse barrier — without a barrier
+    # Catalyst inlines `hs` into every downstream expression (16
+    # signature mins would each re-shingle the document; measured
+    # ~16× slower). A Generate node is the same barrier for free:
+    # explode(array(hs)) evaluates the pipeline ONCE per row and
+    # downstream projections reference the generator's output
+    # attribute, which CollapseProject cannot inline (plan proof:
+    # the enriched build contains exactly one md5() per Generate
+    # branch, plans/r10/cache_build_after.txt). The hot-list branch
+    # re-derives `hs` once more instead of reading a cache — at
+    # fixture scale that is cheaper than the cache write it replaces
+    # (build 1.40 s -> 0.93 s min-of-3 at sf0.1), and at 100 TB it
+    # removes a corpus-sized executor cache that was read twice and
+    # never touched again (guide §5: cache only when reuse outweighs
+    # the memory pressure).
+    gen = docs.select("doc_id", F.explode(F.array(hs)).alias("hs"))
+    # Round-11 examined-and-rejected: a `gen.repartition(par,
+    # "doc_id")` ABOVE the derivation makes the hot-list branch and
+    # the enriched branch share one ReusedExchange (derive the
+    # shingle pipeline once instead of twice), but the slim-row
+    # shuffle measured SLOWER than the re-derivation it saves —
+    # steady-state rebuild 0.97-1.11 s -> 1.44 s at sf0.1 (min of 5
+    # warm rebuilds, both directions measured). The two-derivation
+    # form stays; OPTIMIZATION_r11.md records both numbers.
+    sig = minhash_signature(F.col("hs"))
+    # hs_idx: the DF-CAPPED index view of hs — shingles whose corpus
+    # document frequency exceeds JACCARD_DF_CAP removed via one
+    # array_except against the (tiny, broadcast) hot list. Computed
+    # here, at index-build time, so the exact tier's self-join reads
+    # it as a cache column instead of re-deriving the df aggregation
+    # on both sides of the join (measured 3.4× slower that way).
+    hot_arr = (
+        gen.select(F.explode("hs").alias("h"))
+        .groupBy("h")
+        .agg(F.count("*").alias("df"))
+        .filter(F.col("df") > JACCARD_DF_CAP)
+        .agg(F.collect_list("h").alias("hot"))
+    )
+    return (
+        gen.filter(F.size("hs") > 0)
+        .crossJoin(F.broadcast(hot_arr))
+        .select(
+            "doc_id",
+            "hs",
+            F.size("hs").alias("n"),
+            sig.alias("sig"),
+            F.array_except("hs", "hot").alias("hs_idx"),
         )
-        enriched = (
-            gen.filter(F.size("hs") > 0)
-            .crossJoin(F.broadcast(hot_arr))
-            .select(
-                "doc_id",
-                "hs",
-                F.size("hs").alias("n"),
-                sig.alias("sig"),
-                F.array_except("hs", "hot").alias("hs_idx"),
-            )
-            .persist()
-        )
-        _HASHSET_CACHE[key] = (enriched,)
-    return _HASHSET_CACHE[key][0]
+        .persist()
+    )
 
 
 _HS_CTE = f"""
@@ -670,14 +649,16 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _simhash_pairs_frame(spark, sf_dir)
 
 
-def _simhash_pairs_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+@session_memo("dedup_shingle_hashsets")
+def _simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fingerprints persist through the shared cache: the 44-bit vote fold
-    # is the costliest expression in the module and the self-join below
+    # is the costliest expression in the module and the pair self-join
     # references it from both sides.
-    fp_key = (spark.sparkContext.applicationId, sf_dir, "simhash_fp")
-    if fp_key not in _HASHSET_CACHE:
-        _HASHSET_CACHE[fp_key] = (q_dedup_simhash(spark, sf_dir).persist(),)
-    fp = _HASHSET_CACHE[fp_key][0]
+    return q_dedup_simhash(spark, sf_dir).persist()
+
+
+def _simhash_pairs_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    fp = _simhash_fingerprints(spark, sf_dir)
     chunk_rows = fp.select(
         "doc_id",
         "simhash",
@@ -1282,40 +1263,7 @@ def _tier_recall_oracle() -> str:
     """
 
 
-_PAIR_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_PAIR_CHECKPOINT_RDDS: list[tuple] = []
-
-
-def _pair_checkpoint(df: DataFrame) -> DataFrame:
-    """Record a pair-list checkpoint's RDD id in the DEDUP-OWNED list so
-    :func:`clear_pair_cache` releases handle and blocks together.
-    Routing these through the shared ``caches.track_checkpoint`` list
-    was ordering-fragile: ``release_transients`` alone would free the
-    blocks while ``_PAIR_CACHE`` still held unreadable handles
-    (checkpoints cannot recompute)."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()  # noqa: SLF001
-        _PAIR_CHECKPOINT_RDDS.append(
-            (df.sparkSession.sparkContext, plan.rdd().id())
-        )
-    except Exception:
-        pass
-    return df
-
-
-def clear_pair_cache() -> None:
-    """Drop the memoized tier pair lists AND release their checkpoint
-    blocks (this family owns both, like clear_ivf_cache /
-    clear_rhp_cache — handles and blocks can never go out of sync)."""
-    _PAIR_CACHE.clear()
-    while _PAIR_CHECKPOINT_RDDS:
-        sc, rid = _PAIR_CHECKPOINT_RDDS.pop()
-        try:
-            sc._jsc.sc().unpersistRDD(rid, False)  # noqa: SLF001
-        except Exception:
-            pass
-
-
+@session_memo("dedup_tier_pair_lists")
 def _tier_pair_list(
     spark: SparkSession, sf_dir: str, tier: str
 ) -> DataFrame:
@@ -1328,19 +1276,18 @@ def _tier_pair_list(
     applied to tier RESULTS. Materialization also stops Catalyst from
     replaying the generating pipeline once per plan reference (the
     round-6 10× soak finding). The lists are output-sized (thousands of
-    rows), so holding them for the session costs ~nothing."""
-    key = (spark.sparkContext.applicationId, sf_dir, tier)
-    if key not in _PAIR_CACHE:
-        fn = {
-            "exact": q_dedup_ngram_jaccard,
-            "minhash": q_dedup_minhash,
-        }[tier]
-        _PAIR_CACHE[key] = _pair_checkpoint(
-            fn(spark, sf_dir)
-            .select("doc_id_a", "doc_id_b")
-            .localCheckpoint(eager=True)
-        )
-    return _PAIR_CACHE[key]
+    rows), so holding them for the session costs ~nothing. The family's
+    release frees the checkpoint blocks together with the handles, so
+    a released list can never be read as a dead checkpoint."""
+    fn = {
+        "exact": q_dedup_ngram_jaccard,
+        "minhash": q_dedup_minhash,
+    }[tier]
+    return (
+        fn(spark, sf_dir)
+        .select("doc_id_a", "doc_id_b")
+        .localCheckpoint(eager=True)
+    )
 
 
 @register(
@@ -1566,6 +1513,55 @@ def _band_sensitivity_oracle() -> str:
     """
 
 
+@session_memo("dedup_tier_pair_lists")
+def _band_candidates(
+    spark: SparkSession, sf_dir: str, band_size: int
+) -> DataFrame:
+    """(doc_id_a, doc_id_b) candidates of one banding config, from the
+    shared signature cache, materialized ONCE (eager localCheckpoint):
+    referenced by both the volume count and the recall join, and
+    memoized so repeated invocations (multi-iteration bench loops)
+    reuse one checkpoint instead of accumulating storage per call."""
+    nb = len(MINHASH_AB) // band_size
+    br = _hashed_shingle_sets(spark, sf_dir).select(
+        "doc_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.concat_ws(
+                            "_",
+                            *[
+                                F.element_at(
+                                    "sig", b * band_size + j + 1
+                                ).cast("string")
+                                for j in range(band_size)
+                            ],
+                        ).alias("band_key"),
+                    )
+                    for b in range(nb)
+                ]
+            )
+        ).alias("bk"),
+    ).select("doc_id", "bk.band", "bk.band_key")
+    x, y = br.alias("x"), br.alias("y")
+    return (
+        x.join(
+            y,
+            (F.col("x.band") == F.col("y.band"))
+            & (F.col("x.band_key") == F.col("y.band_key"))
+            & (F.col("x.doc_id") < F.col("y.doc_id")),
+        )
+        .select(
+            F.col("x.doc_id").alias("doc_id_a"),
+            F.col("y.doc_id").alias("doc_id_b"),
+        )
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
 @register(
     "q_minhash_band_sensitivity",
     tags=("dedup", "minhash", "lsh", "diagnostics", "scale"),
@@ -1586,7 +1582,6 @@ def q_minhash_band_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     band-key equi-join (never all-pairs); the exact tier reuses the
     inverted-index join.  All counts are aggregates over pair lists —
     the output is two rows."""
-    hdf = _hashed_shingle_sets(spark, sf_dir)
     # the exact tier from the session memo: it is referenced four times
     # below (n_exact + n_found, per config) and each reference would
     # otherwise replay the whole inverted-index pipeline (the 10x-soak
@@ -1594,62 +1589,8 @@ def q_minhash_band_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one materialization with the recall audit
     exact_pairs = _tier_pair_list(spark, sf_dir, "exact")
 
-    def band_rows(band_size: int) -> DataFrame:
-        nb = len(MINHASH_AB) // band_size
-        return hdf.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.concat_ws(
-                                "_",
-                                *[
-                                    F.element_at(
-                                        "sig", b * band_size + j + 1
-                                    ).cast("string")
-                                    for j in range(band_size)
-                                ],
-                            ).alias("band_key"),
-                        )
-                        for b in range(nb)
-                    ]
-                )
-            ).alias("bk"),
-        ).select("doc_id", "bk.band", "bk.band_key")
-
     def config_row(band_size: int) -> DataFrame:
-        br = band_rows(band_size)
-        x, y = br.alias("x"), br.alias("y")
-        cand = (
-            x.join(
-                y,
-                (F.col("x.band") == F.col("y.band"))
-                & (F.col("x.band_key") == F.col("y.band_key"))
-                & (F.col("x.doc_id") < F.col("y.doc_id")),
-            )
-            .select(
-                F.col("x.doc_id").alias("doc_id_a"),
-                F.col("y.doc_id").alias("doc_id_b"),
-            )
-            .distinct()
-        )
-        # same once-only discipline for the candidate list: referenced
-        # by both the volume count and the recall join — and memoized in
-        # the pair cache so repeated invocations (multi-iteration bench
-        # loops) reuse ONE checkpoint instead of accumulating persisted
-        # storage per call
-        ck = (
-            spark.sparkContext.applicationId,
-            sf_dir,
-            f"band_cand_{band_size}",
-        )
-        if ck not in _PAIR_CACHE:
-            _PAIR_CACHE[ck] = _pair_checkpoint(
-                cand.localCheckpoint(eager=True)
-            )
-        cand = _PAIR_CACHE[ck]
+        cand = _band_candidates(spark, sf_dir, band_size)
         n_cand = cand.agg(F.count("*").alias("n_candidates"))
         n_found = cand.join(
             exact_pairs, ["doc_id_a", "doc_id_b"]

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..caches import session_memo
 from ..catalog import table
 from ..plans.registry import register
 
@@ -40,29 +41,12 @@ def _activity_cells(ev: DataFrame) -> DataFrame:
     ).distinct()
 
 
-_CELLS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_cells_cache() -> None:
-    """Unpersist + drop all memoized activity-cell tables."""
-    for df in _CELLS_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _CELLS_CACHE.clear()
-
-
+@session_memo("growth_activity_cells")
 def _cached_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized persisted activity cells (one dedup of the fact
     table per session+fixture, shared by every growth operator — the
     same idiom as the similarity module's session index)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CELLS_CACHE:
-        _CELLS_CACHE[key] = _activity_cells(
-            table(spark, sf_dir, "events")
-        ).persist()
-    return _CELLS_CACHE[key]
+    return _activity_cells(table(spark, sf_dir, "events")).persist()
 
 
 @register(

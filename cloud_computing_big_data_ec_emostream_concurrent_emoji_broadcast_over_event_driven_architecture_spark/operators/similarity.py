@@ -22,9 +22,12 @@ q_embedding_lsh_sketch).
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caches import session_memo
 from ..catalog import table
 from ..functions.vectors import (
     as_double,
@@ -230,18 +233,7 @@ def _rhp_bit_exprs(
     return bits
 
 
-_RHP_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_rhp_cache() -> None:
-    for df in _RHP_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _RHP_CACHE.clear()
-
-
+@session_memo("rhp_sketches")
 def _rhp_bits_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, bits array<int>, sbits array<int>) — ONE persisted
     decimal-fold pass over the corpus covering every hyperplane ANY
@@ -261,42 +253,36 @@ def _rhp_bits_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay. Round-robined first (_spread): a small single-file fixture
     otherwise arrives as 1-3 scan splits and the fold serializes on as
     many cores; persisted, so the exchange is paid once."""
-    key = (spark.sparkContext.applicationId, sf_dir, "bits")
-    if key not in _RHP_CACHE:
-        import os
+    import os
 
-        store_root = os.environ.get("SPARK_GRAFT_RHP_FRAME_DIR")
-        if store_root:
-            # round-9 incremental path: maintain the per-fixture on-disk
-            # store (folds run only on vectors it doesn't hold yet) and
-            # serve the session from its dial-sliced prefix — bit-equal
-            # to the from-scratch fold below (pinned).
-            store = os.path.join(
-                store_root,
-                sf_dir.strip("/").replace("/", "__") + "_rhp_frame",
-            )
-            rhp_frame_update(spark, sf_dir, store)
-            _RHP_CACHE[key] = rhp_frame_load(
-                spark, sf_dir, store
-            ).persist()
-            return _RHP_CACHE[key]
-        emb = table(spark, sf_dir, "embeddings")
-        n = emb.count()
-        bb = rhp_band_bits(n)
-        ss = rhp_shard_bits(n)
-        emb = _spread(emb.select("vec_id", "embedding"))
-        v = as_double(F.col("embedding"))
-        nbits = max(RHP_BITS, RHP_BANDS * bb)
-        bits = F.array(*_rhp_bit_exprs(v, nbits))
-        sbits = (
-            F.array(*_rhp_bit_exprs(v, ss, start=RHP_SHARD_PLANE_BASE))
-            if ss
-            else F.array().cast("array<int>")
+    store_root = os.environ.get("SPARK_GRAFT_RHP_FRAME_DIR")
+    if store_root:
+        # round-9 incremental path: maintain the per-fixture on-disk
+        # store (folds run only on vectors it doesn't hold yet) and
+        # serve the session from its dial-sliced prefix — bit-equal
+        # to the from-scratch fold below (pinned).
+        store = os.path.join(
+            store_root,
+            sf_dir.strip("/").replace("/", "__") + "_rhp_frame",
         )
-        _RHP_CACHE[key] = emb.select(
-            "vec_id", bits.alias("bits"), sbits.alias("sbits")
-        ).persist()
-    return _RHP_CACHE[key]
+        rhp_frame_update(spark, sf_dir, store)
+        return rhp_frame_load(spark, sf_dir, store).persist()
+    emb = table(spark, sf_dir, "embeddings")
+    n = emb.count()
+    bb = rhp_band_bits(n)
+    ss = rhp_shard_bits(n)
+    emb = _spread(emb.select("vec_id", "embedding"))
+    v = as_double(F.col("embedding"))
+    nbits = max(RHP_BITS, RHP_BANDS * bb)
+    bits = F.array(*_rhp_bit_exprs(v, nbits))
+    sbits = (
+        F.array(*_rhp_bit_exprs(v, ss, start=RHP_SHARD_PLANE_BASE))
+        if ss
+        else F.array().cast("array<int>")
+    )
+    return emb.select(
+        "vec_id", bits.alias("bits"), sbits.alias("sbits")
+    ).persist()
 
 
 # --- incremental bit-frame maintenance (round 9, planes round 10) -----------
@@ -463,6 +449,7 @@ def _pack_codes(bb: int) -> Column:
     )
 
 
+@session_memo("rhp_sketches")
 def _rhp_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, sketch long, codes array<int>[RHP_BANDS]) — persisted:
     packed from the shared bit frame (:func:`_rhp_bits_frame`), so the
@@ -476,21 +463,17 @@ def _rhp_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a stable per-vector fingerprint (q_embedding_lsh_sketch pins
     it), so band codes draw on planes [0, bands·width) while the sketch
     always packs planes [0, 48)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _RHP_CACHE:
-        emb = table(spark, sf_dir, "embeddings")
-        bb = rhp_band_bits(emb.count())
-        frame = _rhp_bits_frame(spark, sf_dir)
-        sketch = F.element_at("bits", 1).cast("long")
-        for j in range(1, RHP_BITS):
-            sketch = sketch + F.element_at("bits", j + 1).cast(
-                "long"
-            ) * F.lit(1 << j)
-        df = frame.select(
-            "vec_id", sketch.alias("sketch"), _pack_codes(bb).alias("codes")
-        ).persist()
-        _RHP_CACHE[key] = df
-    return _RHP_CACHE[key]
+    emb = table(spark, sf_dir, "embeddings")
+    bb = rhp_band_bits(emb.count())
+    frame = _rhp_bits_frame(spark, sf_dir)
+    sketch = F.element_at("bits", 1).cast("long")
+    for j in range(1, RHP_BITS):
+        sketch = sketch + F.element_at("bits", j + 1).cast(
+            "long"
+        ) * F.lit(1 << j)
+    return frame.select(
+        "vec_id", sketch.alias("sketch"), _pack_codes(bb).alias("codes")
+    ).persist()
 
 
 def rhp_band_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -658,19 +641,6 @@ def q_similarity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_CACHE: dict[tuple[str, ...], DataFrame] = {}
-
-
-def clear_ivf_cache() -> None:
-    for df in _IVF_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _IVF_CACHE.clear()
-    _APPEND_META.clear()
-
-
 KMEANS_ITERS = 2
 
 
@@ -799,16 +769,15 @@ def trained_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cents
 
 
+@session_memo("ivf_assignments")
 def _ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained centroids, PERSISTED per (session, sf_dir): K rows, but
     their lineage is {KMEANS_ITERS} passes over the corpus — training
     runs once per session (the index-build job), never per query."""
-    key = (spark.sparkContext.applicationId, sf_dir, "cents")
-    if key not in _IVF_CACHE:
-        _IVF_CACHE[key] = trained_centroids(spark, sf_dir).persist()
-    return _IVF_CACHE[key]
+    return trained_centroids(spark, sf_dir).persist()
 
 
+@session_memo("ivf_assignments")
 def _ivf_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, embedding, cent_id) — every vector assigned to its
     nearest centroid bucket, PERSISTED per (session, sf_dir): the IVF
@@ -817,31 +786,27 @@ def _ivf_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale this is the index-build job whose output would live as a
     bucketed table; rebuilding it per query — the previous shape — is
     what the 10× scaling run flagged."""
-    key = (spark.sparkContext.applicationId, sf_dir, "assigned")
-    if key not in _IVF_CACHE:
-        emb = table(spark, sf_dir, "embeddings")
-        cents = _ivf_centroids(spark, sf_dir)
-        prepped = _spread(
-            emb.select(
-                "vec_id",
-                "embedding",
-                as_double(F.col("embedding")).alias("v"),
-                norm(as_double(F.col("embedding"))).alias("nv"),
-            )
+    emb = table(spark, sf_dir, "embeddings")
+    cents = _ivf_centroids(spark, sf_dir)
+    prepped = _spread(
+        emb.select(
+            "vec_id",
+            "embedding",
+            as_double(F.col("embedding")).alias("v"),
+            norm(as_double(F.col("embedding"))).alias("nv"),
         )
-        assigned = (
-            prepped.crossJoin(F.broadcast(_cent_array(cents)))
-            .select(
-                "vec_id",
-                "embedding",
-                _argmin_cent(
-                    F.col("v"), F.col("nv"), F.col("cs")
-                ).alias("cent_id"),
-            )
-            .persist()
+    )
+    return (
+        prepped.crossJoin(F.broadcast(_cent_array(cents)))
+        .select(
+            "vec_id",
+            "embedding",
+            _argmin_cent(
+                F.col("v"), F.col("nv"), F.col("cs")
+            ).alias("cent_id"),
         )
-        _IVF_CACHE[key] = assigned
-    return _IVF_CACHE[key]
+        .persist()
+    )
 
 
 def _kmeans_assign_sql(cents_cte: str, src: str = "ev") -> str:
@@ -1183,6 +1148,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_memo("rhp_sketches")
 def _rhp_sharded_band_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, shard, band, code) LSH bucket rows with the re-shard
     dial applied: shard = packed sign bits of the dedicated shard planes
@@ -1192,35 +1158,31 @@ def _rhp_sharded_band_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     item: this used to rebuild its own full sign fold, 98 s vs 22 s at
     the 10× soak), and persisted in the same cache family / release
     path."""
-    key = (spark.sparkContext.applicationId, sf_dir, "sharded")
-    if key not in _RHP_CACHE:
-        n = table(spark, sf_dir, "embeddings").count()
-        ss = rhp_shard_bits(n)
-        bb = rhp_band_bits(n, shard_bits=ss)
-        frame = _rhp_bits_frame(spark, sf_dir)
-        if ss == 0:
-            shard = F.lit(0)
-        else:
-            shard = sum(
-                (
-                    F.element_at("sbits", r + 1) * F.lit(1 << r)
-                    for r in range(1, ss)
-                ),
-                start=F.element_at("sbits", 1),
-            )
-        df = (
-            frame.select(
-                "vec_id",
-                shard.cast("int").alias("shard"),
-                _pack_codes(bb).alias("codes"),
-            )
-            .select(
-                "vec_id", "shard", F.posexplode("codes").alias("band", "code")
-            )
-            .persist()
+    n = table(spark, sf_dir, "embeddings").count()
+    ss = rhp_shard_bits(n)
+    bb = rhp_band_bits(n, shard_bits=ss)
+    frame = _rhp_bits_frame(spark, sf_dir)
+    if ss == 0:
+        shard = F.lit(0)
+    else:
+        shard = sum(
+            (
+                F.element_at("sbits", r + 1) * F.lit(1 << r)
+                for r in range(1, ss)
+            ),
+            start=F.element_at("sbits", 1),
         )
-        _RHP_CACHE[key] = df
-    return _RHP_CACHE[key]
+    return (
+        frame.select(
+            "vec_id",
+            shard.cast("int").alias("shard"),
+            _pack_codes(bb).alias("codes"),
+        )
+        .select(
+            "vec_id", "shard", F.posexplode("codes").alias("band", "code")
+        )
+        .persist()
+    )
 
 
 # sharded-oracle pipeline: same planes/decimal folds as _RHP_CTE, but
@@ -1994,6 +1956,7 @@ def _pq_cb_recenter(assigned: DataFrame) -> DataFrame:
     )
 
 
+@session_memo("ivf_assignments")
 def _pq_trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE-row frame of the trained codebook, pivoted to columns
     ``c{s}_{k}`` (each a PQ_SUB-dim array<double>) — the broadcast
@@ -2001,32 +1964,29 @@ def _pq_trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     row. Trained on the same bounded sample as the two-level IVF
     (vec_id < min(N, IVF2_SAMPLE)), {KMEANS_ITERS} Lloyd iterations,
     session-persisted."""
-    key = (spark.sparkContext.applicationId, sf_dir, "pqcb")
-    if key not in _IVF_CACHE:
-        emb = table(spark, sf_dir, "embeddings").select(
-            "vec_id", as_double(F.col("embedding")).alias("v")
-        )
-        n = emb.count()
-        samp = emb.filter(F.col("vec_id") < min(n, IVF2_SAMPLE))
-        sv_rows = _spread(_pq_subvector_rows(samp))
-        cb = sv_rows.filter(F.col("vec_id") < PQ_K).select(
-            "s", F.col("vec_id").cast("int").alias("k"), F.col("sv").alias("cw")
-        )
-        for _ in range(KMEANS_ITERS):
-            cb = _pq_cb_recenter(_pq_cb_assign(sv_rows, cb))
-        piv = cb.groupBy().agg(
-            *[
-                F.max(
-                    F.when(
-                        (F.col("s") == s) & (F.col("k") == k), F.col("cw")
-                    )
-                ).alias(f"c{s}_{k}")
-                for s in range(PQ_M)
-                for k in range(PQ_K)
-            ]
-        )
-        _IVF_CACHE[key] = piv.persist()
-    return _IVF_CACHE[key]
+    emb = table(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double(F.col("embedding")).alias("v")
+    )
+    n = emb.count()
+    samp = emb.filter(F.col("vec_id") < min(n, IVF2_SAMPLE))
+    sv_rows = _spread(_pq_subvector_rows(samp))
+    cb = sv_rows.filter(F.col("vec_id") < PQ_K).select(
+        "s", F.col("vec_id").cast("int").alias("k"), F.col("sv").alias("cw")
+    )
+    for _ in range(KMEANS_ITERS):
+        cb = _pq_cb_recenter(_pq_cb_assign(sv_rows, cb))
+    piv = cb.groupBy().agg(
+        *[
+            F.max(
+                F.when(
+                    (F.col("s") == s) & (F.col("k") == k), F.col("cw")
+                )
+            ).alias(f"c{s}_{k}")
+            for s in range(PQ_M)
+            for k in range(PQ_K)
+        ]
+    )
+    return piv.persist()
 
 
 def _pq_sub_dist_sql(a_sv: str, b_cw: str) -> str:
@@ -3124,10 +3084,13 @@ def _isqrt4_sql(k_sql: str) -> str:
     )
 
 
-def _twolevel_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, v, cent_id, shard) under the two-level sample-trained
-    build, session-persisted — THE dynamic-K index every scaled rider
-    shares. ``shard`` is the re-shard tier's OCCUPANCY-ADAPTIVE
+@session_memo("ivf_assignments")
+def _twolevel_index(spark: SparkSession, sf_dir: str) -> dict:
+    """The two-level sample-trained build, session-persisted — THE
+    dynamic-K index every scaled rider shares: ``assigned`` (vec_id, v,
+    cent_id, shard), the trained fine centroids ``cents`` (cent_id, cv)
+    and the persisted intermediates ``pre``/``pcm`` (None below the
+    shard gate). ``shard`` is the re-shard tier's OCCUPANCY-ADAPTIVE
     hash-plane split: each cell's own width (:func:`_ivf2_pc_col` over
     its pre-split occupancy, gated inert below the K cap by
     :func:`ivf2_shard_bits`), prefix-masked from one full-width sign
@@ -3135,107 +3098,107 @@ def _twolevel_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cent_id, shard)."""
     import math
 
-    key = (spark.sparkContext.applicationId, sf_dir, "twolevel")
-    if key not in _IVF_CACHE:
-        emb = table(spark, sf_dir, "embeddings").select(
-            "vec_id", as_double(F.col("embedding")).alias("v")
+    emb = table(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double(F.col("embedding")).alias("v")
+    )
+    n = emb.count()
+    k = max(8, min(n // SEMDEDUP_TARGET_CLUSTER, IVF2_K_CAP))
+    samp_n = min(n, IVF2_SAMPLE)
+    k2 = max(4, math.isqrt(k))
+    sb = ivf2_shard_bits(n)
+    samp = emb.filter(F.col("vec_id") < samp_n)
+    cents = samp.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
+    )
+    for _ in range(KMEANS_ITERS):
+        cents = _kmeans_recenter(_kmeans_assign(samp, cents))
+    coarse_arr = _cent_array(cents.filter(F.col("cent_id") < k2))
+    # route each fine centroid to its nearest coarse router
+    routed = (
+        cents.withColumn("ncv", norm(F.col("cv")))
+        .crossJoin(F.broadcast(coarse_arr))
+        .select(
+            "cent_id",
+            "cv",
+            _argmin_cent(
+                F.col("cv"), F.col("ncv"), F.col("cs")
+            ).alias("coarse_id"),
         )
-        n = emb.count()
-        k = max(8, min(n // SEMDEDUP_TARGET_CLUSTER, IVF2_K_CAP))
-        samp_n = min(n, IVF2_SAMPLE)
-        k2 = max(4, math.isqrt(k))
-        sb = ivf2_shard_bits(n)
-        samp = emb.filter(F.col("vec_id") < samp_n)
-        cents = samp.filter(F.col("vec_id") < k).select(
-            F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
-        )
-        for _ in range(KMEANS_ITERS):
-            cents = _kmeans_recenter(_kmeans_assign(samp, cents))
-        coarse_arr = _cent_array(cents.filter(F.col("cent_id") < k2))
-        # route each fine centroid to its nearest coarse router
-        routed = (
-            cents.withColumn("ncv", norm(F.col("cv")))
-            .crossJoin(F.broadcast(coarse_arr))
-            .select(
-                "cent_id",
-                "cv",
-                _argmin_cent(
-                    F.col("cv"), F.col("ncv"), F.col("cs")
-                ).alias("coarse_id"),
-            )
-        )
-        # per-router fine-centroid struct arrays (cent_id-ascending, the
-        # _argmin_cent tie-break order)
-        groups = routed.groupBy("coarse_id").agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        "cent_id", "cv", norm(F.col("cv")).alias("nc")
-                    )
+    )
+    # per-router fine-centroid struct arrays (cent_id-ascending, the
+    # _argmin_cent tie-break order)
+    groups = routed.groupBy("coarse_id").agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct(
+                    "cent_id", "cv", norm(F.col("cv")).alias("nc")
                 )
-            ).alias("fs")
-        )
-        va = (
-            _spread(emb.select("vec_id", "v", norm(F.col("v")).alias("nv")))
-            .crossJoin(F.broadcast(coarse_arr))
-            .select(
-                "vec_id",
-                "v",
-                "nv",
-                _argmin_cent(
-                    F.col("v"), F.col("nv"), F.col("cs")
-                ).alias("coarse_id"),
             )
-        )
-        pre = va.join(F.broadcast(groups), "coarse_id").select(
+        ).alias("fs")
+    )
+    va = (
+        _spread(emb.select("vec_id", "v", norm(F.col("v")).alias("nv")))
+        .crossJoin(F.broadcast(coarse_arr))
+        .select(
             "vec_id",
             "v",
-            _argmin_cent(F.col("v"), F.col("nv"), F.col("fs")).alias(
-                "cent_id"
-            ),
+            "nv",
+            _argmin_cent(
+                F.col("v"), F.col("nv"), F.col("cs")
+            ).alias("coarse_id"),
         )
-        if sb == 0:
-            # below the engagement gate: no cell splits, shard constant
-            # 0 — bit-identical to every pre-round-9 fixture result
-            assigned = pre.withColumn("shard", F.lit(0).cast("int"))
-        else:
-            # occupancy-adaptive per-cell split: occupancies of the
-            # preliminary assignment pick each cell's width, one
-            # full-width sign code per vector is prefix-masked to its
-            # cell's width. pcm is K rows (broadcast); the wmax action
-            # is a K-row aggregate.
-            pre = pre.persist()
-            _IVF_CACHE[key + ("pre",)] = pre
-            pcm = (
-                pre.groupBy("cent_id")
-                .agg(F.count("*").alias("occ"))
-                .select("cent_id", _ivf2_pc_col(F.col("occ")).alias("pc"))
-                .persist()
-            )
-            _IVF_CACHE[key + ("pcm",)] = pcm
-            wmax = pcm.agg(F.max("pc")).first()[0]
-            assigned = pre.join(F.broadcast(pcm), "cent_id").select(
-                "vec_id",
-                "v",
-                "cent_id",
-                _ivf2_masked_shard_col(
-                    F.col("v"), F.col("pc"), wmax
-                ).alias("shard"),
-            )
-        # stash the trained fine centroids alongside the assignment —
-        # K rows, reused by the drift audit's sim-to-centroid join
-        _IVF_CACHE[key + ("cents",)] = cents.persist()
-        _IVF_CACHE[key] = assigned.persist()
-    return _IVF_CACHE[key]
+    )
+    pre = va.join(F.broadcast(groups), "coarse_id").select(
+        "vec_id",
+        "v",
+        _argmin_cent(F.col("v"), F.col("nv"), F.col("fs")).alias(
+            "cent_id"
+        ),
+    )
+    pcm = None
+    if sb == 0:
+        # below the engagement gate: no cell splits, shard constant
+        # 0 — bit-identical to every pre-round-9 fixture result
+        assigned = pre.withColumn("shard", F.lit(0).cast("int"))
+    else:
+        # occupancy-adaptive per-cell split: occupancies of the
+        # preliminary assignment pick each cell's width, one
+        # full-width sign code per vector is prefix-masked to its
+        # cell's width. pcm is K rows (broadcast); the wmax action
+        # is a K-row aggregate.
+        pre = pre.persist()
+        pcm = (
+            pre.groupBy("cent_id")
+            .agg(F.count("*").alias("occ"))
+            .select("cent_id", _ivf2_pc_col(F.col("occ")).alias("pc"))
+            .persist()
+        )
+        wmax = pcm.agg(F.max("pc")).first()[0]
+        assigned = pre.join(F.broadcast(pcm), "cent_id").select(
+            "vec_id",
+            "v",
+            "cent_id",
+            _ivf2_masked_shard_col(
+                F.col("v"), F.col("pc"), wmax
+            ).alias("shard"),
+        )
+    # the trained fine centroids ride alongside the assignment — K
+    # rows, reused by the drift audit's sim-to-centroid join. Persisted
+    # before the assignment, whose cached plan then reads them.
+    cents = cents.persist()
+    return {
+        "assigned": assigned.persist(), "cents": cents, "pre": pre, "pcm": pcm
+    }
+
+
+def _twolevel_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v, cent_id, shard) of the session's two-level index."""
+    return _twolevel_index(spark, sf_dir)["assigned"]
 
 
 def _twolevel_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(cent_id, cv) of the session's two-level index (training runs via
-    :func:`_twolevel_assignment` if not already built)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "twolevel", "cents")
-    if key not in _IVF_CACHE:
-        _twolevel_assignment(spark, sf_dir)
-    return _IVF_CACHE[key]
+    """(cent_id, cv) of the session's two-level index."""
+    return _twolevel_index(spark, sf_dir)["cents"]
 
 
 def _twolevel_train_ctes(prefix: str = "") -> list[str]:
@@ -4286,103 +4249,94 @@ def q_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_APPEND_META: dict[tuple[str, ...], tuple[int, int]] = {}
+class _AppendIndex(NamedTuple):
+    emb: DataFrame
+    t: int
+    wmax: int
+    cents: DataFrame
+    coarse_arr: DataFrame
+    groups: DataFrame
+    pcm: DataFrame | None
+    bpre: DataFrame
 
 
-def _append_index(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, int, int, DataFrame, DataFrame, DataFrame]:
+@session_memo("ivf_assignments")
+def _append_index(spark: SparkSession, sf_dir: str) -> _AppendIndex:
     """The FROZEN base-trained index parts shared by the append-path
-    riders: (emb, t, wmax, cents, coarse_arr, groups, pcm) — emb the
-    double-cast corpus, t the base/delta split point, wmax/pcm the
-    frozen occupancy-adaptive split widths (fold width + per-cell map,
-    derived from the BASE slice's routed occupancies when the global
-    gate :func:`ivf2_shard_bits` of the base count is ≥ 1; 0/None
-    below it), cents the base-trained fine centroids,
-    coarse_arr/groups the router broadcast payloads. Trained parts persist per (session, sf_dir) in
-    ``_IVF_CACHE`` (round-8 ADVICE: ``q_ivf_index_append``,
+    riders: emb the double-cast corpus, t the base/delta split point,
+    wmax/pcm the frozen occupancy-adaptive split widths (fold width +
+    per-cell map, derived from the BASE slice's routed occupancies when
+    the global gate :func:`ivf2_shard_bits` of the base count is ≥ 1;
+    0/None below it), cents the base-trained fine centroids,
+    coarse_arr/groups the router broadcast payloads, bpre the base
+    slice's persisted pre-assignment. Trained parts persist per
+    (session, sf_dir) (round-8 ADVICE: ``q_ivf_index_append``,
     ``q_ivf_drift_audit`` and ``q_dedup_ingest_incremental`` used to
     each retrain the same frozen index in one session — now they share
-    one training, mirroring :func:`_twolevel_assignment`)."""
+    one training, mirroring :func:`_twolevel_index`)."""
     import math
 
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
-    key = (spark.sparkContext.applicationId, sf_dir, "append")
-    if key + ("cents",) not in _IVF_CACHE:
-        n = emb.count()
-        t = (IVF_APPEND_NUM * n) // IVF_APPEND_DEN
-        k = max(8, min(t // SEMDEDUP_TARGET_CLUSTER, IVF2_K_CAP))
-        samp_n = min(t, IVF2_SAMPLE)
-        k2 = max(4, math.isqrt(k))
-        samp = emb.filter(F.col("vec_id") < samp_n)
-        cents = emb.filter(F.col("vec_id") < k).select(
-            F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
-        )
-        for _ in range(KMEANS_ITERS):
-            cents = _kmeans_recenter(_kmeans_assign(samp, cents))
-        coarse_arr = _cent_array(cents.filter(F.col("cent_id") < k2))
-        routed = (
-            cents.withColumn("ncv", norm(F.col("cv")))
-            .crossJoin(F.broadcast(coarse_arr))
-            .select(
-                "cent_id",
-                "cv",
-                _argmin_cent(
-                    F.col("cv"), F.col("ncv"), F.col("cs")
-                ).alias("coarse_id"),
-            )
-        )
-        groups = routed.groupBy("coarse_id").agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct("cent_id", "cv", norm(F.col("cv")).alias("nc"))
-                )
-            ).alias("fs")
-        )
-        _IVF_CACHE[key + ("cents",)] = cents.persist()
-        _IVF_CACHE[key + ("coarse",)] = coarse_arr.persist()
-        _IVF_CACHE[key + ("groups",)] = groups.persist()
-        sb = ivf2_shard_bits(t)
-        # FROZEN per-cell split widths (round 9, second cut): the base
-        # slice routes through the frozen router once; its per-cell
-        # occupancies pick each cell's split width — stored with the
-        # index like FAISS's inverted-list layout, and NEVER re-derived
-        # on append (the delta reuses yesterday's widths; drift/stats
-        # audits say when to rebuild). Below the gate (sb = 0) the map
-        # is empty and every shard is 0.
-        bpre = _route_pre(
-            emb.filter(F.col("vec_id") < t),
-            _IVF_CACHE[key + ("coarse",)],
-            _IVF_CACHE[key + ("groups",)],
-        ).persist()
-        _IVF_CACHE[key + ("bpre",)] = bpre
-        if sb == 0:
-            pcm = None
-            wmax = 0
-        else:
-            pcm = (
-                bpre.groupBy("cent_id")
-                .agg(F.count("*").alias("occ"))
-                .select(
-                    "cent_id", _ivf2_pc_col(F.col("occ")).alias("pc")
-                )
-                .persist()
-            )
-            _IVF_CACHE[key + ("pcm",)] = pcm
-            wmax = pcm.agg(F.max("pc")).first()[0]
-        _APPEND_META[key] = (t, wmax)
-    t, wmax = _APPEND_META[key]
-    return (
-        emb,
-        t,
-        wmax,
-        _IVF_CACHE[key + ("cents",)],
-        _IVF_CACHE[key + ("coarse",)],
-        _IVF_CACHE[key + ("groups",)],
-        _IVF_CACHE.get(key + ("pcm",)),
+    n = emb.count()
+    t = (IVF_APPEND_NUM * n) // IVF_APPEND_DEN
+    k = max(8, min(t // SEMDEDUP_TARGET_CLUSTER, IVF2_K_CAP))
+    samp_n = min(t, IVF2_SAMPLE)
+    k2 = max(4, math.isqrt(k))
+    samp = emb.filter(F.col("vec_id") < samp_n)
+    cents = emb.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
     )
+    for _ in range(KMEANS_ITERS):
+        cents = _kmeans_recenter(_kmeans_assign(samp, cents))
+    coarse_arr = _cent_array(cents.filter(F.col("cent_id") < k2))
+    routed = (
+        cents.withColumn("ncv", norm(F.col("cv")))
+        .crossJoin(F.broadcast(coarse_arr))
+        .select(
+            "cent_id",
+            "cv",
+            _argmin_cent(
+                F.col("cv"), F.col("ncv"), F.col("cs")
+            ).alias("coarse_id"),
+        )
+    )
+    groups = routed.groupBy("coarse_id").agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct("cent_id", "cv", norm(F.col("cv")).alias("nc"))
+            )
+        ).alias("fs")
+    )
+    cents = cents.persist()
+    coarse_arr = coarse_arr.persist()
+    groups = groups.persist()
+    sb = ivf2_shard_bits(t)
+    # FROZEN per-cell split widths (round 9, second cut): the base
+    # slice routes through the frozen router once; its per-cell
+    # occupancies pick each cell's split width — stored with the
+    # index like FAISS's inverted-list layout, and NEVER re-derived
+    # on append (the delta reuses yesterday's widths; drift/stats
+    # audits say when to rebuild). Below the gate (sb = 0) the map
+    # is empty and every shard is 0.
+    bpre = _route_pre(
+        emb.filter(F.col("vec_id") < t), coarse_arr, groups
+    ).persist()
+    if sb == 0:
+        pcm = None
+        wmax = 0
+    else:
+        pcm = (
+            bpre.groupBy("cent_id")
+            .agg(F.count("*").alias("occ"))
+            .select(
+                "cent_id", _ivf2_pc_col(F.col("occ")).alias("pc")
+            )
+            .persist()
+        )
+        wmax = pcm.agg(F.max("pc")).first()[0]
+    return _AppendIndex(emb, t, wmax, cents, coarse_arr, groups, pcm, bpre)
 
 
 def _route_pre(
@@ -4444,45 +4398,40 @@ def _route_assign(
     return _mask_shard(_route_pre(df, coarse_arr, groups), pcm, wmax)
 
 
+@session_memo("ivf_assignments")
 def _append_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, v, cent_id, shard, sim) of the delta slice under the
     FROZEN base-trained two-level index (see :func:`q_ivf_index_append`)
     — ``sim`` is the RAW cosine to the chosen centroid (riders round).
     Persisted per (session, sf_dir): the append riders (index append,
     drift audit, dedup-at-ingest) share one routing pass."""
-    key = (spark.sparkContext.applicationId, sf_dir, "append", "delta")
-    if key not in _IVF_CACHE:
-        emb, t, wmax, cents, coarse_arr, groups, pcm = _append_index(
-            spark, sf_dir
-        )
-        assigned = _route_assign(
-            emb.filter(F.col("vec_id") >= t), coarse_arr, groups, pcm, wmax
-        )
-        # the chosen centroid's cosine, recomputed via the same dot/norm
-        # expressions the fold ranked with (bit-identical by determinism)
-        _IVF_CACHE[key] = assigned.join(F.broadcast(cents), "cent_id").select(
-            "vec_id",
-            "v",
-            "cent_id",
-            "shard",
-            cosine(F.col("v"), F.col("cv")).alias("sim"),
-        ).persist()
-    return _IVF_CACHE[key]
+    ix = _append_index(spark, sf_dir)
+    assigned = _route_assign(
+        ix.emb.filter(F.col("vec_id") >= ix.t),
+        ix.coarse_arr,
+        ix.groups,
+        ix.pcm,
+        ix.wmax,
+    )
+    # the chosen centroid's cosine, recomputed via the same dot/norm
+    # expressions the fold ranked with (bit-identical by determinism)
+    return assigned.join(F.broadcast(ix.cents), "cent_id").select(
+        "vec_id",
+        "v",
+        "cent_id",
+        "shard",
+        cosine(F.col("v"), F.col("cv")).alias("sim"),
+    ).persist()
 
 
+@session_memo("ivf_assignments")
 def _append_base_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, v, cent_id, shard) of the BASE slice through the same
     frozen router — how its posting lists were stored at its own ingest
     time; the pre-assignment is the SAME persisted frame the width map
     was frozen from."""
-    key = (spark.sparkContext.applicationId, sf_dir, "append", "base")
-    if key not in _IVF_CACHE:
-        _, t, wmax, _, _, _, pcm = _append_index(spark, sf_dir)
-        akey = (spark.sparkContext.applicationId, sf_dir, "append")
-        _IVF_CACHE[key] = _mask_shard(
-            _IVF_CACHE[akey + ("bpre",)], pcm, wmax
-        ).persist()
-    return _IVF_CACHE[key]
+    ix = _append_index(spark, sf_dir)
+    return _mask_shard(ix.bpre, ix.pcm, ix.wmax).persist()
 
 
 DRIFT_EPS = 0.01  # a delta vector "drifted" if retrain fits it this much better
@@ -5054,13 +5003,13 @@ def frozen_router_parts(
     against the standing corpus through the frozen index (the public
     face of the session-persisted append-index parts). ``pcm``/``wmax``
     are the frozen per-cell split widths (None/0 below the gate)."""
-    _, _, wmax, _, coarse_arr, groups, pcm = _append_index(spark, sf_dir)
+    ix = _append_index(spark, sf_dir)
     return (
         _append_base_assignment(spark, sf_dir),
-        coarse_arr,
-        groups,
-        pcm,
-        wmax,
+        ix.coarse_arr,
+        ix.groups,
+        ix.pcm,
+        ix.wmax,
     )
 
 
@@ -5192,64 +5141,60 @@ def _residual_list_sql(v: str, c: str, cast_v: bool = False) -> str:
     return "[" + ", ".join(el(i) for i in range(1, PCA_DIM + 1)) + "]"
 
 
+@session_memo("ivf_assignments")
 def _pq_residual_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cent_id, shard, v, cv, rv) — the corpus under the
     session's two-level index with each vector's residual to its OWN
     fine centroid; session-persisted (codebook training, serving, and
     the audit all read it)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "pqres")
-    if key not in _IVF_CACHE:
-        assigned = _twolevel_assignment(spark, sf_dir)
-        cents = _twolevel_centroids(spark, sf_dir)
-        _IVF_CACHE[key] = (
-            assigned.join(F.broadcast(cents), "cent_id")
-            .select(
-                "vec_id",
-                "cent_id",
-                "shard",
-                "v",
-                "cv",
-                F.zip_with(
-                    "v", "cv", lambda x, y: x - y
-                ).alias("rv"),
-            )
-            .persist()
+    assigned = _twolevel_assignment(spark, sf_dir)
+    cents = _twolevel_centroids(spark, sf_dir)
+    return (
+        assigned.join(F.broadcast(cents), "cent_id")
+        .select(
+            "vec_id",
+            "cent_id",
+            "shard",
+            "v",
+            "cv",
+            F.zip_with(
+                "v", "cv", lambda x, y: x - y
+            ).alias("rv"),
         )
-    return _IVF_CACHE[key]
+        .persist()
+    )
 
 
+@session_memo("ivf_assignments")
 def _pq_residual_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE-row pivoted codebook (c{s}_{k} columns) trained per subspace
     on the SAMPLE'S RESIDUALS — the same bounded-sample Lloyd as
     :func:`_pq_trained_codebook`, run on r = v − centroid(v) rows."""
-    key = (spark.sparkContext.applicationId, sf_dir, "pqrcb")
-    if key not in _IVF_CACHE:
-        res = _pq_residual_frame(spark, sf_dir)
-        n = table(spark, sf_dir, "embeddings").count()
-        samp = res.filter(F.col("vec_id") < min(n, IVF2_SAMPLE)).select(
-            "vec_id", F.col("rv").alias("v")
-        )
-        sv_rows = _spread(_pq_subvector_rows(samp))
-        cb = sv_rows.filter(F.col("vec_id") < PQ_K).select(
-            "s",
-            F.col("vec_id").cast("int").alias("k"),
-            F.col("sv").alias("cw"),
-        )
-        for _ in range(KMEANS_ITERS):
-            cb = _pq_cb_recenter(_pq_cb_assign(sv_rows, cb))
-        piv = cb.groupBy().agg(
-            *[
-                F.max(
-                    F.when(
-                        (F.col("s") == s) & (F.col("k") == k), F.col("cw")
-                    )
-                ).alias(f"c{s}_{k}")
-                for s in range(PQ_M)
-                for k in range(PQ_K)
-            ]
-        )
-        _IVF_CACHE[key] = piv.persist()
-    return _IVF_CACHE[key]
+    res = _pq_residual_frame(spark, sf_dir)
+    n = table(spark, sf_dir, "embeddings").count()
+    samp = res.filter(F.col("vec_id") < min(n, IVF2_SAMPLE)).select(
+        "vec_id", F.col("rv").alias("v")
+    )
+    sv_rows = _spread(_pq_subvector_rows(samp))
+    cb = sv_rows.filter(F.col("vec_id") < PQ_K).select(
+        "s",
+        F.col("vec_id").cast("int").alias("k"),
+        F.col("sv").alias("cw"),
+    )
+    for _ in range(KMEANS_ITERS):
+        cb = _pq_cb_recenter(_pq_cb_assign(sv_rows, cb))
+    piv = cb.groupBy().agg(
+        *[
+            F.max(
+                F.when(
+                    (F.col("s") == s) & (F.col("k") == k), F.col("cw")
+                )
+            ).alias(f"c{s}_{k}")
+            for s in range(PQ_M)
+            for k in range(PQ_K)
+        ]
+    )
+    return piv.persist()
 
 
 def _pqr_dist_cols(dialect: str) -> list[str]:
@@ -5268,21 +5213,6 @@ def _pqr_dist_cols(dialect: str) -> list[str]:
                 f"{_pqt_sq(dialect, 'qrv', f'c{s}_{k}', lo)} AS g{s}_{k}"
             )
     cols.append(f"{_pq_sq(dialect, 'embedding', 'qe', 1, PCA_DIM)} AS ex")
-    return cols
-
-
-def _pqr_dist_cols_spark() -> list[Column]:
-    cols = []
-    for s in range(PQ_M):
-        lo = s * PQ_SUB + 1
-        for k in range(PQ_K):
-            cols.append(
-                _pqt_sq_col("rv", f"c{s}_{k}", lo).alias(f"d{s}_{k}")
-            )
-            cols.append(
-                _pqt_sq_col("qrv", f"c{s}_{k}", lo).alias(f"g{s}_{k}")
-            )
-    cols.append(_pq_sq_col("embedding", "qe", 1, PCA_DIM).alias("ex"))
     return cols
 
 
@@ -5508,6 +5438,7 @@ def q_pq_residual_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # template, with qrv now varying by cent_id instead of being one row.
 
 
+@session_memo("ivf_assignments")
 def _residual_multiprobe_cand(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -5522,12 +5453,8 @@ def _residual_multiprobe_cand(
     (plus the serve query) each re-derived the probe window and the
     posting-list join before; now they read the tiny cached rows
     (guide §5: cache when reuse outweighs the memory, which here is a
-    few hundred rows). Released by ``clear_ivf_cache``."""
+    few hundred rows). Released with the ``ivf_assignments`` family."""
     from pyspark.sql import Window
-
-    key = (spark.sparkContext.applicationId, sf_dir, "mcand")
-    if key in _IVF_CACHE:
-        return _IVF_CACHE[key]
 
     res = _pq_residual_frame(spark, sf_dir)
     cents = _twolevel_centroids(spark, sf_dir)
@@ -5550,7 +5477,7 @@ def _residual_multiprobe_cand(
             F.zip_with("qe", "cv", lambda x, y: x - y).alias("qrv"),
         )
     )
-    _IVF_CACHE[key] = (
+    return (
         res.join(F.broadcast(probes), "cent_id")
         .crossJoin(F.broadcast(qrow))
         .filter(
@@ -5562,7 +5489,6 @@ def _residual_multiprobe_cand(
         )
         .persist()
     )
-    return _IVF_CACHE[key]
 
 
 def _residual_multiprobe_ctes() -> str:

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..caches import session_memo
 from ..catalog import table
 from ..functions.hashing import md5_long, md5_long_sql
 from ..functions.text import (
@@ -1344,30 +1345,14 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _bpe_train(spark, sf_dir)[1]
 
 
-_BPE_CACHE: dict[tuple[str, str], tuple] = {}
-
-
-def clear_bpe_cache() -> None:
-    """Unpersist + drop all memoized BPE trainings (test hygiene)."""
-    for cached, _ in _BPE_CACHE.values():
-        for df in cached:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-    _BPE_CACHE.clear()
-
-
+@session_memo("bpe_trainings")
 def _bpe_train(spark: SparkSession, sf_dir: str):
     """Run the unrolled merge loop; returns (final word->sym vocab DF,
-    4-row merge-table DF). Memoized per (session, sf_dir) — same idiom
-    as the IVF session index — so q_bpe_train_merges and
-    q_bpe_tokenize_cost share ONE persisted word-frequency table
-    instead of each call stacking a fresh persist that nothing ever
-    releases."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _BPE_CACHE:
-        return _BPE_CACHE[key][1]
+    4-row merge-table DF, every persisted frame). Memoized per
+    (session, sf_dir) — same idiom as the IVF session index — so
+    q_bpe_train_merges and q_bpe_tokenize_cost share ONE persisted
+    word-frequency table instead of each call stacking a fresh persist
+    that nothing ever releases."""
     docs = table(spark, sf_dir, "documents")
     # persist: the word-frequency table is vocab-sized and every merge
     # iteration's branch (and the 4-way output union) chains from it —
@@ -1399,8 +1384,8 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     # read the materialized previous one: the chain is evaluated once,
     # and the 2^k replay is gone (measured after: 9.3 s first-touch /
     # 1.8 s rider on the same driver_sim run, oracle MATCH). All five
-    # frames are registered in _BPE_CACHE and released by
-    # clear_bpe_cache / the family clearer.
+    # frames are returned with the result, so the ``bpe_trainings``
+    # family release frees them.
     cur = base
     persisted = [base]
     merge_rows = []
@@ -1468,8 +1453,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     out = merge_rows[0]
     for m in merge_rows[1:]:
         out = out.unionAll(m)
-    _BPE_CACHE[key] = (persisted, (cur, out))
-    return cur, out
+    return cur, out, tuple(persisted)
 
 
 def _bpe_apply_oracle() -> str:
@@ -1522,7 +1506,7 @@ def q_bpe_tokenize_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc then per-source, both partial-combined. Docs whose text
     yields no vocabulary words (empty after split) contribute no row —
     stated contract in both engines."""
-    vocab, _ = _bpe_train(spark, sf_dir)
+    vocab = _bpe_train(spark, sf_dir)[0]
     n_tok = vocab.select(
         "w", F.size(F.split("sym", " ")).alias("n_tokens")
     )

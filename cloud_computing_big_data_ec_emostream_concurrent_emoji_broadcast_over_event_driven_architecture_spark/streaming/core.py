@@ -64,17 +64,6 @@ def decode_wire_events(raw: DataFrame, value_col: str = "value") -> DataFrame:
     return parsed.withColumn("ts", ts)
 
 
-def with_processing_time_fallback(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Opt-in twin of the Python service's silent parse-failure fallback
-    (reference analytical_server.py:24-27 substitutes now()): explicit
-    ``coalesce(event_time, current_timestamp())`` plus a flag column so
-    downstream can quarantine processing-time rows instead of silently
-    mixing time domains."""
-    return df.withColumn(
-        "ts_is_fallback", F.col(ts_col).isNull()
-    ).withColumn(ts_col, F.coalesce(F.col(ts_col), F.current_timestamp()))
-
-
 def windowed_counts_scaled(
     events: DataFrame,
     ts_col: str = "ts",
@@ -621,9 +610,7 @@ def ivf_index_append_batch_fn(spark, sf_dir: str, sink_dir: str):
     from ..functions.vectors import as_double, cosine
     from ..operators.similarity import _append_index, _route_assign
 
-    _, _, wmax, cents, coarse_arr, groups, pcm = _append_index(
-        spark, sf_dir
-    )
+    ix = _append_index(spark, sf_dir)
 
     def _append(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
@@ -631,8 +618,8 @@ def ivf_index_append_batch_fn(spark, sf_dir: str, sink_dir: str):
         bv = batch.select(
             "vec_id", as_double(F.col("embedding")).alias("v")
         )
-        routed = _route_assign(bv, coarse_arr, groups, pcm, wmax)
-        out = routed.join(F.broadcast(cents), "cent_id").select(
+        routed = _route_assign(bv, ix.coarse_arr, ix.groups, ix.pcm, ix.wmax)
+        out = routed.join(F.broadcast(ix.cents), "cent_id").select(
             "vec_id",
             "cent_id",
             "shard",

@@ -109,6 +109,12 @@ class IngestGateway:
                     return
                 try:
                     n = int(self.headers.get("Content-Length") or 0)
+                    if n < 0:
+                        # rfile.read(-1) would block until the client
+                        # closes; with the body framing unknown, answer
+                        # 400 unread and drop the connection after it
+                        self.close_connection = True
+                        raise ValueError(n)
                     data = json.loads(self.rfile.read(n) or b"null")
                 except (ValueError, json.JSONDecodeError):
                     data = None

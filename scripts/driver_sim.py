@@ -222,10 +222,10 @@ def _centroid_memo_rewriter(con):
 # late queries inflating 2-10x (q_contamination_check 194.8 s in-soak
 # vs 20.3 s isolated — persisted-frame storage pressure + GC, not the
 # plans). The fix: run the registry GROUPED by cache family (a query's
-# family = the operator module that defines it — caches are
-# module-local; sampling/graph ride dedup's shingle caches, so they
-# join that family) and release ALL session caches at each family
-# boundary. Clearing is always CORRECT (caches are transparent memos
+# family = the operator module that defines it — each module builds
+# its own memo families in the shared ``caches`` store, and
+# sampling/graph ride dedup's shingle memos, so they join that family)
+# and release ALL session caches at each family boundary. Clearing is always CORRECT (caches are transparent memos
 # that rebuild lazily); grouping makes it also CHEAP — within a family
 # the memo is shared, across families it is dead weight. Opt out with
 # SPARK_GRAFT_SIM_NO_FAMILY_CLEAR=1 (the pre-round-10 behavior).

@@ -102,11 +102,11 @@ def test_pair_cache_owns_its_checkpoints(spark, sf_dir):
     iterative_transients (round-6 ADVICE: the old routing freed blocks
     while _PAIR_CACHE still held unreadable handles)."""
     from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.dedup import (
-        clear_pair_cache,
         q_dedup_tier_recall,
         q_minhash_band_sensitivity,
     )
 
+    clear_pair_cache = SESSION_CACHE_CLEARERS()["dedup_tier_pair_lists"]
     clear_all_session_caches()
     base = _settled_count(spark, 0)
     q_dedup_tier_recall(spark, sf_dir).count()

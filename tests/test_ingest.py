@@ -5,6 +5,7 @@ batch spooling — and the spool→decode streaming path end to end."""
 from __future__ import annotations
 
 import json
+import socket
 import time
 import urllib.error
 import urllib.request
@@ -56,6 +57,28 @@ def test_send_emoji_contract(tmp_path):
         code, body = _post(gw.url, "not an object")
         assert code == 400
         assert gw.accepted_count == 1
+    finally:
+        gw.close()
+
+
+def test_negative_content_length_gets_400_without_waiting(tmp_path):
+    # a keep-alive POST declaring Content-Length: -1 must be answered at
+    # once; reading -1 bytes would block until the client hangs up
+    gw = IngestGateway(str(tmp_path / "spool")).serve_background()
+    try:
+        with socket.create_connection(("127.0.0.1", gw.port), timeout=2) as s:
+            s.sendall(
+                b"POST /send_emoji HTTP/1.1\r\n"
+                b"Host: localhost\r\n"
+                b"Content-Type: application/json\r\n"
+                b"Content-Length: -1\r\n"
+                b"Connection: keep-alive\r\n\r\n"
+            )
+            t0 = time.monotonic()
+            status = s.recv(64).split(b"\r\n", 1)[0]
+            assert time.monotonic() - t0 < 2.0
+        assert status.split()[1] == b"400", status
+        assert gw.accepted_count == 0
     finally:
         gw.close()
 

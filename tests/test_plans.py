@@ -12,6 +12,9 @@ from __future__ import annotations
 
 import pytest
 
+from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.caches import (
+    release_family,
+)
 from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.plans.registry import (
     all_specs,
 )
@@ -752,11 +755,7 @@ def test_bpe_train_chains_from_cached_vocab(spark, sf_dir):
     ``_strip_cached_subtrees``'s indent heuristic (the round-10
     per-iteration persist made the stored plans nested, which is where
     the suite first hit that)."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.text import (
-        clear_bpe_cache,
-    )
-
-    clear_bpe_cache()
+    release_family("bpe_trainings")
     plan = _strip_cached_subtrees(_plan(spark, sf_dir, "q_bpe_train_merges"))
     assert "FileScan parquet" not in plan
     assert "SortMergeJoin" not in plan
@@ -767,11 +766,7 @@ def test_bpe_tokenize_cost_single_corpus_scan(spark, sf_dir):
     vocab joins as a broadcast (memoized segmentation, never a re-fold
     per occurrence). Fresh cache for the same stripping reason as
     test_bpe_train_chains_from_cached_vocab."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.text import (
-        clear_bpe_cache,
-    )
-
-    clear_bpe_cache()
+    release_family("bpe_trainings")
     plan = _strip_cached_subtrees(_plan(spark, sf_dir, "q_bpe_tokenize_cost"))
     assert plan.count("FileScan parquet") == 1
     assert "BroadcastHashJoin" in plan

@@ -24,6 +24,9 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.caches import (
+    SESSION_CACHE_CLEARERS,
+)
 from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators import (
     dedup,
 )
@@ -69,11 +72,8 @@ def test_minhash_pairs_subset_of_exact_and_identical_found(
         (r["doc_id_a"], r["doc_id_b"])
         for r in dedup.q_dedup_minhash(spark, sf_dir).collect()
     }
-    # free the per-sf_dir persisted shingle tables (cache entries are
-    # (appId, sf_dir, kind) -> tuple of persisted frames)
-    for key in [k for k in dedup._HASHSET_CACHE if k[1] == sf_dir]:
-        for frame in dedup._HASHSET_CACHE.pop(key):
-            frame.unpersist()
+    # free the per-example persisted shingle tables
+    SESSION_CACHE_CLEARERS()["dedup_shingle_hashsets"]()
 
     assert approx <= exact, "LSH verification must kill false positives"
     dup_pair = (i, len(docs) - 1)

@@ -8,6 +8,10 @@ import uuid
 
 from pyspark.sql import functions as F
 
+from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.caches import (
+    release_family,
+)
+
 
 def _delta_chunks(spark, sf_dir, directory, n_chunks=3):
     """The append-path delta slice written as ``n_chunks`` parquet
@@ -245,14 +249,14 @@ def test_rhp_frame_plane_append(spark, sf_dir, tmp_path, monkeypatch):
     assert {r.vec_id: tuple(r.bits) for r in after} == before
     assert all(len(r.sbits) == 4 for r in after)
 
-    S.clear_rhp_cache()
+    release_family("rhp_sketches")
     try:
         want = sorted(
             (r.vec_id, tuple(r.bits), tuple(r.sbits))
             for r in S._rhp_bits_frame(spark, sf_dir).collect()
         )
     finally:
-        S.clear_rhp_cache()
+        release_family("rhp_sketches")
     got = sorted(
         (r.vec_id, tuple(r.bits), tuple(r.sbits))
         for r in S.rhp_frame_load(spark, sf_dir, store).collect()

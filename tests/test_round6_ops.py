@@ -7,6 +7,9 @@ from collections import defaultdict
 import pytest
 from pyspark.sql import functions as F
 
+from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.caches import (
+    release_family,
+)
 from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.catalog import (
     table,
 )
@@ -158,7 +161,7 @@ def test_rhp_adaptive_width_engages_and_cuts_candidates(
     )
 
     big, _ = adaptive_rhp_sf_dir
-    sim.clear_rhp_cache()
+    release_family("rhp_sketches")
     try:
         max_code = sim.rhp_band_rows(spark, big).agg(
             F.max("code").alias("m")
@@ -175,12 +178,12 @@ def test_rhp_adaptive_width_engages_and_cuts_candidates(
             ).collect()[0]["m"]
 
         mass_adaptive = pair_mass()
-        sim.clear_rhp_cache()
+        release_family("rhp_sketches")
         monkeypatch.setattr(sim, "rhp_band_bits", lambda n: 6)
         mass_fixed = pair_mass()
         assert mass_adaptive < 0.75 * mass_fixed, (mass_adaptive, mass_fixed)
     finally:
-        sim.clear_rhp_cache()
+        release_family("rhp_sketches")
 
 
 def test_rhp_adaptive_banding_matches_duckdb(spark, adaptive_rhp_sf_dir):
@@ -194,7 +197,6 @@ def test_rhp_adaptive_banding_matches_duckdb(spark, adaptive_rhp_sf_dir):
         _RHP_CAND_CTE,
         _RHP_CTE,
         _rhp_candidate_pairs,
-        clear_rhp_cache,
     )
 
     big, _ = adaptive_rhp_sf_dir
@@ -212,7 +214,7 @@ def test_rhp_adaptive_banding_matches_duckdb(spark, adaptive_rhp_sf_dir):
             ).fetchall(),
         )
     )
-    clear_rhp_cache()
+    release_family("rhp_sketches")
     try:
         got = {
             (r.vec_id_a, r.vec_id_b)
@@ -222,7 +224,7 @@ def test_rhp_adaptive_banding_matches_duckdb(spark, adaptive_rhp_sf_dir):
             len(got), len(truth), sorted(got ^ truth)[:5]
         )
     finally:
-        clear_rhp_cache()
+        release_family("rhp_sketches")
         con.close()
 
 
@@ -232,11 +234,10 @@ def test_rhp_sketch_stable_across_corpus_sizes(spark, adaptive_rhp_sf_dir):
     may): shared vectors sketch identically in both fixtures."""
     from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.similarity import (
         _rhp_sketches,
-        clear_rhp_cache,
     )
 
     big, small = adaptive_rhp_sf_dir
-    clear_rhp_cache()
+    release_family("rhp_sketches")
     try:
         s_small = {
             r.vec_id: r.sketch for r in _rhp_sketches(spark, small).collect()
@@ -248,7 +249,7 @@ def test_rhp_sketch_stable_across_corpus_sizes(spark, adaptive_rhp_sf_dir):
         }
         assert s_small == s_big
     finally:
-        clear_rhp_cache()
+        release_family("rhp_sketches")
 
 
 def test_ann_ivf_scaled_rides_twolevel_and_bounded_probe(
@@ -264,7 +265,6 @@ def test_ann_ivf_scaled_rides_twolevel_and_bounded_probe(
     docstring claims."""
     from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.similarity import (
         _twolevel_assignment,
-        clear_ivf_cache,
         q_ann_ivf_scaled,
         q_ann_ivf_twolevel,
     )
@@ -278,7 +278,7 @@ def test_ann_ivf_scaled_rides_twolevel_and_bounded_probe(
     assert two == scaled
 
     big, _ = adaptive_rhp_sf_dir
-    clear_ivf_cache()
+    release_family("ivf_assignments")
     try:
         a = _twolevel_assignment(spark, big)
         k_live = a.select("cent_id").distinct().count()
@@ -290,7 +290,7 @@ def test_ann_ivf_scaled_rides_twolevel_and_bounded_probe(
         )
         assert max_bucket < 8192 / 8
     finally:
-        clear_ivf_cache()
+        release_family("ivf_assignments")
 
 
 def test_synth_regroup_preserves_values_and_splits(spark, tmp_path):
@@ -353,10 +353,9 @@ def test_rhp_sketch_build_is_spread(spark, sf_dir):
     is round-robined across defaultParallelism first."""
     from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.similarity import (
         _rhp_sketches,
-        clear_rhp_cache,
     )
 
-    clear_rhp_cache()
+    release_family("rhp_sketches")
     try:
         df = _rhp_sketches(spark, sf_dir)
         assert (
@@ -364,4 +363,4 @@ def test_rhp_sketch_build_is_spread(spark, sf_dir):
             == spark.sparkContext.defaultParallelism
         )
     finally:
-        clear_rhp_cache()
+        release_family("rhp_sketches")

@@ -7,6 +7,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.caches import (
+    release_family,
+)
+
 
 def _planted_clique_fixture(spark, tmp_path, m: int = 24, solo: int = 30):
     """A documents dir with one m-document exact-duplicate clique plus
@@ -105,7 +109,6 @@ def test_shard_dial_activates_and_coshards_exact_dups(
         RHP_SHARD_PLANE_BASE,
         _rhp_bit_exprs,
         _rhp_sharded_band_rows,
-        clear_rhp_cache,
         rhp_band_bits,
         rhp_shard_bits,
     )
@@ -145,7 +148,7 @@ def test_shard_dial_activates_and_coshards_exact_dups(
     (part,) = glob.glob(tmp + "/w/part-*.parquet")
     os.makedirs(tmp + "/fix", exist_ok=True)
     os.replace(part, tmp + "/fix/embeddings.parquet")
-    clear_rhp_cache()
+    release_family("rhp_sketches")
     try:
         rows = _rhp_sharded_band_rows(spark, tmp + "/fix")
         n_shards = rows.select("shard").distinct().count()
@@ -164,7 +167,7 @@ def test_shard_dial_activates_and_coshards_exact_dups(
         )
         assert per_base == 1
     finally:
-        clear_rhp_cache()
+        release_family("rhp_sketches")
         import shutil
 
         shutil.rmtree(tmp, ignore_errors=True)
@@ -195,11 +198,10 @@ def test_twolevel_ivf_build_shape(spark, sf_dir):
     )
     from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.similarity import (
         _twolevel_assignment,
-        clear_ivf_cache,
         q_ann_ivf_twolevel,
     )
 
-    clear_ivf_cache()
+    release_family("ivf_assignments")
     try:
         n = table(spark, sf_dir, "embeddings").count()
         a = _twolevel_assignment(spark, sf_dir)
@@ -210,4 +212,4 @@ def test_twolevel_ivf_build_shape(spark, sf_dir):
         )
         assert "CartesianProduct" not in plan
     finally:
-        clear_ivf_cache()
+        release_family("ivf_assignments")

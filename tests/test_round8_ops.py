@@ -10,6 +10,11 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.caches import (
+    _MEMO,
+    release_family,
+)
+
 
 def test_twolevel_dials_rule():
     """Integer dial rules: K tracks N/64 up to the cap; the cap keeps
@@ -65,21 +70,20 @@ def test_rhp_families_share_one_bit_frame(spark, sf_dir):
     )
     from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.similarity import (
         RHP_BANDS,
-        _RHP_CACHE,
         _rhp_bit_exprs,
         _rhp_sharded_band_rows,
         _rhp_sketches,
-        clear_rhp_cache,
         rhp_band_bits,
         rhp_shard_bits,
     )
 
-    clear_rhp_cache()
+    release_family("rhp_sketches")
     try:
         _rhp_sketches(spark, sf_dir)
         _rhp_sharded_band_rows(spark, sf_dir)
-        kinds = {k[-1] for k in _RHP_CACHE}
-        assert "bits" in kinds and "sharded" in kinds
+        kinds = {k[2] for k in _MEMO if k[0] == "rhp_sketches"}
+        assert "_rhp_bits_frame" in kinds
+        assert "_rhp_sharded_band_rows" in kinds
         # value identity vs the inline fold at the sharded width
         emb = table(spark, sf_dir, "embeddings")
         n = emb.count()
@@ -106,7 +110,7 @@ def test_rhp_families_share_one_bit_frame(spark, sf_dir):
         }
         assert packed == inline
     finally:
-        clear_rhp_cache()
+        release_family("rhp_sketches")
 
 
 def test_semdedup_scaled_probe_bounded_at_cap(spark):
@@ -118,7 +122,6 @@ def test_semdedup_scaled_probe_bounded_at_cap(spark):
 
     from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.similarity import (
         _twolevel_assignment,
-        clear_ivf_cache,
     )
 
     rng = random.Random(20260815)
@@ -133,7 +136,7 @@ def test_semdedup_scaled_probe_bounded_at_cap(spark):
     spark.createDataFrame(
         rows, "vec_id long, embedding array<float>"
     ).coalesce(4).write.mode("overwrite").parquet(d + "/embeddings.parquet")
-    clear_ivf_cache()
+    release_family("ivf_assignments")
     try:
         a = _twolevel_assignment(spark, d)
         assert a.count() == n
@@ -142,7 +145,7 @@ def test_semdedup_scaled_probe_bounded_at_cap(spark):
         )
         assert max_bucket < n / 8
     finally:
-        clear_ivf_cache()
+        release_family("ivf_assignments")
         import shutil
 
         shutil.rmtree(d, ignore_errors=True)

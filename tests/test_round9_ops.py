@@ -10,6 +10,11 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.caches import (
+    _MEMO,
+    release_family,
+)
+
 
 def test_ivf2_shard_bits_rule():
     """The shard width engages only PAST the K cap (below it, K itself
@@ -175,19 +180,17 @@ def test_append_index_trains_once(spark, sf_dir):
         similarity as S,
     )
 
-    S._append_index(spark, sf_dir)
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, "append")
-    assert key + ("cents",) in S._IVF_CACHE
-    assert key + ("coarse",) in S._IVF_CACHE
-    assert key + ("groups",) in S._IVF_CACHE
-    before = S._IVF_CACHE[key + ("cents",)]
+    before = S._append_index(spark, sf_dir)
+    assert before.cents.is_cached
+    assert before.coarse_arr.is_cached
+    assert before.groups.is_cached
     S.q_ivf_index_append(spark, sf_dir).count()
     S.q_dedup_ingest_incremental(spark, sf_dir).count()
     # same persisted objects — no rider rebuilt the training
-    assert S._IVF_CACHE[key + ("cents",)] is before
-    assert key + ("delta",) in S._IVF_CACHE
-    assert key + ("base",) in S._IVF_CACHE
+    assert S._append_index(spark, sf_dir).cents is before.cents
+    built = {k[2:] for k in _MEMO if k[0] == "ivf_assignments"}
+    assert ("_append_assignment", sf_dir) in built
+    assert ("_append_base_assignment", sf_dir) in built
 
 
 def test_ingest_dedup_reports_argmax_match(spark, sf_dir):
@@ -420,7 +423,7 @@ def test_rhp_frame_env_gated_serving(spark, sf_dir, tmp_path, monkeypatch):
     sk_want = sorted(
         tuple(r) for r in S.q_embedding_lsh_sketch(spark, sf_dir).collect()
     )
-    S.clear_rhp_cache()
+    release_family("rhp_sketches")
     monkeypatch.setenv("SPARK_GRAFT_RHP_FRAME_DIR", str(tmp_path))
     try:
         got = _frame_rows(S._rhp_bits_frame(spark, sf_dir))
@@ -429,7 +432,7 @@ def test_rhp_frame_env_gated_serving(spark, sf_dir, tmp_path, monkeypatch):
             for r in S.q_embedding_lsh_sketch(spark, sf_dir).collect()
         )
     finally:
-        S.clear_rhp_cache()
+        release_family("rhp_sketches")
     assert got == want
     assert sk_got == sk_want
 
@@ -448,18 +451,15 @@ def test_adaptive_shard_bounds_hot_cells(spark, sf_dir, monkeypatch):
 
     monkeypatch.setattr(S, "SEMDEDUP_TARGET_CLUSTER", 8)
     monkeypatch.setattr(S, "IVF2_K_CAP", 4)
-    S.clear_ivf_cache()
+    release_family("ivf_assignments")
     try:
         rows = S._twolevel_assignment(spark, sf_dir).collect()
-        app = spark.sparkContext.applicationId
         pcm = {
             r.cent_id: r.pc
-            for r in S._IVF_CACHE[
-                (app, sf_dir, "twolevel", "pcm")
-            ].collect()
+            for r in S._twolevel_index(spark, sf_dir)["pcm"].collect()
         }
     finally:
-        S.clear_ivf_cache()
+        release_family("ivf_assignments")
 
     occ: dict[int, int] = {}
     for r in rows:

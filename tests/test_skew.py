@@ -6,6 +6,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.caches import (
+    release_family,
+)
 from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.catalog import (
     table,
 )
@@ -149,13 +152,12 @@ def test_minhash_band_skew_candidate_bound(spark, hot_band_sf_dir):
     EXACTLY the hot clique C(30,2) — the distinct() collapses the
     4-band multiplicity, and unique docs contribute nothing."""
     from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.dedup import (
-        clear_hashset_cache,
         minhash_candidate_pairs,
         q_dedup_minhash,
     )
 
     sf_dir, n_hot, _ = hot_band_sf_dir
-    clear_hashset_cache()
+    release_family("dedup_shingle_hashsets")
     try:
         cands = minhash_candidate_pairs(spark, sf_dir).collect()
         hot_clique = n_hot * (n_hot - 1) // 2
@@ -175,7 +177,7 @@ def test_minhash_band_skew_candidate_bound(spark, hot_band_sf_dir):
         }
         assert {p for p in pairs if p[0] < n_hot} == set(in_hot)
     finally:
-        clear_hashset_cache()
+        release_family("dedup_shingle_hashsets")
 
 
 def test_rhp_band_skew_candidate_bound(spark, hot_band_sf_dir):
@@ -184,11 +186,10 @@ def test_rhp_band_skew_candidate_bound(spark, hot_band_sf_dir):
     background — the distinct() collapses the 8-band multiplicity."""
     from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.similarity import (
         _rhp_candidate_pairs,
-        clear_rhp_cache,
     )
 
     sf_dir, _, n_hot = hot_band_sf_dir
-    clear_rhp_cache()
+    release_family("rhp_sketches")
     try:
         cands = [
             (r.vec_id_a, r.vec_id_b)
@@ -211,4 +212,4 @@ def test_rhp_band_skew_candidate_bound(spark, hot_band_sf_dir):
         all_pairs = n_vec * (n_vec - 1) // 2
         assert len(cands) <= int(0.40 * all_pairs), len(cands)
     finally:
-        clear_rhp_cache()
+        release_family("rhp_sketches")
