@@ -36,8 +36,13 @@ Inventory:
   :func:`track_checkpoint` and released by :func:`release_transients`
   — or by the operator itself when lineage allows
   (``q_hierarchy_data_edges`` unpersists inline after its eager
-  checkpoints). Streaming view checkpoints are bounded to one live RDD
-  per view by :func:`swap_view_checkpoint`.
+  checkpoints).
+- **streaming view checkpoints** — :func:`publish_view` is the one way
+  a stream publishes a global temp view (``start_topk_sink``,
+  ``ts_similarity_stream``, ``bitmap_distinct_stream``): it checkpoints
+  the frame eagerly, re-registers the view and frees the checkpoint
+  the view held before, so each view holds at most one live RDD;
+  :func:`release_transients` frees the last ones.
 - **disk-layout artifacts** (NOT RDD storage): the bucketed catalog
   tables (`operators/joins.py` ``_bucketed_pair``) and any
   ``write_partitioned`` output live in the warehouse directory, cost
@@ -166,25 +171,32 @@ def track_checkpoint(df: DataFrame) -> DataFrame:
     return df
 
 
-def swap_view_checkpoint(df: DataFrame, name: str) -> None:
-    """Bound the streaming-view checkpoint chain to ONE live RDD.
+def publish_view(df: DataFrame, name: str) -> DataFrame:
+    """Publish ``df`` as global temp view ``name`` and return the
+    checkpointed frame behind it.
 
-    The foreachBatch sinks materialize each micro-batch's accumulated
-    view with an eager ``localCheckpoint`` and re-register the global
-    temp view — without release, every batch leaks its predecessor's
-    checkpoint blocks (unbounded executor-storage growth over a
-    long-running stream; round-6 audit finding). Call AFTER the new
-    checkpoint is materialized and the view re-registered: the new
-    frame is self-contained, so dropping the replaced RDD is safe.
+    The frame is materialized with an eager ``localCheckpoint`` first:
+    a lazy view over a micro-batch would re-execute the streaming plan
+    whenever it is next queried, which is both wrong (stale state) and
+    rejected by the state store's commit validation. Each publish then
+    frees the checkpoint RDD the view held before, so a view that a
+    stream republishes every micro-batch keeps ONE live checkpoint RDD
+    (without the release, each replaced checkpoint holds executor
+    storage until a JVM GC lets the ContextCleaner free it; round-6
+    audit finding). The new frame is self-contained, so dropping the
+    replaced RDD is safe.
     (External readers racing the swap window would re-query the view on
     the next trigger; in-process consumers read between batches.)"""
-    key = (df.sparkSession.sparkContext.applicationId, name)
-    ref = _checkpoint_rdd(df)
+    ck = df.localCheckpoint(eager=True)
+    ck.createOrReplaceGlobalTempView(name)
+    key = (ck.sparkSession.sparkContext.applicationId, name)
+    ref = _checkpoint_rdd(ck)
     prev = _VIEW_CHECKPOINTS.pop(key, None)
     if ref is not None:
         _VIEW_CHECKPOINTS[key] = ref
     if prev is not None:
         _unpersist_rdd(prev)
+    return ck
 
 
 def release_transients() -> None:

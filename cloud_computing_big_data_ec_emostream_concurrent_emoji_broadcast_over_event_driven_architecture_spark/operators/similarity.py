@@ -4995,24 +4995,6 @@ def ingest_dedup_rows(base_a: DataFrame, delta_a: DataFrame) -> DataFrame:
     )
 
 
-def frozen_router_parts(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame | None, int]:
-    """(base_assignment, coarse_arr, groups, pcm, wmax) — everything a
-    streaming ingest job needs to near-dup-check arriving vectors
-    against the standing corpus through the frozen index (the public
-    face of the session-persisted append-index parts). ``pcm``/``wmax``
-    are the frozen per-cell split widths (None/0 below the gate)."""
-    ix = _append_index(spark, sf_dir)
-    return (
-        _append_base_assignment(spark, sf_dir),
-        ix.coarse_arr,
-        ix.groups,
-        ix.pcm,
-        ix.wmax,
-    )
-
-
 def ann_serve_rows(
     base_a: DataFrame, query_a: DataFrame, k: int = ANN_BATCH_K
 ) -> DataFrame:

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..caches import publish_view
 from ..schemas import EMOJI_EVENT_WIRE_SCHEMA, ISO_MICROS_FMT
 
 DEFAULT_WATERMARK = "1 minute"  # reference spark_consumer.py:38
@@ -316,11 +317,23 @@ def windowed_distinct_users(
     )
 
 
+def _start_foreach_batch(
+    stream: DataFrame, body, checkpoint_dir: str | None = None
+):
+    """Start ``stream`` in append mode with ``body(batch, batch_id)`` as
+    its ``foreachBatch`` function — checkpointed under
+    ``checkpoint_dir`` when one is given — and return the started
+    query. Every foreachBatch stream in this module starts here."""
+    w = stream.writeStream.outputMode("append").foreachBatch(body)
+    if checkpoint_dir is not None:
+        w = w.option("checkpointLocation", checkpoint_dir)
+    return w.start()
+
+
 def bloom_probe_stream(
     docs_stream: DataFrame,
     seen_bits: DataFrame,
-    name: str = "bloom_probe",
-    sink_dir: str | None = None,
+    sink_dir: str,
     checkpoint_dir: str | None = None,
 ):
     """STREAM-STATIC Bloom membership — incremental-crawl dedup as a
@@ -336,57 +349,19 @@ def bloom_probe_stream(
     per-document — and the bit set stays a broadcast bounded by m rows
     no matter how much reference corpus it summarizes.
 
-    Sinks: same contract as :func:`semantic_dedup_stream` — with
-    ``sink_dir`` set (the production form) each batch's per-document
-    rows append DELTA-ONLY via :func:`_append_delta_sink` (per-batch
-    cost O(|batch|), flat over stream life, replay-idempotent;
-    redelivery removed at read by :func:`stream_sink_results` on
-    ``doc_id``); without it the rows accumulate in global temp view
-    ``name`` — the DEMO form whose per-batch re-checkpoint cost grows
-    with history (:func:`_accumulate_view`). Returns the started
+    Sink: same contract as :func:`semantic_dedup_stream` — each batch's
+    per-document rows append DELTA-ONLY to ``sink_dir`` via
+    :func:`_append_delta_sink` (per-batch cost O(|batch|), flat over
+    stream life, replay-idempotent; redelivery removed at read by
+    :func:`stream_sink_results` on ``doc_id``). Returns the started
     query."""
     from ..operators.corpus import bloom_probe, shingle_rows
 
-    spark = docs_stream.sparkSession
-
     def _probe(batch: DataFrame, batch_id: int) -> None:
         out = bloom_probe(shingle_rows(batch), seen_bits)
-        if sink_dir is not None:
-            _append_delta_sink(out, sink_dir, batch_id)
-        else:
-            _accumulate_view(spark, out, name, "doc_id")
+        _append_delta_sink(out, sink_dir, batch_id)
 
-    w = docs_stream.writeStream.outputMode("append").foreachBatch(
-        _probe
-    )
-    if checkpoint_dir is not None:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
-
-
-def _accumulate_view(spark, out: DataFrame, name: str, key: str) -> None:
-    """DEMO-ONLY accumulate sink: union the batch's rows into the
-    standing global-temp view (anti-joined on ``key`` so redelivery
-    cannot duplicate) and re-checkpoint the WHOLE accumulated result.
-    Per-batch work and checkpoint size are O(total accumulated rows) —
-    O(total²) cumulative over a stream's life (round-9 verdict finding)
-    — so this form is for in-process demos and tests only; production
-    streams pass ``sink_dir`` and get the delta-only append sink."""
-    existing = [
-        t.name
-        for t in spark.catalog.listTables("global_temp")
-        if t.name == name
-    ]
-    if existing:
-        prev = spark.table(f"global_temp.{name}")
-        out = prev.unionByName(
-            out.join(prev.select(key).distinct(), key, "left_anti")
-        )
-    from ..caches import swap_view_checkpoint
-
-    ck = out.localCheckpoint(eager=True)
-    ck.createOrReplaceGlobalTempView(name)
-    swap_view_checkpoint(ck, name)
+    return _start_foreach_batch(docs_stream, _probe, checkpoint_dir)
 
 
 def _append_delta_sink(out: DataFrame, sink_dir: str, batch_id: int) -> None:
@@ -396,14 +371,12 @@ def _append_delta_sink(out: DataFrame, sink_dir: str, batch_id: int) -> None:
     replayed batch id (foreachBatch's at-least-once restart semantics
     under a checkpointed query) rewrites its own partition instead of
     duplicating it. Per-batch cost is O(|batch result|): no read, no
-    union, no re-checkpoint of history — the accumulate-view form's
-    O(total) per-batch work (and O(total²) cumulative) is gone, which
-    is the property a continuous serving stream needs. Source-level
-    redelivery (the same vector arriving again in a LATER batch)
-    produces an identical row under a different batch id; the
-    idempotency key travels with the row, and
-    :func:`stream_sink_results` removes such replays at read time —
-    the reader pays that dedup, never the hot append path."""
+    union, no re-checkpoint of history, which is the property a
+    continuous serving stream needs. Source-level redelivery (the same
+    vector arriving again in a LATER batch) produces an identical row
+    under a different batch id; the idempotency key travels with the
+    row, and :func:`stream_sink_results` removes such replays at read
+    time — the reader pays that dedup, never the hot append path."""
     out.write.mode("overwrite").parquet(
         f"{sink_dir.rstrip('/')}/batch={batch_id}"
     )
@@ -426,49 +399,53 @@ def stream_sink_results(
     )
 
 
-def semantic_dedup_batch_fn(
-    spark,
-    sf_dir: str,
-    name: str = "semantic_dedup",
-    sink_dir: str | None = None,
-):
-    """The foreachBatch body of :func:`semantic_dedup_stream`, exposed
-    so soak harnesses can wrap it with timing. Routes a micro-batch
-    through the frozen router and emits its near-dup rows to the
-    configured sink (delta-append when ``sink_dir`` is set, else the
-    demo accumulate view)."""
+def _frozen_router_batch_fn(spark, sf_dir: str, sink_dir: str, rows):
+    """The foreachBatch body shared by the frozen-router streams: skip
+    an empty batch, route its (vec_id, embedding) rows through the
+    FROZEN base-trained two-level router (``operators/similarity
+    ._append_index`` — all broadcast state, no retraining), turn the
+    routed (vec_id, v, cent_id, shard) frame into result rows with
+    ``rows(routed)`` and append them to the delta sink."""
     from ..functions.vectors import as_double
-    from ..operators.similarity import (
-        frozen_router_parts,
-        ingest_dedup_rows,
-        _route_assign,
-    )
+    from ..operators.similarity import _append_index, _route_assign
 
-    base_a, coarse_arr, groups, pcm, wmax = frozen_router_parts(
-        spark, sf_dir
-    )
+    ix = _append_index(spark, sf_dir)
 
-    def _dedup(batch: DataFrame, batch_id: int) -> None:
+    def _body(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
         bv = batch.select(
             "vec_id", as_double(F.col("embedding")).alias("v")
         )
-        routed = _route_assign(bv, coarse_arr, groups, pcm, wmax)
-        out = ingest_dedup_rows(base_a, routed)
-        if sink_dir is not None:
-            _append_delta_sink(out, sink_dir, batch_id)
-        else:
-            _accumulate_view(spark, out, name, "doc_id")
+        routed = _route_assign(bv, ix.coarse_arr, ix.groups, ix.pcm, ix.wmax)
+        _append_delta_sink(rows(routed), sink_dir, batch_id)
 
-    return _dedup
+    return _body
+
+
+def semantic_dedup_batch_fn(spark, sf_dir: str, sink_dir: str):
+    """The foreachBatch body of :func:`semantic_dedup_stream`, exposed
+    so soak harnesses can wrap it with timing: routes a micro-batch
+    through the frozen router and appends its near-dup rows to
+    ``sink_dir``."""
+    from ..operators.similarity import (
+        _append_base_assignment,
+        ingest_dedup_rows,
+    )
+
+    base_a = _append_base_assignment(spark, sf_dir)
+    return _frozen_router_batch_fn(
+        spark,
+        sf_dir,
+        sink_dir,
+        lambda routed: ingest_dedup_rows(base_a, routed),
+    )
 
 
 def semantic_dedup_stream(
     vec_stream: DataFrame,
     sf_dir: str,
-    name: str = "semantic_dedup",
-    sink_dir: str | None = None,
+    sink_dir: str,
     checkpoint_dir: str | None = None,
 ):
     """STREAMING SEMANTIC DEDUP-AT-INGEST — the streaming twin of the
@@ -483,80 +460,38 @@ def semantic_dedup_stream(
     (doc_id, cent_id, matched_doc_id, max_sim) — the continuously-
     maintained reject/merge list.
 
-    Sinks (round-10 item 1): with ``sink_dir`` set — the PRODUCTION
-    form — each batch's rows are appended DELTA-ONLY to a parquet
-    directory partitioned by batch id (:func:`_append_delta_sink`):
-    per-batch cost is O(|batch|), flat over the stream's life (pinned
-    by scripts/stream_sink_soak.py), batch replay is idempotent via
-    per-partition overwrite, and source-level redelivery is removed at
-    read time by :func:`stream_sink_results` on ``doc_id`` (the key
-    travels with the row). Without ``sink_dir`` the rows accumulate in
-    global temp view ``name`` — a DEMO form whose per-batch
-    re-checkpoint cost grows with history (see
-    :func:`_accumulate_view`); don't run it on an unbounded stream.
+    Sink (round-10 item 1): each batch's rows are appended DELTA-ONLY
+    to a parquet directory partitioned by batch id
+    (:func:`_append_delta_sink`): per-batch cost is O(|batch|), flat
+    over the stream's life (pinned by scripts/stream_sink_soak.py),
+    batch replay is idempotent via per-partition overwrite, and
+    source-level redelivery is removed at read time by
+    :func:`stream_sink_results` on ``doc_id`` (the key travels with
+    the row).
 
     stream == batch by construction: each micro-batch runs EXACTLY the
     batch operator's pair stage (``operators/similarity
     .ingest_dedup_rows``) against the same session-persisted base
     assignment, and a vector's verdict depends only on its own content
     + the frozen index — no cross-batch state, so a re-delivered
-    vector reproduces its identical row in either sink form.
+    vector reproduces its identical row.
 
     Cost shape at 100 TB: per batch, |batch| routing folds + per-bucket
     (batch × base-occupancy) comparisons — linear in the batch,
     corpus-size-independent at constant occupancy; the broadcasted
     router is K+√K rows and the base side is read from its persisted
     posting-list form, never recomputed. Returns the started query."""
-    spark = vec_stream.sparkSession
-    w = vec_stream.writeStream.outputMode("append").foreachBatch(
-        semantic_dedup_batch_fn(spark, sf_dir, name, sink_dir)
+    return _start_foreach_batch(
+        vec_stream,
+        semantic_dedup_batch_fn(vec_stream.sparkSession, sf_dir, sink_dir),
+        checkpoint_dir,
     )
-    if checkpoint_dir is not None:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
-
-
-def ann_serve_batch_fn(
-    spark,
-    sf_dir: str,
-    name: str = "ann_serve",
-    sink_dir: str | None = None,
-):
-    """The foreachBatch body of :func:`ann_serve_stream`, exposed for
-    soak harnesses; answers each micro-batch's vectors with their
-    top-k standing-corpus neighbors and emits to the configured sink."""
-    from ..functions.vectors import as_double
-    from ..operators.similarity import (
-        ann_serve_rows,
-        frozen_router_parts,
-        _route_assign,
-    )
-
-    base_a, coarse_arr, groups, pcm, wmax = frozen_router_parts(
-        spark, sf_dir
-    )
-
-    def _serve(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        bv = batch.select(
-            "vec_id", as_double(F.col("embedding")).alias("v")
-        )
-        routed = _route_assign(bv, coarse_arr, groups, pcm, wmax)
-        out = ann_serve_rows(base_a, routed)
-        if sink_dir is not None:
-            _append_delta_sink(out, sink_dir, batch_id)
-        else:
-            _accumulate_view(spark, out, name, "q_id")
-
-    return _serve
 
 
 def ann_serve_stream(
     vec_stream: DataFrame,
     sf_dir: str,
-    name: str = "ann_serve",
-    sink_dir: str | None = None,
+    sink_dir: str,
     checkpoint_dir: str | None = None,
 ):
     """STREAMING ANN SERVING — the streaming twin of the batch
@@ -570,13 +505,11 @@ def ann_serve_stream(
     stream == batch holds by construction (the former ``k`` override
     silently broke that parity; round-9 ADVICE — dropped).
 
-    Sinks (round-10 item 1): same contract as
-    :func:`semantic_dedup_stream` — ``sink_dir`` set is the PRODUCTION
-    delta-only append form (per-batch cost O(|batch|·k), flat over
-    stream life, batch-replay idempotent by per-partition overwrite,
-    source redelivery removed at read by :func:`stream_sink_results`
-    on (q_id, rnk)); unset is the DEMO accumulate view whose per-batch
-    cost grows with history.
+    Sink (round-10 item 1): same contract as
+    :func:`semantic_dedup_stream` — delta-only append to ``sink_dir``
+    (per-batch cost O(|batch|·k), flat over stream life, batch-replay
+    idempotent by per-partition overwrite, source redelivery removed at
+    read by :func:`stream_sink_results` on (q_id, rnk)).
 
     stream == batch by construction: each micro-batch runs EXACTLY the
     batch operator's rank stage (``operators/similarity
@@ -590,44 +523,20 @@ def ann_serve_stream(
     corpus-size-independent at constant occupancy; the broadcast router
     is K+√K rows and the base side reads from its persisted
     posting-list form. Returns the started query."""
+    from ..operators.similarity import _append_base_assignment, ann_serve_rows
+
     spark = vec_stream.sparkSession
-    w = vec_stream.writeStream.outputMode("append").foreachBatch(
-        ann_serve_batch_fn(spark, sf_dir, name, sink_dir)
+    base_a = _append_base_assignment(spark, sf_dir)
+    return _start_foreach_batch(
+        vec_stream,
+        _frozen_router_batch_fn(
+            spark,
+            sf_dir,
+            sink_dir,
+            lambda routed: ann_serve_rows(base_a, routed),
+        ),
+        checkpoint_dir,
     )
-    if checkpoint_dir is not None:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
-
-
-def ivf_index_append_batch_fn(spark, sf_dir: str, sink_dir: str):
-    """The foreachBatch body of :func:`ivf_index_append_stream`: route
-    the micro-batch through the FROZEN base-trained router and append
-    its (vec_id, cent_id, shard, sim) posting-list rows — EXACTLY the
-    batch rule of ``q_ivf_index_append`` (frozen centroids, frozen
-    per-cell split widths, cosine to the chosen centroid) — to the
-    delta sink. ``sim`` is stored RAW (riders round): the drift audit
-    aggregates it decimal-exact."""
-    from ..functions.vectors import as_double, cosine
-    from ..operators.similarity import _append_index, _route_assign
-
-    ix = _append_index(spark, sf_dir)
-
-    def _append(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        bv = batch.select(
-            "vec_id", as_double(F.col("embedding")).alias("v")
-        )
-        routed = _route_assign(bv, ix.coarse_arr, ix.groups, ix.pcm, ix.wmax)
-        out = routed.join(F.broadcast(ix.cents), "cent_id").select(
-            "vec_id",
-            "cent_id",
-            "shard",
-            cosine(F.col("v"), F.col("cv")).alias("sim"),
-        )
-        _append_delta_sink(out, sink_dir, batch_id)
-
-    return _append
 
 
 def ivf_index_append_stream(
@@ -641,35 +550,49 @@ def ivf_index_append_stream(
     routed per micro-batch through the FROZEN base-trained two-level
     router (all broadcast state — K+√K router rows plus the ≤K-row
     per-cell width map; no retraining, no re-split) and their
-    (cent_id, shard) posting-list assignments are appended DELTA-ONLY
-    to ``sink_dir`` — so route (this), audit (drift), filter
+    (vec_id, cent_id, shard, sim) posting-list assignments are appended
+    DELTA-ONLY to ``sink_dir`` — so route (this), audit (drift), filter
     (dedup-at-ingest), and answer (serve) ALL run continuously, the
     reference's everything-streaming posture applied to the index
-    lifecycle itself.
+    lifecycle itself. ``sim`` is the cosine to the chosen centroid,
+    stored RAW: the drift audit aggregates it decimal-exact.
 
     stream == batch by construction: each batch applies EXACTLY
-    ``q_ivf_index_append``'s rule (a vector's assignment depends only
-    on its own content + the frozen index), pinned by parity tests.
-    Idempotency is the delta-sink contract: batch replay overwrites its
-    own partition, source redelivery reproduces identical rows removed
-    at read by :func:`stream_sink_results` on ``vec_id``. The grown
-    index is the base posting lists UNION the sink read — and the
-    drift audit runs off it unchanged
-    (``operators/similarity.drift_audit_rows``), so the "when to
-    rebuild" alarm works on a continuously-grown index too.
+    ``q_ivf_index_append``'s rule (frozen centroids, frozen per-cell
+    split widths — a vector's assignment depends only on its own
+    content + the frozen index), pinned by parity tests. Idempotency
+    is the delta-sink contract: batch replay overwrites its own
+    partition, source redelivery reproduces identical rows removed at
+    read by :func:`stream_sink_results` on ``vec_id``. The grown index
+    is the base posting lists UNION the sink read — and the drift audit
+    runs off it unchanged (``operators/similarity.drift_audit_rows``),
+    so the "when to rebuild" alarm works on a continuously-grown index
+    too.
 
     Cost shape at 100 TB: per batch, |batch| routing folds against
     broadcast state and an O(|batch|) append — linear in the arrival
-    batch, independent of both corpus size and stream lifetime (the
-    accumulate-view trap does not apply: nothing re-reads history on
-    the hot path). Returns the started query."""
+    batch, independent of both corpus size and stream lifetime
+    (nothing re-reads history on the hot path). Returns the started
+    query."""
+    from ..functions.vectors import cosine
+    from ..operators.similarity import _append_index
+
     spark = vec_stream.sparkSession
-    w = vec_stream.writeStream.outputMode("append").foreachBatch(
-        ivf_index_append_batch_fn(spark, sf_dir, sink_dir)
+    cents = _append_index(spark, sf_dir).cents
+
+    def _rows(routed: DataFrame) -> DataFrame:
+        return routed.join(F.broadcast(cents), "cent_id").select(
+            "vec_id",
+            "cent_id",
+            "shard",
+            cosine(F.col("v"), F.col("cv")).alias("sim"),
+        )
+
+    return _start_foreach_batch(
+        vec_stream,
+        _frozen_router_batch_fn(spark, sf_dir, sink_dir, _rows),
+        checkpoint_dir,
     )
-    if checkpoint_dir is not None:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    return w.start()
 
 
 def funnel_stream(
@@ -812,6 +735,22 @@ def dq_monitor_stream(
     )
 
 
+def _merge_view(spark, view: str, delta: DataFrame, batch_id: int, merge):
+    """The incremental-MV step of the view-publishing streams: fold this
+    batch's partials ``delta`` into the partials held in global temp
+    view ``view`` (``merge`` re-aggregates their union), republish the
+    result under ``view`` and return it.
+
+    Batch 0 == a (re)started query: any ``view`` left by a previous run
+    under the same name is dropped first — merging stale partials into
+    a fresh run would silently double-count every cell."""
+    if batch_id == 0:
+        spark.catalog.dropGlobalTempView(view)
+    if any(t.name == view for t in spark.catalog.listTables("global_temp")):
+        delta = merge(spark.table(f"global_temp.{view}").unionByName(delta))
+    return publish_view(delta, view)
+
+
 def ts_similarity_stream(
     events: DataFrame,
     ts_col: str = "ts",
@@ -836,37 +775,21 @@ def ts_similarity_stream(
     shuffles, NOT the raw stream."""
     spark = events.sparkSession
     events = _event_time(events, ts_col)
-    cells_view = f"{name}_cells"
 
     def _step(batch: DataFrame, batch_id: int) -> None:
         delta = batch.groupBy(
             F.col(user_col).alias("user_id"),
             F.date_trunc("hour", F.col(ts_col)).alias("hour"),
         ).agg(F.count("*").alias("cnt"))
-        # batch 0 == a (re)started query: drop any cells view left by a
-        # previous run under the same name — merging stale counts into
-        # a fresh run would silently double-count every cell and
-        # corrupt every downstream correlation
-        if batch_id == 0:
-            spark.catalog.dropGlobalTempView(cells_view)
-        existing = [
-            t.name
-            for t in spark.catalog.listTables("global_temp")
-            if t.name == cells_view
-        ]
-        if existing:
-            delta = (
-                spark.table(f"global_temp.{cells_view}")
-                .unionByName(delta)
-                .groupBy("user_id", "hour")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        from ..caches import swap_view_checkpoint
-
-        cells = delta.localCheckpoint(eager=True)
-        cells.createOrReplaceGlobalTempView(cells_view)
-        swap_view_checkpoint(cells, cells_view)
-
+        cells = _merge_view(
+            spark,
+            f"{name}_cells",
+            delta,
+            batch_id,
+            lambda both: both.groupBy("user_id", "hour").agg(
+                F.sum("cnt").alias("cnt")
+            ),
+        )
         grid = cells.select(F.count_distinct("hour").alias("n"))
         stats = cells.groupBy("user_id").agg(
             F.sum("cnt").alias("sx"),
@@ -905,15 +828,9 @@ def ts_similarity_stream(
             )
             .select("user_id", F.round(corr, 6).alias("corr"))
         )
-        ck_out = out.localCheckpoint(eager=True)
-        ck_out.createOrReplaceGlobalTempView(name)
-        swap_view_checkpoint(ck_out, name)
+        publish_view(out, name)
 
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(_step)
-        .start()
-    )
+    return _start_foreach_batch(events, _step)
 
 
 _BITMAP_STREAM_WORD_BITS = 63
@@ -944,7 +861,6 @@ def bitmap_distinct_stream(
     restart-reset convention shared with ``ts_similarity_stream``."""
     spark = events.sparkSession
     events = _event_time(events, ts_col)
-    words_view = f"{name}_words"
     bits = _BITMAP_STREAM_WORD_BITS
 
     def _step(batch: DataFrame, batch_id: int) -> None:
@@ -961,37 +877,21 @@ def bitmap_distinct_stream(
             .groupBy("event_type", "word_id")
             .agg(F.bit_or("bit").alias("word"))
         )
-        if batch_id == 0:
-            spark.catalog.dropGlobalTempView(words_view)
-        existing = [
-            t.name
-            for t in spark.catalog.listTables("global_temp")
-            if t.name == words_view
-        ]
-        if existing:
-            delta = (
-                spark.table(f"global_temp.{words_view}")
-                .unionByName(delta)
-                .groupBy("event_type", "word_id")
-                .agg(F.bit_or("word").alias("word"))
-            )
-        from ..caches import swap_view_checkpoint
-
-        words = delta.localCheckpoint(eager=True)
-        words.createOrReplaceGlobalTempView(words_view)
-        swap_view_checkpoint(words, words_view)
+        words = _merge_view(
+            spark,
+            f"{name}_words",
+            delta,
+            batch_id,
+            lambda both: both.groupBy("event_type", "word_id").agg(
+                F.bit_or("word").alias("word")
+            ),
+        )
         out = words.groupBy("event_type").agg(
             F.sum(F.bit_count("word"))
             .cast("bigint")
             .alias("distinct_users"),
             F.count("*").cast("bigint").alias("bitmap_words"),
         )
-        ck_out = out.localCheckpoint(eager=True)
-        ck_out.createOrReplaceGlobalTempView(name)
-        swap_view_checkpoint(ck_out, name)
+        publish_view(out, name)
 
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(_step)
-        .start()
-    )
+    return _start_foreach_batch(events, _step)

@@ -10,7 +10,9 @@ stdlib with the SAME observable contract:
   a missing field → 400 ``{"error": "Missing fields in request data"}``;
   accepted → 200 ``{"status": "Emoji data queued"}``; a full queue →
   503 ``{"error": "Message queue is full"}`` (status codes and payload
-  shapes verbatim from api_server.py:55-64).
+  shapes verbatim from api_server.py:55-64); a declared body over
+  ``MAX_BODY_BYTES`` → 413 ``{"error": "Request body too large"}``,
+  unread, and the connection is closed.
 - a daemon flusher draining the queue in ≤``batch_max``-message /
   ``flush_interval``-second batches (api_server.py:25-27).
 
@@ -42,6 +44,8 @@ REQUIRED_FIELDS = ("user_id", "emoji_type", "timestamp")
 MAX_QUEUE = 10_000
 BATCH_MAX = 1_000
 FLUSH_INTERVAL = 0.5
+# largest request body read; the reference payload is under 200 bytes
+MAX_BODY_BYTES = 1 << 20
 
 
 class IngestGateway:
@@ -115,6 +119,14 @@ class IngestGateway:
                         # 400 unread and drop the connection after it
                         self.close_connection = True
                         raise ValueError(n)
+                    if n > MAX_BODY_BYTES:
+                        # reading a declared multi-GiB body would stall
+                        # the handler or exhaust its memory: answer 413
+                        # unread, and drop the connection since the
+                        # body's bytes are still on the wire
+                        self.close_connection = True
+                        self._json(413, {"error": "Request body too large"})
+                        return
                     data = json.loads(self.rfile.read(n) or b"null")
                 except (ValueError, json.JSONDecodeError):
                     data = None

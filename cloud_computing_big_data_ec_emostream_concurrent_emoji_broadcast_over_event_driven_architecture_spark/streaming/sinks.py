@@ -105,29 +105,24 @@ def start_topk_sink(
     recomputed per HTTP request). Rank functions aren't allowed directly
     on a streaming aggregation, so the rank runs inside ``foreachBatch``
     — per micro-batch, over the (small, window×key-sized) aggregate
-    output, never over raw events — and lands in an in-memory view named
-    ``query_name`` (the engine twin of the dashboard endpoint)."""
+    output, never over raw events — and is published as global temp
+    view ``query_name`` through :func:`caches.publish_view` (the engine
+    twin of the dashboard endpoint)."""
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
+
+    from ..caches import publish_view
 
     def rank_batch(batch_df: DataFrame, batch_id: int) -> None:
         w = W.partitionBy(window_col).orderBy(
             F.desc(order_col), F.asc(key_col)
         )
-        ranked = (
-            batch_df.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            # eager localCheckpoint MATERIALIZES the view's contents
-            # inside the micro-batch — a lazy temp view would re-execute
-            # the streaming state plan whenever it's next queried, which
-            # is both wrong (stale state) and rejected by the state
-            # store's commit validation
-            .localCheckpoint(eager=True)
+        publish_view(
+            batch_df.withColumn("rank", F.row_number().over(w)).filter(
+                F.col("rank") <= k
+            ),
+            query_name,
         )
-        ranked.createOrReplaceGlobalTempView(query_name)
-        from ..caches import swap_view_checkpoint
-
-        swap_view_checkpoint(ranked, query_name)
 
     return (
         counts.writeStream.outputMode(output_mode)

@@ -22,6 +22,12 @@ test can pin it to ``groupBy().agg()``:
 - optional event-time TTL: keys idle past the watermark by ``ttl`` are
   evicted (the reference's 3-minute deque eviction, analytical_server.py:
   49-52, generalized and watermark-driven instead of arrival-driven).
+
+Every per-key state in this module is held through
+``applyInPandasWithState``. Spark 4's ``transformWithStateInPandas``
+is not used: its Python worker speaks a protobuf protocol to the JVM
+state server and so needs ``google.protobuf``, and it would add a
+second state API with the same output.
 """
 
 from __future__ import annotations
@@ -116,113 +122,6 @@ def running_key_stats(
             outputMode="update",
             timeoutConf=timeout,
         )
-    )
-
-
-def running_key_stats_tws(
-    events: DataFrame,
-    key_col: str = "event_type",
-    value_col: str = "value",
-    ts_col: str = "ts",
-    watermark: str = "1 minute",
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """The same per-key running (count, sum) on ``transformWithState`` —
-    Spark 4's successor to applyInPandasWithState. The operator owns NAMED
-    state cells through a typed handle (here one ValueState) instead of a
-    single opaque tuple, composes multiple state shapes per key
-    (value/list/map), and supports processing/event-time timers via
-    ``timeMode``; state lives in the same per-key state store, so the
-    scale story (RocksDB provider, key-partitioned) is unchanged. Kept
-    semantically identical to :func:`running_key_stats` so one batch
-    equivalence test pins both APIs.
-
-    With ``ttl_ms`` set the processor mirrors
-    :func:`running_key_stats`'s event-time TTL through TWS's own timer
-    surface: each batch re-arms a per-key timer at watermark + ttl
-    (deleting the previous one — TWS timers don't auto-replace the way
-    ``setTimeoutTimestamp`` does), and ``handleExpiredTimer`` emits the
-    final ``evicted=true`` row and clears the state cell.
-
-    Environment notes: requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``) and the
-    ``google.protobuf`` package for its driver-side schema worker — the
-    test suite skips (rather than fails) where protobuf isn't bundled."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._stats = handle.getValueState(
-                "stats", "n BIGINT, total DOUBLE"
-            )
-            if ttl_ms is not None:
-                # the currently-armed expiry, so the next batch can
-                # delete-then-re-arm instead of stacking stale timers
-                self._armed = handle.getValueState("armed", "t BIGINT")
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timerValues: Any
-        ) -> Iterator[pd.DataFrame]:
-            n, total = (
-                self._stats.get() if self._stats.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf[value_col].sum())
-            self._stats.update((n, total))
-            if ttl_ms is not None:
-                new_expiry = timerValues.getCurrentWatermarkInMs() + ttl_ms
-                if self._armed.exists():
-                    (old,) = self._armed.get()
-                    if old != new_expiry:
-                        self._handle.deleteTimer(old)
-                self._handle.registerTimer(new_expiry)
-                self._armed.update((new_expiry,))
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                    "evicted": [False],
-                }
-            )
-
-        def handleExpiredTimer(
-            self, key: tuple, timerValues: Any, expiredTimerInfo: Any
-        ) -> Iterator[pd.DataFrame]:
-            if not self._stats.exists():
-                return
-            n, total = self._stats.get()
-            self._stats.clear()
-            if ttl_ms is not None and self._armed.exists():
-                self._armed.clear()
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                    "evicted": [True],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    stream = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    if ttl_ms is not None:
-        stream = stream.withWatermark(ts_col, watermark)
-    return stream.groupBy(F.col(key_col)).transformWithStateInPandas(
-        statefulProcessor=RunningStats(),
-        outputStructType=(
-            "key STRING, n_events BIGINT, total_value DOUBLE, "
-            "evicted BOOLEAN"
-        ),
-        outputMode="update",
-        timeMode="none" if ttl_ms is None else "eventTime",
     )
 
 
@@ -341,13 +240,11 @@ def growth_flows_stream(
 
     CHURN is deliberately absent from THIS form: a churn row is the
     OBSERVATION OF ABSENCE (no activity by end of day d+1), which
-    streaming can only emit from a timer sweep. The churn-complete
-    twins are :func:`growth_flows_churn_stream` (event-time timeouts,
-    runs everywhere) and :func:`growth_flows_timer_stream` (Spark 4
-    ``transformWithStateInPandas`` timers, gated by
-    :func:`timer_backend_available`); this timer-free variant remains
-    for pipelines that only need the real-time
-    new/retained/resurrected counters with zero timeout bookkeeping.
+    streaming can only emit from a timer sweep. The churn-complete twin
+    is :func:`growth_flows_churn_stream` (event-time timeouts); this
+    timer-free variant remains for pipelines that only need the
+    real-time new/retained/resurrected counters with zero timeout
+    bookkeeping.
 
     In-order replay reproduces the batch classification exactly (rows
     are sorted by (ts, event_id) within each micro-batch; pinned in
@@ -405,26 +302,6 @@ def growth_flows_stream(
 _DAY_MS = 86_400 * 1_000
 
 
-def timer_backend_available() -> tuple[bool, str]:
-    """Observable gate for the ``transformWithStateInPandas`` timer
-    backend, mirroring the Kafka connector gate: the Spark 4 stateful
-    processor speaks a protobuf wire protocol to its JVM state server
-    (``pyspark/sql/streaming/proto/StateMessage_pb2.py``), so without
-    ``google.protobuf`` the driver-side pre-init worker crashes before
-    the first batch. Tests skip with THIS reason instead of an opaque
-    ``STREAM_FAILED``; :func:`growth_flows_churn_stream` is the
-    certified substitute that needs no protobuf."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        return False, (
-            "google.protobuf not installed: transformWithStateInPandas "
-            "state-server protocol unavailable in this environment "
-            "(growth_flows_churn_stream is the certified substitute)"
-        )
-    return True, ""
-
-
 def growth_flows_churn_stream(
     events: DataFrame,
     ts_col: str = "ts",
@@ -433,9 +310,7 @@ def growth_flows_churn_stream(
     """CHURN-COMPLETE streaming growth accounting on the
     ``applyInPandasWithState`` backend via **event-time timeouts**
     (``GroupStateTimeout.EventTimeTimeout``) — closes the declared
-    batch/stream asymmetry of :func:`growth_flows_stream` without the
-    protobuf-backed ``transformWithStateInPandas`` path (see
-    :func:`timer_backend_available`).
+    batch/stream asymmetry of :func:`growth_flows_stream`.
 
     Churn is the observation of ABSENCE: ``churned(d) ⇔ active(d−1) ∧
     ¬active(d)``. Three emission paths cover every way absence becomes
@@ -552,116 +427,4 @@ def growth_flows_churn_stream(
         stateStructType=state_schema,
         outputMode="update",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def growth_flows_timer_stream(
-    events: DataFrame,
-    ts_col: str = "ts",
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
-    """CHURN-COMPLETE streaming growth accounting via EVENT-TIME TIMERS
-    (``transformWithStateInPandas``, Spark 4) — closes the one declared
-    batch/stream asymmetry of :func:`growth_flows_stream`: churn is the
-    observation of ABSENCE (no activity through end of day L+1), which
-    only a timer sweep can emit.
-
-    Per-user state is still one integer (last active day). Every
-    activity (re)arms a single event-time timer at the start of day
-    L+2 = the end of the user's churn-observation window; when the
-    WATERMARK passes it without new activity the timer fires and emits
-    ``(user, L+1, "churned")`` — exactly the batch identity
-    ``churned(d) ⇔ active(d−1) ∧ ¬active(d)``. New activity first
-    deletes the stale timer, so a retained user never churns, and a
-    comeback after a fired churn classifies ``resurrected`` — matching
-    the batch lag() classification row for row (pinned in
-    tests/test_streaming_timers.py by replaying multi-day fixtures and
-    diffing against the batch window).
-
-    Needs the RocksDB state store provider (the transformWithState
-    backend), ``google.protobuf`` for the state-server wire protocol
-    (check :func:`timer_backend_available` — in protobuf-less
-    environments :func:`growth_flows_churn_stream` is the certified
-    substitute with identical output), and an event-time watermark on
-    ``ts_col``; churn for day d emits once the watermark passes
-    end-of-day d — the final fixture day's churn stays open until
-    later data closes it, the correct streaming reading of "absence
-    not yet observable".
-
-    At 100 TB: state is 8 bytes + one timer per active user, RocksDB
-    keeps it off-heap, and the timer sweep is the state store's own
-    range scan — no per-batch full-keyspace pass."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _GrowthTimerProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._last = handle.getValueState("last_day", "last_day long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            last_day = None
-            if self._last.exists():
-                last_day = self._last.get()[0]
-            out_day, out_flow = [], []
-            pdf = pd.concat(list(rows)).sort_values(["ts", "event_id"])
-            for row in pdf.itertuples():
-                d = int(row.ts.value // 1_000) // _US_PER_DAY
-                if last_day is None:
-                    flow = "new"
-                elif d == last_day:
-                    continue
-                elif d == last_day + 1:
-                    flow = "retained"
-                elif d > last_day:
-                    flow = "resurrected"
-                else:
-                    continue
-                out_day.append(d)
-                out_flow.append(flow)
-                last_day = d
-            if last_day is not None:
-                self._last.update((last_day,))
-                # re-arm the absence watch: one live timer per user at
-                # start-of-day last+2 (== end of churn window last+1)
-                for t in self._handle.listTimers():
-                    self._handle.deleteTimer(t)
-                self._handle.registerTimer((last_day + 2) * _DAY_MS)
-            if out_day:
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]] * len(out_day),
-                        "day_num": out_day,
-                        "flow": out_flow,
-                    }
-                )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            churn_day = expiredTimerInfo.getExpiryTimeInMs() // _DAY_MS - 1
-            last_day = self._last.get()[0] if self._last.exists() else None
-            # fire only if the state still says "last active the day
-            # before the churn day" — a stale timer the delete missed
-            # (or a race with same-batch activity) must not double-emit
-            if last_day is not None and last_day == churn_day - 1:
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]],
-                        "day_num": [churn_day],
-                        "flow": ["churned"],
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    stream = events.withColumn(
-        ts_col, F.col(ts_col).cast("timestamp")
-    ).withWatermark(ts_col, watermark_delay)
-    return stream.groupBy(F.col("user_id")).transformWithStateInPandas(
-        _GrowthTimerProcessor(),
-        outputStructType=GROWTH_FLOW_SCHEMA,
-        outputMode="update",
-        timeMode="eventTime",
     )

@@ -1,8 +1,7 @@
-"""Per-batch wall soak for the streaming dedup-at-ingest sinks
-(round-10 verdict item 1's done bar): run ``semantic_dedup_stream``
-over ≥100 micro-batches and measure whether per-batch wall is FLAT
-(the delta-append sink form) or GROWS with accumulated history (the
-demo accumulate-view form — the round-9 verdict's O(total²) finding).
+"""Per-batch wall soak for the streaming dedup-at-ingest sink
+(round-10 verdict item 1's done bar): run ``semantic_dedup_stream``'s
+foreachBatch body over ≥100 micro-batches and measure whether its
+per-batch wall on the delta-append sink stays FLAT as history grows.
 
 Method: every batch is the SAME number of fresh vectors (base-slice
 vectors re-keyed per batch so each is guaranteed to near-dup a standing
@@ -10,8 +9,8 @@ corpus member — constant result rows per batch, so any wall trend is
 the sink's, not the workload's). Reports the mean per-batch wall of an
 early window vs a late window and their ratio; flat ⇒ ratio ≈ 1.
 
-Usage: python scripts/stream_sink_soak.py [sink|view] [n_batches]
-Prints one JSON line per form run.
+Usage: python scripts/stream_sink_soak.py [n_batches]
+Prints one JSON line.
 """
 
 from __future__ import annotations
@@ -32,7 +31,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SOAK_SF_DIR", "/root/testdata/sf0.01")
 BATCH_ROWS = 500
 
 
-def run(form: str, n_batches: int) -> dict:
+def run(n_batches: int) -> dict:
     from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.catalog import (  # noqa: E501
         table,
     )
@@ -43,14 +42,14 @@ def run(form: str, n_batches: int) -> dict:
     cores = os.environ.get("SPARK_GRAFT_CPUS", "8")
     spark = (
         SparkSession.builder.master(f"local[{cores}]")
-        .appName(f"stream_sink_soak_{form}")
+        .appName("stream_sink_soak")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    work = tempfile.mkdtemp(prefix=f"sink_soak_{form}_")
+    work = tempfile.mkdtemp(prefix="sink_soak_")
     spool = os.path.join(work, "spool")
     sink = os.path.join(work, "sink")
     ckpt = os.path.join(work, "ckpt")
@@ -76,12 +75,7 @@ def run(form: str, n_batches: int) -> dict:
             "append"
         ).parquet(spool)
 
-    inner = semantic_dedup_batch_fn(
-        spark,
-        SF_DIR,
-        name="soak_view",
-        sink_dir=sink if form == "sink" else None,
-    )
+    inner = semantic_dedup_batch_fn(spark, SF_DIR, sink)
     walls: list[float] = []
 
     def timed(batch, batch_id):
@@ -109,7 +103,6 @@ def run(form: str, n_batches: int) -> dict:
     late = walls[-20:]
     mean = lambda xs: sum(xs) / len(xs)  # noqa: E731
     out = {
-        "form": form,
         "sf_dir": SF_DIR,
         "batches": len(walls),
         "rows_per_batch": BATCH_ROWS,
@@ -125,10 +118,8 @@ def run(form: str, n_batches: int) -> dict:
 
 
 def main() -> None:
-    forms = [sys.argv[1]] if len(sys.argv) > 1 else ["sink", "view"]
-    n = int(sys.argv[2]) if len(sys.argv) > 2 else 110
-    for form in forms:
-        print(json.dumps(run(form, n)), flush=True)
+    n = int(sys.argv[1]) if len(sys.argv) > 1 else 110
+    print(json.dumps(run(n)), flush=True)
 
 
 if __name__ == "__main__":

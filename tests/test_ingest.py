@@ -11,6 +11,8 @@ import urllib.error
 import urllib.request
 from collections import Counter
 
+import pytest
+
 from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.core import (
     windowed_counts_scaled,
 )
@@ -78,6 +80,34 @@ def test_negative_content_length_gets_400_without_waiting(tmp_path):
             status = s.recv(64).split(b"\r\n", 1)[0]
             assert time.monotonic() - t0 < 2.0
         assert status.split()[1] == b"400", status
+        assert gw.accepted_count == 0
+    finally:
+        gw.close()
+
+
+@pytest.mark.parametrize("declared", [1 << 30, 1 << 45], ids=["1GiB", "2^45"])
+def test_oversized_content_length_gets_413_without_reading(tmp_path, declared):
+    # a declared body far over the cap must be refused unread: reading
+    # 1 GiB stalls the handler, and 2^45 bytes raises MemoryError
+    gw = IngestGateway(str(tmp_path / "spool")).serve_background()
+    try:
+        with socket.create_connection(("127.0.0.1", gw.port), timeout=2) as s:
+            t0 = time.monotonic()
+            s.sendall(
+                b"POST /send_emoji HTTP/1.1\r\n"
+                b"Host: localhost\r\n"
+                b"Content-Type: application/json\r\n"
+                b"Content-Length: %d\r\n"
+                b"Connection: keep-alive\r\n\r\n" % declared
+                + json.dumps(WIRE).encode()[:48]
+            )
+            reply = b""
+            while chunk := s.recv(4096):
+                reply += chunk
+            assert time.monotonic() - t0 < 2.0
+        head, _, body = reply.partition(b"\r\n\r\n")
+        assert head.split(b"\r\n", 1)[0].split()[1] == b"413", head
+        assert json.loads(body) == {"error": "Request body too large"}
         assert gw.accepted_count == 0
     finally:
         gw.close()

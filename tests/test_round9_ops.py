@@ -232,72 +232,6 @@ def test_ingest_dedup_reports_argmax_match(spark, sf_dir):
     assert not bad, bad[:5]
 
 
-def test_semantic_dedup_stream_equals_batch(spark, sf_dir, tmp_path):
-    """Round-9 item 3: the streaming dedup-at-ingest converges to the
-    batch q_dedup_ingest_incremental result exactly (same planted
-    fixture slice replayed as a 3-file stream through the same frozen
-    router), and REDELIVERY of a whole slice changes nothing."""
-    import uuid
-
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.catalog import (
-        table,
-    )
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.similarity import (
-        IVF_APPEND_DEN,
-        IVF_APPEND_NUM,
-        q_dedup_ingest_incremental,
-    )
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.core import (
-        semantic_dedup_stream,
-    )
-
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    n = emb.count()
-    t = (IVF_APPEND_NUM * n) // IVF_APPEND_DEN
-    delta = emb.filter(F.col("vec_id") >= t)
-
-    directory = str(tmp_path / "vec_replay")
-    rows = delta.collect()
-    schema = delta.schema
-    per = max(1, len(rows) // 3)
-    chunks = [rows[i : i + per] for i in range(0, len(rows), per)]
-    for chunk in chunks:
-        spark.createDataFrame(chunk, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(directory)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(directory)
-    )
-    name = f"semdd_{uuid.uuid4().hex[:8]}"
-    q = semantic_dedup_stream(stream, sf_dir, name)
-    q.processAllAvailable()
-
-    def view_rows():
-        return {
-            r.doc_id: (r.cent_id, r.matched_doc_id, r.max_sim)
-            for r in spark.sql(
-                f"SELECT * FROM global_temp.{name}"
-            ).collect()
-        }
-
-    expected = {
-        r.doc_id: (r.cent_id, r.matched_doc_id, r.max_sim)
-        for r in q_dedup_ingest_incremental(spark, sf_dir).collect()
-    }
-    assert expected, "fixture must produce ingest near-dups"
-    assert view_rows() == expected
-
-    # redeliver the first chunk (at-least-once source): nothing changes
-    spark.createDataFrame(chunks[0], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(directory)
-    q.processAllAvailable()
-    q.stop()
-    assert view_rows() == expected
-
-
 def test_index_stats_buckets_are_cent_shard(spark, sf_dir, duck):
     """q_ivf_index_stats now audits EFFECTIVE buckets (cent, shard);
     below the cap that equals the per-cent stats (shard == 0
@@ -480,72 +414,6 @@ def test_adaptive_shard_bounds_hot_cells(spark, sf_dir, monkeypatch):
         assert 0 <= r.shard < (1 << pcm[r.cent_id]), r
     assert any(pc > 0 for pc in pcm.values())  # the tier engaged
     assert any(r.shard > 0 for r in rows)
-
-
-def test_ann_serve_stream_equals_batch(spark, sf_dir, tmp_path):
-    """Search-at-ingest: the streaming ANN serving twin converges to
-    the batch q_ann_serve_incremental result exactly (the delta slice
-    replayed as a 3-file stream through the same frozen router), and
-    REDELIVERY of a whole slice changes nothing."""
-    import uuid
-
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.catalog import (
-        table,
-    )
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.similarity import (
-        IVF_APPEND_DEN,
-        IVF_APPEND_NUM,
-        q_ann_serve_incremental,
-    )
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.core import (
-        ann_serve_stream,
-    )
-
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    n = emb.count()
-    t = (IVF_APPEND_NUM * n) // IVF_APPEND_DEN
-    delta = emb.filter(F.col("vec_id") >= t)
-
-    directory = str(tmp_path / "ann_replay")
-    rows = delta.collect()
-    schema = delta.schema
-    per = max(1, len(rows) // 3)
-    chunks = [rows[i : i + per] for i in range(0, len(rows), per)]
-    for chunk in chunks:
-        spark.createDataFrame(chunk, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(directory)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(directory)
-    )
-    name = f"annsv_{uuid.uuid4().hex[:8]}"
-    q = ann_serve_stream(stream, sf_dir, name)
-    q.processAllAvailable()
-
-    def view_rows():
-        return {
-            (r.q_id, r.rnk): (r.vec_id, r.sim)
-            for r in spark.sql(
-                f"SELECT * FROM global_temp.{name}"
-            ).collect()
-        }
-
-    expected = {
-        (r.q_id, r.rnk): (r.vec_id, r.sim)
-        for r in q_ann_serve_incremental(spark, sf_dir).collect()
-    }
-    assert expected, "fixture must produce serving answers"
-    assert view_rows() == expected
-
-    # redeliver the first chunk (at-least-once source): nothing changes
-    spark.createDataFrame(chunks[0], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(directory)
-    q.processAllAvailable()
-    q.stop()
-    assert view_rows() == expected
 
 
 def test_residual_pq_invariants(spark, sf_dir):

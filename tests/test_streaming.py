@@ -669,63 +669,6 @@ def test_ohlc_stream_equals_batch(spark, events_df, replay_dir):
     assert got == expected
 
 
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's Python worker requires google.protobuf "
-    "(not bundled in this environment; the operator is config-complete "
-    "and this test pins it wherever protobuf is present)",
-)
-def test_transform_with_state_equals_batch(spark, events_df, replay_dir):
-    """transformWithStateInPandas (Spark 4 stateful API) running stats:
-    final update-mode emission per key equals the batch groupBy — same
-    pin as the applyInPandasWithState twin, newer state API."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.stateful import (
-        running_key_stats_tws,
-    )
-
-    directory, schema = replay_dir
-    stream = file_replay_stream(spark, directory, schema)
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    # transformWithState requires the RocksDB state store provider
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        _run_to_completion(running_key_stats_tws(stream), name, "update")
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    rows = spark.sql(f"SELECT * FROM {name}").collect()
-    last: dict[str, tuple] = {}
-    for r in rows:
-        prev = last.get(r["key"])
-        if prev is None or r["n_events"] > prev[0]:
-            last[r["key"]] = (r["n_events"], r["total_value"])
-    expected = {
-        r["event_type"]: (r["n"], r["total"])
-        for r in events_df.groupBy("event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    assert set(last) == set(expected)
-    for k, (n, total) in expected.items():
-        assert last[k][0] == n
-        assert last[k][1] == pytest.approx(total, rel=1e-9)
-
-
 def test_ohlc_append_late_candle_correction(spark, tmp_path):
     """Append-mode OHLC with scripted lateness: a late row that arrives
     while its candle is still open (within watermark) corrects the candle
@@ -964,59 +907,6 @@ def test_windowed_distinct_users_stream_equals_batch(
         assert abs(est - exact[w]) / exact[w] <= 0.05, (w, est, exact[w])
 
 
-def test_bloom_probe_stream_equals_batch(spark, sf_dir, tmp_path):
-    """The stream-static Bloom probe over replayed documents converges
-    to the batch q_dedup_bloom_shingles result exactly (per micro-batch
-    it IS the batch plan; no cross-batch state)."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.catalog import (
-        table as cat_table,
-    )
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.corpus import (
-        bloom_bits,
-        q_dedup_bloom_shingles,
-        shingle_rows,
-    )
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.core import (
-        bloom_probe_stream,
-    )
-
-    docs = cat_table(spark, sf_dir, "documents").select("doc_id", "text")
-    seen_bits = bloom_bits(
-        shingle_rows(docs.filter(F.col("doc_id") % 2 == 0))
-    ).localCheckpoint(eager=True)
-    probe_docs = docs.filter(F.col("doc_id") % 2 == 1)
-
-    # replay the probe half as a 3-file stream
-    directory = str(tmp_path / "docs_replay")
-    rows = probe_docs.collect()
-    schema = probe_docs.schema
-    per = max(1, len(rows) // 3)
-    for i in range(0, len(rows), per):
-        spark.createDataFrame(rows[i : i + per], schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(directory)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(directory)
-    )
-
-    name = f"bloomp_{uuid.uuid4().hex[:8]}"
-    q = bloom_probe_stream(stream, seen_bits, name)
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        r["doc_id"]: (r["n_shingles"], r["n_seen"], r["seen_ratio"])
-        for r in spark.sql(f"SELECT * FROM global_temp.{name}").collect()
-    }
-    expected = {
-        r["doc_id"]: (r["n_shingles"], r["n_seen"], r["seen_ratio"])
-        for r in q_dedup_bloom_shingles(spark, sf_dir).collect()
-    }
-    assert got == expected
-    assert len(got) > 0
-
-
 def test_funnel_stream_chained_joins(spark, tmp_path):
     """Chained stream-stream joins complete the funnel only for users
     whose steps arrive in order within the window: user 7 completes,
@@ -1108,158 +998,6 @@ def test_stateful_checkpoint_recovery_resumes_state(
     assert set(last) == set(expected)
     for k, (n, total) in expected.items():
         assert last[k][0] == n, f"{k}: resumed count {last[k][0]} != {n}"
-        assert last[k][1] == pytest.approx(total, rel=1e-9)
-
-
-def _ttl_batches_dir(sess, events_df, tmp_path):
-    """3 scripted micro-batches: key 'a' goes idle after batch 1 while
-    'b' keeps advancing the watermark past a's last activity + ttl."""
-    import datetime as _dt
-
-    rows = events_df.limit(0)
-    mk = lambda i, typ, minute: (  # noqa: E731
-        i,
-        _dt.datetime(2024, 1, 1, 12, minute, 0),
-        1,
-        typ,
-        1.0,
-    )
-    batches = [
-        [mk(1, "a", 0), mk(2, "b", 0)],
-        [mk(3, "b", 30)],
-        [mk(4, "b", 59)],
-    ]
-    flat = tmp_path / f"twsflat_{uuid.uuid4().hex[:8]}"
-    flat.mkdir()
-    out = tmp_path / f"twsb_{uuid.uuid4().hex[:8]}"
-    out.mkdir()
-    idx = 0
-    for i, batch in enumerate(batches):
-        sess.createDataFrame(batch, rows.schema).coalesce(1).write.parquet(
-            str(out / f"b{i}")
-        )
-    for sub in sorted(out.iterdir()):
-        for f in sorted(sub.glob("*.parquet")):
-            f.rename(flat / f"{idx:02d}.parquet")
-            idx += 1
-    return str(flat), rows.schema
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's Python worker requires google.protobuf "
-    "(not bundled here; this pins TWS timer-driven TTL wherever it is)",
-)
-def test_tws_ttl_evicts_idle_keys(spark, events_df, tmp_path):
-    """transformWithState event-time TTL via registered timers: idle key
-    'a' is evicted with a final evicted=true row once the watermark
-    passes its last activity + ttl — mirror of the APWS TTL pin."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.stateful import (
-        running_key_stats_tws,
-    )
-
-    directory, schema = _ttl_batches_dir(
-        events_df.sparkSession, events_df, tmp_path
-    )
-    stream = file_replay_stream(spark, directory, schema, 1)
-    name = f"twsttl_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        _run_to_completion(
-            running_key_stats_tws(
-                stream, watermark="0 seconds", ttl_ms=5 * 60 * 1000
-            ),
-            name,
-            "update",
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-    emitted = spark.sql(f"SELECT * FROM {name}").collect()
-    evicted = [r for r in emitted if r["evicted"]]
-    assert any(r["key"] == "a" for r in evicted)
-    a_final = [r for r in evicted if r["key"] == "a"][0]
-    assert a_final["n_events"] == 1
-    # the active key must NOT be evicted by a stale (un-rearmed) timer
-    assert not any(r["key"] == "b" for r in evicted)
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's Python worker requires google.protobuf "
-    "(not bundled here; this pins TWS checkpoint recovery wherever it is)",
-)
-def test_tws_checkpoint_recovery_resumes_state(
-    spark, events_df, replay_dir, tmp_path
-):
-    """transformWithState killed mid-stream and restarted from its
-    checkpoint resumes the per-key running stats — TWS mirror of the
-    APWS recovery pin above."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.stateful import (
-        running_key_stats_tws,
-    )
-
-    directory, schema = replay_dir
-    ckpt = str(tmp_path / f"twsckpt_{uuid.uuid4().hex[:8]}")
-    last: dict = {}
-
-    def capture(bdf, bid):
-        for r in bdf.collect():
-            prev = last.get(r["key"])
-            if prev is None or r["n_events"] > prev[0]:
-                last[r["key"]] = (r["n_events"], r["total_value"])
-
-    prev_conf = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-    def start():
-        stream = file_replay_stream(spark, directory, schema)
-        return (
-            running_key_stats_tws(stream)
-            .writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(capture)
-        )
-
-    try:
-        q = start().trigger(processingTime="0 seconds").start()
-        while len(q.recentProgress) < 2:
-            import time as _t
-
-            _t.sleep(0.2)
-        q.stop()
-        q2 = start().trigger(availableNow=True).start()
-        q2.awaitTermination()
-    finally:
-        if prev_conf is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_conf
-            )
-
-    expected = {
-        r["event_type"]: (r["n"], r["total"])
-        for r in events_df.groupBy("event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    assert set(last) == set(expected)
-    for k, (n, total) in expected.items():
-        assert last[k][0] == n
         assert last[k][1] == pytest.approx(total, rel=1e-9)
 
 
