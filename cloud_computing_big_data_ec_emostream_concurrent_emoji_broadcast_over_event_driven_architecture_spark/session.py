@@ -21,6 +21,28 @@ Design decisions (SURVEY.md §4):
   therefore list on the driver; any other master keeps Spark's default
   so a cluster still fans the listing of a large partitioned table out
   over its executors.
+- A ``local[...]`` master commits checkpoint files through Hadoop's
+  ``FileSystem`` API, not its ``FileContext`` API. Every micro-batch
+  writes an offset-log entry, a commit-log entry, the file source's log
+  entry and one state delta per shuffle partition, each as a temp file
+  renamed into place. Without Hadoop's native library (``NativeIO``)
+  ``FileContext.rename`` on the local file system looks up the link
+  status of source and destination, and of their ``.crc`` siblings, and
+  each lookup forks a ``readlink`` process: on a 4-core host that put
+  ``walCommit`` at about 50 ms and ``commitOffsets`` at about 90 ms per
+  trigger. ``FileSystemBasedCheckpointFileManager`` keeps the same
+  protocol (write a temp file, check that the destination does not
+  exist, ``rename(2)``), so atomicity and the no-overwrite rule the
+  offset log relies on are unchanged, as are the checkpoint checksum
+  and ``.crc`` files. Other masters keep Spark's default, the
+  ``FileContext`` manager, whose no-overwrite rename is one atomic call
+  on HDFS.
+- ``spark.driver.memory`` defaults to 40% of the host's ``MemTotal``,
+  capped at 16g (``SPARK_GRAFT_DRIVER_MEM`` overrides it). The JVM's
+  resident size runs about a gigabyte above its heap, and the Python
+  workers of pandas UDFs need their own share: a 16g heap on a 16 GiB
+  host without swap let the test suite's JVM reach 11 GiB resident and
+  leave under 2 GiB of the host free, and one run lost its JVM.
 """
 
 from __future__ import annotations
@@ -28,6 +50,21 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Heap share of the host's physical memory, and its ceiling in MiB.
+_DRIVER_MEM_FRACTION = 0.4
+_DRIVER_MEM_CAP_MB = 16 * 1024
+
+
+def _default_driver_memory() -> str:
+    """``_DRIVER_MEM_FRACTION`` of the host's ``MemTotal``, capped at 16g;
+    16g where ``/proc/meminfo`` does not exist."""
+    try:
+        with open("/proc/meminfo", encoding="ascii") as f:
+            total_kb = int(f.readline().split()[1])  # "MemTotal: <n> kB"
+    except OSError:
+        return f"{_DRIVER_MEM_CAP_MB}m"
+    return f"{min(_DRIVER_MEM_CAP_MB, int(total_kb * _DRIVER_MEM_FRACTION) // 1024)}m"
 
 
 def build_session(
@@ -42,8 +79,13 @@ def build_session(
     ``master=None`` means ``local[$SPARK_GRAFT_CPUS]`` (32 cores when the
     variable is unset); the builder always sets a master, so to run on a
     cluster pass its URL (e.g. ``"yarn"``). ``shuffle_partitions``
-    defaults to ``$SPARK_GRAFT_CPUS``, and a ``local[...]`` master lists
-    files on the driver (module docstring).
+    defaults to ``$SPARK_GRAFT_CPUS``. A ``local[...]`` master lists
+    files on the driver and commits checkpoint files through the
+    ``FileSystem`` API, which renames without forking a ``readlink``
+    process per lookup when Hadoop's native library is absent (module
+    docstring). ``spark.driver.memory`` is ``$SPARK_GRAFT_DRIVER_MEM``,
+    else 40% of the host's memory capped at 16g, so the JVM cannot
+    outgrow a host without swap.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -58,18 +100,25 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.streaming.stopGracefullyOnShutdown", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()
+        ))
     )
     # Local mode: size the shuffle to the core count, not the 200 default.
     b = b.config(
         "spark.sql.shuffle.partitions", str(shuffle_partitions or int(cpus))
     )
     # Local mode (not ``local-cluster``, which has executor processes):
-    # list files on the driver, never via a Spark job.
+    # list files on the driver, never via a Spark job, and commit
+    # checkpoint files with FileSystem renames (module docstring).
     if master == "local" or master.startswith("local["):
         b = b.config(
             "spark.sql.sources.parallelPartitionDiscovery.threshold",
             str(2**31 - 1),
+        ).config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
         )
     if rocksdb_state_store:
         # Large streaming keyspaces (high-cardinality groupBy state, long

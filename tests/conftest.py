@@ -9,6 +9,7 @@ import os
 
 import duckdb
 import pytest
+from pyspark import SparkContext
 
 from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.catalog import (
     TABLES,
@@ -24,7 +25,28 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     s = build_session(app_name="engine_tests", shuffle_partitions=8)
     yield s
-    s.stop()
+    if _jvm_exit_code() is None:
+        s.stop()
+
+
+def _jvm_exit_code():
+    """The Spark JVM's exit code, or None while it runs (or before any
+    session launched it)."""
+    proc = getattr(SparkContext._gateway, "proc", None)
+    return None if proc is None else proc.poll()
+
+
+def pytest_runtest_logreport(report):
+    """Stop the run once the Spark JVM has exited: every later test that
+    needs the session would fail on the dead py4j connection and bury
+    the one that lost it under dozens of unrelated failures."""
+    code = _jvm_exit_code()
+    if code is not None:
+        pytest.exit(
+            f"Spark JVM exited with code {code} during {report.nodeid} "
+            f"({report.when}); stopping the run",
+            returncode=1,
+        )
 
 
 @pytest.fixture(scope="session")

@@ -12,6 +12,7 @@ import urllib.request
 from collections import Counter
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.core import (
     windowed_counts_scaled,
@@ -272,3 +273,34 @@ def test_backlog_drain_lists_files_without_a_spark_job(spark, tmp_path):
         " AS minute, cnt FROM backlog_drain"
     ).collect()
     assert {(r.emoji_type, r.minute): r.cnt for r in rows} == dict(tally)
+
+
+def test_local_checkpoint_files_commit_through_filesystem_renames(
+    spark, tmp_path
+):
+    """A local session commits checkpoint files through Hadoop's
+    FileSystem API, whose rename forks no ``readlink`` per link lookup
+    when the native library is absent. The commit protocol keeps its
+    guarantees: the file gets its ``.crc`` sibling, and a second
+    no-overwrite create of an existing file fails on close and leaves
+    the first version in place, which is how the offset log detects a
+    concurrent writer."""
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    target = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+    manager = (
+        jvm.org.apache.spark.sql.execution.streaming.checkpointing
+        .CheckpointFileManager.create(target.getParent(), conf)
+    )
+    assert manager.getClass().getSimpleName() == (
+        "FileSystemBasedCheckpointFileManager"
+    )
+    first = manager.createAtomic(target, False)
+    first.write(bytearray(b"v1"))
+    first.close()
+    second = manager.createAtomic(target, False)
+    second.write(bytearray(b"v2"))
+    with pytest.raises(Py4JJavaError, match="FileAlreadyExistsException"):
+        second.close()
+    assert (tmp_path / "0").read_bytes() == b"v1"
+    assert (tmp_path / ".0.crc").is_file()
