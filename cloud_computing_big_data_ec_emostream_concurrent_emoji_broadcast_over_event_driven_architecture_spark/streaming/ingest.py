@@ -12,7 +12,9 @@ stdlib with the SAME observable contract:
   503 ``{"error": "Message queue is full"}`` (status codes and payload
   shapes verbatim from api_server.py:55-64); a declared body over
   ``MAX_BODY_BYTES`` → 413 ``{"error": "Request body too large"}``,
-  unread, and the connection is closed.
+  unread, and the connection is closed; a ``Transfer-Encoding`` body
+  (chunked) → 411 ``{"error": "Length Required"}``, likewise unread
+  with the connection closed.
 - a daemon flusher draining the queue in ≤``batch_max``-message /
   ``flush_interval``-second batches (api_server.py:25-27).
 
@@ -110,6 +112,14 @@ class IngestGateway:
             def do_POST(self) -> None:  # noqa: N802 — stdlib contract
                 if self.path.split("?", 1)[0] != "/send_emoji":
                     self.send_error(404)
+                    return
+                if "Transfer-Encoding" in self.headers:
+                    # only Content-Length framing is read: a chunked body
+                    # read as empty would leave its chunks on the wire, to
+                    # be parsed as the next request on this connection.
+                    # Answer 411 unread and drop the connection.
+                    self.close_connection = True
+                    self._json(411, {"error": "Length Required"})
                     return
                 try:
                     n = int(self.headers.get("Content-Length") or 0)

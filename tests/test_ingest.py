@@ -114,6 +114,32 @@ def test_oversized_content_length_gets_413_without_reading(tmp_path, declared):
         gw.close()
 
 
+def test_chunked_post_gets_411_and_one_reply(tmp_path):
+    # a chunked body is not read: the reply is one 411 and the connection
+    # closes, so the chunk lines are never parsed as a second request
+    gw = IngestGateway(str(tmp_path / "spool")).serve_background()
+    body = json.dumps(WIRE).encode()
+    try:
+        with socket.create_connection(("127.0.0.1", gw.port), timeout=2) as s:
+            s.sendall(
+                b"POST /send_emoji HTTP/1.1\r\n"
+                b"Host: localhost\r\n"
+                b"Content-Type: application/json\r\n"
+                b"Transfer-Encoding: chunked\r\n"
+                b"Connection: keep-alive\r\n\r\n"
+                b"%x\r\n%s\r\n0\r\n\r\n" % (len(body), body)
+            )
+            reply = b""
+            while chunk := s.recv(4096):
+                reply += chunk
+        head, _, rest = reply.partition(b"\r\n\r\n")
+        assert head.split(b"\r\n", 1)[0].split()[1] == b"411", head
+        assert json.loads(rest) == {"error": "Length Required"}
+        assert gw.accepted_count == 0
+    finally:
+        gw.close()
+
+
 def test_queue_backpressure_returns_503(tmp_path):
     # a 2-slot queue with NO drain: the third POST gets the reference's
     # 503 (api_server.py:62-63)

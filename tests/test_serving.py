@@ -293,6 +293,32 @@ def test_sse_fanout_sink_streams_aggregate_rows(spark, served_sink, tmp_path):
     assert isinstance(m["window"]["start"], str)  # ISO-flattened
 
 
+def _trigger(q) -> tuple[str, int]:
+    t = q._jsq.streamingQuery().trigger()
+    return t.getClass().getSimpleName(), t.intervalMs()
+
+
+def test_memory_sink_refreshes_on_reference_trigger(spark, served_sink, tmp_path):
+    """The /api/* table refreshes on the reference's 2 s processing-time
+    trigger (spark_consumer.py:52); the live fan-out over the same source
+    keeps the as-fast-as-possible trigger, a 0 ms interval."""
+    _, ev = served_sink
+    replay = str(tmp_path / "trigger_replay")
+    ev.limit(10).write.parquet(replay)
+    stream = spark.readStream.schema(ev.schema).parquet(replay)
+    counts = windowed_counts_scaled(stream)
+    mem = start_memory_sink(counts, "trigger_probe")
+    fan = fanout_foreach_batch(
+        counts, [lambda df, batch_id: None], query_name="trigger_probe_fanout"
+    )
+    try:
+        assert _trigger(mem) == ("ProcessingTimeTrigger", 2000)
+        assert _trigger(fan) == ("ProcessingTimeTrigger", 0)
+    finally:
+        fan.stop()
+        mem.stop()
+
+
 # ---------------------------------------------------------------- websocket
 
 

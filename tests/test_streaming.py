@@ -71,7 +71,8 @@ def replay_dir(tmp_path, events_df):
 
 
 def _run_to_completion(stream_df, name, mode):
-    q = start_memory_sink(stream_df, name, output_mode=mode)
+    # one file per trigger: run as fast as possible, not every 2 s
+    q = start_memory_sink(stream_df, name, output_mode=mode, trigger=None)
     q.processAllAvailable()
     q.stop()
 
@@ -709,7 +710,10 @@ def test_ohlc_append_late_candle_correction(spark, tmp_path):
     stream = file_replay_stream(spark, str(out), ts_schema, 1)
     name = f"ohlc_app_{uuid.uuid4().hex[:8]}"
     q = start_memory_sink(
-        ohlc_candles(stream, watermark="1 minute"), name, output_mode="append"
+        ohlc_candles(stream, watermark="1 minute"),
+        name,
+        output_mode="append",
+        trigger=None,
     )
     q.processAllAvailable()
     q.stop()
@@ -751,7 +755,10 @@ def test_rocksdb_state_store_backend(spark, events_df, replay_dir):
         stream = file_replay_stream(spark, directory, schema)
         name = f"rocks_{uuid.uuid4().hex[:8]}"
         q = start_memory_sink(
-            windowed_counts_scaled(stream), name, output_mode="complete"
+            windowed_counts_scaled(stream),
+            name,
+            output_mode="complete",
+            trigger=None,
         )
         q.processAllAvailable()
         # the running query's state operator actually uses RocksDB
