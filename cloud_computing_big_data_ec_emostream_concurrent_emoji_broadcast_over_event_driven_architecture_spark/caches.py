@@ -44,10 +44,9 @@ Inventory:
   the view held before, so each view holds at most one live RDD;
   :func:`release_transients` frees the last ones.
 - **disk-layout artifacts** (NOT RDD storage): the bucketed catalog
-  tables (`operators/joins.py` ``_bucketed_pair``) and any
-  ``write_partitioned`` output live in the warehouse directory, cost
-  no executor memory, and are dropped via ``DROP TABLE`` — out of
-  scope for the RDD-leak gate.
+  tables (`operators/joins.py` ``_bucketed_pair``) live in the
+  warehouse directory, cost no executor memory, and are dropped via
+  ``DROP TABLE`` — out of scope for the RDD-leak gate.
 
 ``bench.py`` pre-builds exactly ONE memo before timing: the dedup
 shingle hash sets (reported as the ``cache_build`` line item). All

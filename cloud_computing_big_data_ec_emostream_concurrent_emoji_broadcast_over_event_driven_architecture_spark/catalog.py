@@ -83,37 +83,6 @@ def _reader(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: tuple[str, ...] = ("event_date",),
-    mode: str = "overwrite",
-) -> None:
-    """Write a DataFrame as a hive-partitioned parquet dataset.
-
-    Partition layout is the primary pruning lever at 100 TB: a
-    date-partitioned fact table turns any time-range predicate into
-    directory-level skipping (zero I/O for excluded days), and equi-joins
-    against a filtered dim get dynamic partition pruning — the runtime
-    subquery that shrinks the fact scan to the dim's surviving keys.
-    Derived partition columns (e.g. ``event_date`` from ``ts``) should be
-    low-cardinality: one directory per value."""
-    df.write.partitionBy(*partition_cols).mode(mode).parquet(path)
-
-
-def events_partitioned_by_day(
-    spark: SparkSession, sf_dir: str, path: str
-) -> DataFrame:
-    """Materialize the events table date-partitioned (the layout the
-    engine would use for the stream's archival sink), returning the
-    partitioned reader."""
-    ev = table(spark, sf_dir, "events").withColumn(
-        "event_date", F.to_date("ts")
-    )
-    write_partitioned(ev, path, ("event_date",))
-    return spark.read.parquet(path)
-
-
 def write_bucketed(
     df: DataFrame,
     table_name: str,

@@ -10,7 +10,6 @@ rounded in both engines before hashing).
 
 from __future__ import annotations
 
-import pandas as pd  # module-level so pandas_udf can resolve the stringified type hints
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -47,34 +46,4 @@ def cosine_sql(a: str, b: str) -> str:
     return (
         f"(list_dot_product({a}, {b}) / "
         f"(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))))"
-    )
-
-
-# --- Arrow-vectorized twin -------------------------------------------------
-
-def cosine_topk_pandas(df, query_vec, vec_col="embedding", id_col="vec_id", k=10):
-    """Arrow-batched top-k cosine scoring via a scalar ``pandas_udf`` —
-    the alternative data path for wide vectors, where one numpy matmul
-    per Arrow batch beats the per-element codegen fold (the built-in
-    ``cosine()`` wins on short vectors; this wins as dimensionality
-    grows). Returns (id, sim) for the k most similar rows.
-
-    ``query_vec`` is a plain Python list; it ships to executors inside
-    the serialized UDF (a few KB), not as a join."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = np.linalg.norm(q)
-
-    @pandas_udf("double")
-    def score(batch: pd.Series) -> pd.Series:
-        m = np.stack(batch.apply(lambda v: np.asarray(v, dtype=np.float64)))
-        sims = (m @ q) / (np.linalg.norm(m, axis=1) * qn)
-        return pd.Series(sims)
-
-    return (
-        df.select(id_col, score(F.col(vec_col)).alias("sim"))
-        .orderBy(F.desc("sim"), F.asc(id_col))
-        .limit(k)
     )

@@ -342,17 +342,12 @@ def _minhash_oracle() -> str:
     """
 
 
-def minhash_candidate_pairs(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Distinct band-collision pairs (doc_id_a < doc_id_b) — the LSH
-    candidate generator, exposed so skew audits can count candidates
-    independently of verification (tests/test_skew.py plants a
-    degenerate corpus where one band key captures 10% of docs and pins
-    the candidate count at exactly the hot clique, not x NUM_BANDS)."""
-    hdf = _hashed_shingle_sets(spark, sf_dir)
-    sig = hdf.select("doc_id", "sig")
-    band_rows = sig.select(
+def lsh_band_rows(sig_df: DataFrame) -> DataFrame:
+    """(doc_id, band, band_key) — one row per LSH band, band_key the
+    '_'-joined band slice of the signature: NUM_BANDS bands of
+    BAND_SIZE minhashes, the banding ``_minhash_cand_cte`` replays in
+    SQL."""
+    return sig_df.select(
         "doc_id",
         F.explode(
             F.array(
@@ -362,9 +357,9 @@ def minhash_candidate_pairs(
                         F.concat_ws(
                             "_",
                             *[
-                                F.element_at("sig", b * BAND_SIZE + j + 1).cast(
-                                    "string"
-                                )
+                                F.element_at(
+                                    "sig", b * BAND_SIZE + j + 1
+                                ).cast("string")
                                 for j in range(BAND_SIZE)
                             ],
                         ).alias("band_key"),
@@ -374,22 +369,57 @@ def minhash_candidate_pairs(
             )
         ).alias("bk"),
     ).select("doc_id", "bk.band", "bk.band_key")
-    x = band_rows.alias("x")
-    y = band_rows.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.band_key") == F.col("y.band_key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_id_a"),
-            F.col("y.doc_id").alias("doc_id_b"),
-        )
-        .distinct()
+
+
+def lsh_candidates_raw(sig_df: DataFrame) -> DataFrame:
+    """Band-collision pairs (doc_id_a < doc_id_b) WITHOUT the distinct —
+    one row per shared band (a pair colliding in k bands appears k
+    times, k ≤ NUM_BANDS). Cost is O(docs × bands) keyed on
+    (band, band_key) — never an all-pairs join.
+    ROUND-10 OPTIMIZATION (guide §2.3/§2.4): verifiers whose per-pair
+    output is deterministic defer the dedup to the (tiny) survivor
+    stream instead of paying a full exchange + two hash aggregates over
+    every collision here — measured 1.06 s → 0.49 s for q_dedup_minhash
+    at sf0.1 (duplication factor 2.1, candidate count 14.7k; the
+    deferred exchange cost more than double-verification).
+
+    Duplication-vs-scale (round-11, the round-10 ADVICE item): the
+    factor is 2.12 at sf0.1 (14.7k raw / 6.9k distinct) and 2.20 at the
+    10× documents fixture (157k / 71k) — stable, because near-dup pair
+    DENSITY is what drives it and the corpus's pair count scales
+    linearly. Break-even: the deferred form re-verifies each pair once
+    per colliding band, hard-capped at NUM_BANDS (4); even at the cap
+    the extra work is ≤ NUM_BANDS× verification of TRUE near-dups only
+    (high-k collisions are almost always real matches), while the
+    removed exchange was paid over EVERY collision. The raw path loses
+    only on corpora where survivors ≈ candidates (dup-heavy, e.g.
+    verbatim-clone fixtures: the round-9 synth_scale first cut measured
+    exactly that failure — every vector a 10-deep exact-dup clique) AND
+    most pairs collide in most bands; there, reinstate
+    :func:`lsh_candidates` (distinct-early) for the affected verifier.
+    """
+    bands = lsh_band_rows(sig_df)
+    # rename-then-join-on-key-list: sidesteps self-join attribute
+    # ambiguity (both sides share one lineage); the a < b filter is
+    # pushed into the sort-merge join condition by Catalyst
+    x = bands.withColumnRenamed("doc_id", "doc_id_a")
+    y = bands.withColumnRenamed("doc_id", "doc_id_b")
+    return (
+        x.join(y, ["band", "band_key"])
+        .filter(F.col("doc_id_a") < F.col("doc_id_b"))
+        .select("doc_id_a", "doc_id_b")
     )
-    return cand
+
+
+def lsh_candidates(sig_df: DataFrame) -> DataFrame:
+    """Distinct band-collision pairs (doc_id_a < doc_id_b) over a
+    (doc_id, sig) table — the candidate generator skew audits count
+    independently of verification (tests/test_skew.py plants a
+    degenerate corpus where one band key captures 10% of docs and pins
+    the candidate count at exactly the hot clique, not x NUM_BANDS).
+    The verifying tiers ride :func:`lsh_candidates_raw` and dedup
+    survivors instead."""
+    return lsh_candidates_raw(sig_df).distinct()
 
 
 @register(
@@ -419,13 +449,9 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows, so the final row set is unchanged (oracle MATCH), while the
     # full exchange + two hash aggregates over every collision pair are
     # skipped (measured 1.06 s → 0.49 s at sf0.1).
-    # ``minhash_candidate_pairs`` keeps the distinct form — it is the
-    # pinned audit surface for candidate COUNTS (tests/test_skew.py).
-    from ..streaming.minhash import lsh_candidates_raw
-
-    cand = lsh_candidates_raw(hdf.select("doc_id", "sig")).withColumnsRenamed(
-        {"id_a": "doc_id_a", "id_b": "doc_id_b"}
-    )
+    # ``lsh_candidates`` keeps the distinct form — it is the pinned
+    # audit surface for candidate COUNTS (tests/test_skew.py).
+    cand = lsh_candidates_raw(hdf)
     # Exact verification of candidates only: join each candidate pair back
     # to the doc-level hashed sets and intersect the ARRAYS — join
     # cardinality is one row per candidate pair (vs one per shingle
@@ -476,7 +502,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     longer one) that symmetric Jaccard misses, the case that dominates
     real crawl corpora (boilerplate-wrapped reposts). Candidates come from
     the SAME banded MinHash join as q_dedup_minhash (via the shared
-    streaming/minhash banding — one candidate generator for every
+    :func:`lsh_candidates_raw` — one candidate generator for every
     verifier); only the verification predicate differs, so the marginal
     cost of running both tiers over 100 TB is one extra filter over the
     already-joined candidate rows. Jaccard is emitted alongside so
@@ -484,12 +510,8 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs. Candidates arrive RAW (distinct deferred to survivors — see
     q_dedup_minhash's round-10 note; identical rows, one exchange
     saved)."""
-    from ..streaming.minhash import lsh_candidates_raw
-
     hdf = _hashed_shingle_sets(spark, sf_dir)
-    cand = lsh_candidates_raw(hdf.select("doc_id", "sig")).withColumnsRenamed(
-        {"id_a": "doc_id_a", "id_b": "doc_id_b"}
-    )
+    cand = lsh_candidates_raw(hdf)
     ha = hdf.select(
         F.col("doc_id").alias("doc_id_a"),
         F.col("hs").alias("hs_a"),
@@ -1036,49 +1058,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def prefix_index(
-    spark: SparkSession, sf_dir: str, order: str = "hash"
-) -> DataFrame:
-    """(doc_id, h) prefix inverted index under a chosen global token
-    order. ``hash``: order by the token hash — zero extra cost (per-row
-    slice of the cached sorted sets). ``rarest``: order by ascending
-    global document frequency — one extra aggregation (a reusable token
-    dictionary) that puts each document's rarest tokens in the prefix,
-    minimizing candidate pairs on real skewed corpora. The PAIR OUTPUT of
-    the prefix join is invariant to this choice (tests/test_skew.py twin
-    in test_oracle_parity asserts it); only the candidate count moves."""
-    hdf = _hashed_shingle_sets(spark, sf_dir)
-    prefix_len = (
-        F.col("n") - F.ceil(F.lit(JACCARD_THRESHOLD) * F.col("n")) + 1
-    ).cast("int")
-    if order == "hash":
-        ordered = hdf.select(
-            "doc_id", F.slice("hs", 1, prefix_len).alias("prefix")
-        )
-    elif order == "rarest":
-        ex = hdf.select("doc_id", F.explode("hs").alias("h"))
-        freq = ex.groupBy("h").agg(F.count("*").alias("df"))
-        ordered = (
-            ex.join(freq, "h")
-            .groupBy("doc_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("df"), F.col("h")))
-                ).alias("o")
-            )
-            .join(hdf.select("doc_id", "n"), "doc_id")
-            .select(
-                "doc_id",
-                F.transform(
-                    F.slice(F.col("o"), 1, prefix_len), lambda s: s["h"]
-                ).alias("prefix"),
-            )
-        )
-    else:
-        raise ValueError(f"unknown prefix order {order!r}")
-    return ordered.select("doc_id", F.explode("prefix").alias("h"))
-
-
 def _keep_best_oracle() -> str:
     from ..functions.text import stopword_ratio_sql
 
@@ -1180,11 +1159,7 @@ def q_minhash_est_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     both verifying tiers already pay — the signature comparison is a
     per-row zip over two cached 16-long arrays."""
     hdf = _hashed_shingle_sets(spark, sf_dir)
-    from ..streaming.minhash import lsh_candidates
-
-    cand = lsh_candidates(hdf.select("doc_id", "sig")).withColumnsRenamed(
-        {"id_a": "doc_id_a", "id_b": "doc_id_b"}
-    )
+    cand = lsh_candidates(hdf)
     ha = hdf.select(
         F.col("doc_id").alias("doc_id_a"),
         F.col("hs").alias("hs_a"),

@@ -202,8 +202,7 @@ def q_lag_lead_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization: a >30 min gap starts a new session (lag +
-    flag-sum — SURVEY.md guide pattern; the streaming twin is
-    ``session_window`` in ..streaming)."""
+    flag-sum — SURVEY.md guide pattern)."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     sec = F.unix_timestamp(F.col("ts").cast("timestamp"))
     prev_sec = F.unix_timestamp(F.lag("ts").over(w).cast("timestamp"))

@@ -152,36 +152,3 @@ def synthetic_wire_stream(spark: SparkSession, rows_per_second: int = 1000) -> D
     )
 
 
-def read_jsonl_events(
-    spark: SparkSession, path: str, streaming: bool = False
-) -> DataFrame:
-    """Batch/stream reader for newline-delimited JSON event exports —
-    the interchange format the reference's wire uses (one JSON object
-    per message; api_server.py:55) generalized to the driver's ``events``
-    schema.  Schema is DECLARED, never inferred: inference costs a full
-    extra pass over 100 TB, silently widens types on dirty rows, and in
-    streaming mode is simply refused by Spark, so one explicit schema
-    (schemas.EVENTS_SCHEMA with a string-typed ts at the boundary)
-    serves both modes; the ISO-micros timestamp parses with the standard
-    (non-LEGACY) formatter.  Corrupt lines land in
-    ``_corrupt_record`` (PERMISSIVE mode) instead of failing the job —
-    the file-side twin of the wire path's quarantine split."""
-    from ..schemas import EVENTS_SCHEMA, ISO_MICROS_FMT
-
-    boundary = T.StructType(
-        [
-            f if f.name != "ts" else T.StructField("ts", T.StringType(), True)
-            for f in EVENTS_SCHEMA.fields
-        ]
-        + [T.StructField("_corrupt_record", T.StringType(), True)]
-    )
-    reader = (
-        (spark.readStream if streaming else spark.read)
-        .schema(boundary)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-    )
-    raw = reader.json(path)
-    return raw.withColumn(
-        "ts", F.to_timestamp(F.col("ts"), ISO_MICROS_FMT)
-    )

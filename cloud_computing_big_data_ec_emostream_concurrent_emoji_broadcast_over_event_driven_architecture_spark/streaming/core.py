@@ -19,7 +19,7 @@ incremental planner does the rest.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..caches import publish_view
@@ -111,86 +111,6 @@ def sliding_rolling_counts(
     )
 
 
-def session_windows(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Session windows (gap-based) — absent from the reference, stock in
-    Spark; the streaming twin of the batch ``q_sessionize``."""
-    events = _event_time(events, ts_col)
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.col(key_col), F.session_window(F.col(ts_col), gap))
-        .agg(F.count("*").alias("n_events"))
-    )
-
-
-def ohlc_candles(
-    events: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    window_dur: str = "1 minute",
-    watermark: str = DEFAULT_WATERMARK,
-) -> DataFrame:
-    """Per-window OHLC candles (streaming twin of the batch
-    ``q_minute_ohlc``): open/close via min_by/max_by keyed on
-    (event time, event_id) — ordered aggregation with NO window sort, so
-    the streaming state per candle is five scalars, not a buffer of
-    events. Works unchanged on a streaming or batch frame."""
-    events = _event_time(events, ts_col)
-    ord_key = F.struct(F.col(ts_col), F.col("event_id"))
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_dur))
-        .agg(
-            F.min_by(value_col, ord_key).alias("open"),
-            F.max(value_col).alias("high"),
-            F.min(value_col).alias("low"),
-            F.max_by(value_col, ord_key).alias("close"),
-            F.count("*").alias("n_events"),
-        )
-    )
-
-
-def enrich_stream_static(
-    events: DataFrame, dim: DataFrame, on: Column, how: str = "left"
-) -> DataFrame:
-    """Stream-static enrichment join: the dim is re-read per micro-batch
-    (no state); broadcast keeps the stream side shuffle-free — the
-    streaming twin of the batch star join."""
-    return events.join(F.broadcast(dim), on, how)
-
-
-def stream_stream_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    watermark: str = "2 minutes",
-    max_skew: str = "1 minute",
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-stream inner join with dual watermarks + a time-range
-    condition — the Spark-native form of the dashboard's timestamp
-    matching (reference analytical_server.py:451-459, SURVEY.md §2.5 X1).
-    Both watermarks plus the range bound make join state evictable."""
-    lw = _event_time(left, left_ts).withWatermark(left_ts, watermark)
-    rw = _event_time(right, right_ts).withWatermark(right_ts, watermark)
-    l_ts, r_ts = F.col(f"l.{left_ts}"), F.col(f"r.{right_ts}")
-    cond = (
-        (F.col(f"l.{key}") == F.col(f"r.{key}"))
-        & (r_ts >= l_ts - F.expr(f"INTERVAL {max_skew}"))
-        & (r_ts <= l_ts + F.expr(f"INTERVAL {max_skew}"))
-    )
-    # outer variants emit the null-padded side once the watermark proves
-    # no match can still arrive — state-bounded like the inner form
-    return lw.alias("l").join(rw.alias("r"), cond, how)
-
-
 def dedup_stream(
     events: DataFrame,
     keys: list[str] | None = None,
@@ -249,43 +169,6 @@ def with_wire_metrics(decoded: DataFrame, name: str = "wire_metrics") -> DataFra
         F.sum(F.when(F.col("ts").isNull(), 1).otherwise(0)).alias(
             "n_ts_failures"
         ),
-    )
-
-
-def decayed_window_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    window_dur: str = "1 minute",
-    watermark: str = DEFAULT_WATERMARK,
-    tau_sec: float = 3600.0,
-) -> DataFrame:
-    """Streaming twin of the batch q_decayed_counts: per (key, tumbling
-    window) event count plus the exponentially decayed mass anchored at
-    the WINDOW CLOSE (each event contributes exp(-(window_end - ts)/τ)).
-    The decay weight is a pure per-row expression — the anchor is the
-    row's own window end, not a global max — so it rides the ordinary
-    windowed aggregation with watermark-bounded state; downstream
-    consumers combine window scores with a constant inter-window decay
-    factor exp(-Δ/τ) to maintain a running recency score incrementally.
-    Works unchanged on a batch frame (tests pin stream == batch)."""
-    events = _event_time(events, ts_col)
-    window_end = F.timestamp_seconds(
-        (F.floor(F.unix_timestamp(F.col(ts_col)) / 60) + 1) * 60
-    )
-    weight = F.exp(
-        -(
-            F.unix_timestamp(window_end) - F.unix_timestamp(F.col(ts_col))
-        )
-        / F.lit(tau_sec)
-    )
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.col(key_col), F.window(F.col(ts_col), window_dur))
-        .agg(
-            F.count("*").alias("cnt"),
-            F.round(F.sum(weight), 6).alias("decayed"),
-        )
     )
 
 
@@ -592,78 +475,6 @@ def ivf_index_append_stream(
         vec_stream,
         _frozen_router_batch_fn(spark, sf_dir, sink_dir, _rows),
         checkpoint_dir,
-    )
-
-
-def funnel_stream(
-    events: DataFrame,
-    step_types: tuple[str, str, str] = ("view", "click", "purchase"),
-    window_sec: int = 1800,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """STREAMING multi-step funnel — the real-time twin of the batch
-    ``q_funnel_multistep``: one event stream filtered into the three
-    funnel legs and CHAINED through two stream-stream joins, each with
-    a time-range bound (next step strictly after the previous, within
-    ``window_sec``).  Emits one append-mode row per completed
-    view→click→purchase chain with all three timestamps.
-
-    State story: every leg carries its own watermark and every join has
-    a range bound, so Spark can evict join state once the watermark
-    passes vts + 2·window — state is bounded by (arrival rate ×
-    funnel horizon), independent of stream lifetime.  Chained
-    stream-stream inner joins are append-mode-only by construction,
-    which is exactly the semantics a funnel-completion feed wants
-    (each completion is a fact, never restated)."""
-    t1, t2, t3 = step_types
-    ev = _event_time(events, "ts")
-    v = (
-        ev.filter(F.col("event_type") == t1)
-        .select(
-            F.col("user_id").alias("v_user"), F.col("ts").alias("vts")
-        )
-        .withWatermark("vts", watermark)
-    )
-    c = (
-        ev.filter(F.col("event_type") == t2)
-        .select(
-            F.col("user_id").alias("c_user"), F.col("ts").alias("cts")
-        )
-        .withWatermark("cts", watermark)
-    )
-    p = (
-        ev.filter(F.col("event_type") == t3)
-        .select(
-            F.col("user_id").alias("p_user"), F.col("ts").alias("pts")
-        )
-        .withWatermark("pts", watermark)
-    )
-    within = lambda later, earlier: (
-        (later > earlier)
-        & (later <= earlier + F.expr(f"INTERVAL {window_sec} SECONDS"))
-    )
-    vc = v.join(
-        c,
-        (F.col("v_user") == F.col("c_user"))
-        & within(F.col("cts"), F.col("vts")),
-    )
-    # The joined stream carries TWO watermarked event-time columns (vts,
-    # cts); a further stream-stream join refuses that. Strip the
-    # event-time tag from vts with an exact unix_micros round trip —
-    # cts (the later step) remains the single event-time column driving
-    # the second join's state eviction.
-    vc = vc.select(
-        "v_user",
-        F.timestamp_micros(F.unix_micros(F.col("vts"))).alias("vts"),
-        "cts",
-    )
-    vcp = vc.join(
-        p,
-        (F.col("p_user") == F.col("v_user"))
-        & within(F.col("pts"), F.col("cts")),
-    )
-    return vcp.select(
-        F.col("v_user").alias("user_id"), "vts", "cts", "pts"
     )
 
 

@@ -73,8 +73,7 @@ class IngestGateway:
         # thousand POSTs/s, so the 100k events/s aggregate target is met
         # by SHARDING gateways (processes or hosts) over one spool
         # namespace — distinct prefixes keep their part files from
-        # colliding (scripts/ingest_throughput.py measures the sharded
-        # aggregate; SCALING.md round 8 records it)
+        # colliding (SCALING.md round 8 records the sharded aggregate)
         import uuid
 
         self._uid = uuid.uuid4().hex[:8]

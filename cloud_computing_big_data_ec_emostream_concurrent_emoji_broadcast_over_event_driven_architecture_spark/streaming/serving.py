@@ -134,6 +134,10 @@ def api_emoji_data(spark: SparkSession, sink_table: str) -> dict[str, list[dict]
 
 # ---------------------------------------------------------------- SSE hub
 
+# Queued last for a subscriber the hub dropped: its handler writes what
+# was queued before it, then ends the connection.
+_DROPPED = object()
+
 
 class SseHub:
     """In-process pub-sub node: every published message goes to every
@@ -167,7 +171,9 @@ class SseHub:
     def publish(self, message: dict) -> int:
         """Broadcast to all subscribers; a full queue drops THAT
         subscriber (backpressure = disconnect, as in the reference's
-        send-timeout eviction). Returns live-subscriber count."""
+        send-timeout eviction): it is unsubscribed and ``_DROPPED``
+        is queued past its bound, so its handler ends the connection.
+        Returns live-subscriber count."""
         with self._lock:
             subs = list(self._subs.items())
         dead = []
@@ -175,9 +181,12 @@ class SseHub:
             try:
                 q.put_nowait(message)
             except queue.Full:
-                dead.append(sid)
-        for sid in dead:
+                dead.append((sid, q))
+        for sid, q in dead:
             self.unsubscribe(sid)
+            with q.mutex:  # past maxsize: put_nowait would raise Full
+                q.queue.append(_DROPPED)
+                q.not_empty.notify()
         return self.subscriber_count
 
 
@@ -248,19 +257,20 @@ _WS_MAX_FRAME = 1 << 20
 def _ws_read_frame(rfile) -> tuple[int, bytes] | None:
     """Read one client frame → (opcode, unmasked payload), or None on a
     closed/invalid/oversized stream (None closes the connection).
-    Client frames MUST be masked (§5.1)."""
+    Client frames MUST be masked; the server closes the connection on
+    an unmasked one (§5.1)."""
     hdr = rfile.read(2)
-    if len(hdr) < 2:
+    if len(hdr) < 2 or not hdr[1] & 0x80:
         return None
     opcode = hdr[0] & 0x0F
-    masked, n = hdr[1] & 0x80, hdr[1] & 0x7F
+    n = hdr[1] & 0x7F
     if n == 126:
         n = int.from_bytes(rfile.read(2), "big")
     elif n == 127:
         n = int.from_bytes(rfile.read(8), "big")
     if n > _WS_MAX_FRAME:
         return None
-    mask = rfile.read(4) if masked else b"\x00\x00\x00\x00"
+    mask = rfile.read(4)
     data = rfile.read(n)
     if len(data) < n:
         return None
@@ -521,7 +531,8 @@ class StatsHttpServer:
                 bound listener: handshake upgrade, then hub messages as
                 unmasked text frames, protocol PING on idle (the ws twin
                 of the SSE ``data: ping``), PONG for client pings, clean
-                CLOSE echo."""
+                CLOSE echo, and a CLOSE once the hub drops this
+                subscriber."""
                 import select
 
                 key = self.headers.get("Sec-WebSocket-Key")
@@ -575,6 +586,9 @@ class StatsHttpServer:
                                 self.wfile.write(_ws_frame(fr[1], 0xA))
                         try:
                             msg = q.get(timeout=outer.sse_idle_seconds)
+                            if msg is _DROPPED:
+                                self.wfile.write(_ws_frame(b"", 0x8))
+                                return
                             payload = json.dumps(msg, sort_keys=True).encode()
                             self.wfile.write(_ws_frame(payload, 0x1))
                         except queue.Empty:
@@ -588,7 +602,8 @@ class StatsHttpServer:
             def _sse(self) -> None:
                 """reference client.py:157-181: text/event-stream,
                 ``data: <json>\\n\\n`` per message, ``data: ping`` on
-                idle timeout."""
+                idle timeout; the response ends once the hub drops this
+                subscriber."""
                 self.send_response(200)
                 self.send_header("Content-Type", "text/event-stream")
                 self.send_header("Cache-Control", "no-cache")
@@ -598,6 +613,8 @@ class StatsHttpServer:
                     while True:
                         try:
                             msg = q.get(timeout=outer.sse_idle_seconds)
+                            if msg is _DROPPED:
+                                return
                             frame = f"data: {json.dumps(msg, sort_keys=True)}\n\n"
                         except queue.Empty:
                             frame = "data: ping\n\n"

@@ -1,10 +1,9 @@
 """Materialize a COMPLETE key-consistent N× clone of an sf fixture.
 
-Unlike scripts/scale_ratio.py (which clones only the tables its ratio
-queries touch), this produces a full 10-table fixture directory that the
-ENTIRE registry — and therefore ``scripts/driver_sim.py`` — can run
-against, so oracle parity can be re-proven at volume (default: 10× sf0.1
-≈ a TPC-H sf1-equivalent: 6 M lineitem, 1.5 M orders, 1 M events).
+Produces a full 10-table fixture directory that the ENTIRE registry —
+and therefore ``scripts/driver_sim.py`` — can run against, so oracle
+parity can be re-proven at volume (default: 10× sf0.1 ≈ a TPC-H
+sf1-equivalent: 6 M lineitem, 1.5 M orders, 1 M events).
 
 Key discipline (what makes the clone *consistent*, not just bigger):
 

@@ -72,47 +72,3 @@ def test_stream_micro_batches_replayable(spark, tmp_path):
     q.stop()
     rows = [r["value"] for r in spark.sql(f"SELECT * FROM {name}").collect()]
     assert sorted(rows) == sorted(wire_payload(i) for i in range(120))
-
-
-def test_read_jsonl_events_roundtrip_and_quarantine(spark, sf_dir, tmp_path):
-    """JSONL export -> read back with the declared boundary schema:
-    every row survives with its exact microsecond timestamp, and a
-    corrupt line lands in _corrupt_record instead of failing the job."""
-    import json as _json
-
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.catalog import (
-        table as cat_table,
-    )
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.sources.streams import (
-        read_jsonl_events,
-    )
-    from pyspark.sql import functions as F
-
-    ev = cat_table(spark, sf_dir, "events").limit(200)
-    rows = ev.collect()
-    path = tmp_path / "events.jsonl"
-    with open(path, "w") as f:
-        for r in rows:
-            d = r.asDict()
-            d["ts"] = d["ts"].isoformat()
-            if "." not in d["ts"]:
-                d["ts"] += ".000000"
-            f.write(_json.dumps(d) + "\n")
-        f.write("{not valid json\n")
-
-    # cache before touching _corrupt_record alone — Spark refuses
-    # corrupt-column-only queries over the raw files (documented
-    # UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN workaround)
-    back = read_jsonl_events(spark, str(path)).cache()
-    good = back.filter(F.col("_corrupt_record").isNull())
-    bad = back.filter(F.col("_corrupt_record").isNotNull())
-    assert bad.count() == 1
-    got = {
-        (r["event_id"], r["ts"], r["user_id"], r["event_type"])
-        for r in good.collect()
-    }
-    expected = {
-        (r["event_id"], r["ts"], r["user_id"], r["event_type"])
-        for r in rows
-    }
-    assert got == expected

@@ -141,58 +141,6 @@ def test_wire_timestamp_roundtrip(spark, ts, fmt):
     assert out["ts"] == expect, (wire, out["ts"])
 
 
-def test_prefix_order_invariance(spark, sf_dir):
-    """The prefix-filtered Jaccard pairs are invariant to the global
-    token order (hash vs rarest-first); only candidate volume differs."""
-    from pyspark.sql import functions as F
-
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.dedup import (
-        JACCARD_THRESHOLD,
-        _hashed_shingle_sets,
-        prefix_index,
-    )
-
-    hdf = _hashed_shingle_sets(spark, sf_dir)
-
-    def pairs(order):
-        pf = prefix_index(spark, sf_dir, order)
-        x, y = pf.alias("x"), pf.alias("y")
-        cand = (
-            x.join(
-                y,
-                (F.col("x.h") == F.col("y.h"))
-                & (F.col("x.doc_id") < F.col("y.doc_id")),
-            )
-            .select(
-                F.col("x.doc_id").alias("doc_id_a"),
-                F.col("y.doc_id").alias("doc_id_b"),
-            )
-            .distinct()
-        )
-        ha = hdf.select(
-            F.col("doc_id").alias("doc_id_a"),
-            F.col("hs").alias("hs_a"),
-            F.col("n").alias("na"),
-        )
-        hb = hdf.select(
-            F.col("doc_id").alias("doc_id_b"),
-            F.col("hs").alias("hs_b"),
-            F.col("n").alias("nb"),
-        )
-        v = (
-            cand.join(ha, "doc_id_a")
-            .join(hb, "doc_id_b")
-            .withColumn("c", F.size(F.array_intersect("hs_a", "hs_b")))
-        )
-        jac = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
-        return {
-            (r["doc_id_a"], r["doc_id_b"])
-            for r in v.filter(jac >= JACCARD_THRESHOLD).collect()
-        }
-
-    assert pairs("hash") == pairs("rarest")
-
-
 def test_latest_per_key_compaction_idempotent(spark, sf_dir):
     """Compacting an already-compacted log is the identity: the snapshot
     is a fixed point of latest-per-key (CDC invariant — re-running the

@@ -561,3 +561,97 @@ def test_ws_three_listener_cluster_topology(spark):
             sock.close()
         for s in servers:
             s.close()
+
+
+def _read_until_eof(sock, rfile, seconds: float) -> bytes:
+    """Everything the server sends until it closes the connection;
+    fails if the connection is still open after ``seconds``."""
+    end = time.monotonic() + seconds
+    received = b""
+    try:
+        while True:
+            sock.settimeout(max(end - time.monotonic(), 0.01))
+            chunk = rfile.read1(65536)
+            if not chunk:
+                return received
+            received += chunk
+    except TimeoutError:
+        pytest.fail(f"connection still open after {seconds} s: {received[-80:]!r}")
+
+
+def _ws_frames(data: bytes) -> list[tuple[int, bytes]]:
+    """Split a byte stream of small unmasked server frames."""
+    frames, i = [], 0
+    while i < len(data):
+        op, n = data[i] & 0x0F, data[i + 1] & 0x7F
+        i += 2
+        if n == 126:
+            n = int.from_bytes(data[i : i + 2], "big")
+            i += 2
+        frames.append((op, data[i : i + n]))
+        i += n
+    return frames
+
+
+def _wait_subscribed(hub) -> None:
+    deadline = time.monotonic() + 10
+    while hub.subscriber_count == 0:
+        assert time.monotonic() < deadline, "subscriber never registered"
+        time.sleep(0.02)
+
+
+@pytest.mark.parametrize("path", ["/events", "/ws"])
+def test_dropped_subscriber_connection_ends(spark, path):
+    """A subscriber the hub drops for a full queue gets what was already
+    queued, then the connection ends (reference pubsub.py:14-31 discards
+    the socket) instead of staying open on pings alone; /ws sends a
+    CLOSE frame first."""
+    import socket
+
+    srv = StatsHttpServer(
+        spark, "unused_sink", hub=SseHub(max_queue=2), sse_idle_seconds=0.2
+    ).serve_background()
+    try:
+        if path == "/ws":
+            sock, rfile = _ws_connect(srv)
+        else:
+            sock = socket.create_connection(("127.0.0.1", srv.port), timeout=10)
+            sock.sendall(b"GET /events HTTP/1.1\r\nHost: 127.0.0.1\r\n\r\n")
+            rfile = sock.makefile("rb")
+        try:
+            _wait_subscribed(srv.hub)
+            for i in range(200):
+                srv.hub.publish({"i": i})
+            assert srv.hub.subscriber_count == 0  # dropped by the burst
+            received = _read_until_eof(sock, rfile, 2.0)
+        finally:
+            rfile.close()
+            sock.close()
+    finally:
+        srv.close()
+    if path == "/ws":
+        frames = _ws_frames(received)
+        assert frames[-1] == (0x8, b"")
+        got = [json.loads(p)["i"] for op, p in frames if op == 0x1]
+    else:
+        assert received.startswith(b"HTTP/1.0 200 ")
+        got = [
+            json.loads(line[len(b"data: ") :])["i"]
+            for line in received.split(b"\n")
+            if line.startswith(b"data: {")
+        ]
+    assert got == sorted(set(got)) and len(got) < 200
+
+
+def test_ws_unmasked_client_frame_closes_connection(server):
+    """Client frames MUST be masked (RFC 6455 §5.1): an unmasked PING
+    gets no PONG, and the server closes the connection."""
+    sock, rfile = _ws_connect(server)
+    try:
+        _wait_subscribed(server.hub)
+        sock.sendall(bytes([0x80 | 0x9, 5]) + b"hello")
+        received = _read_until_eof(sock, rfile, 5.0)
+    finally:
+        rfile.close()
+        sock.close()
+    assert 0xA not in [op for op, _ in _ws_frames(received)]

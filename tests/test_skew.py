@@ -152,14 +152,15 @@ def test_minhash_band_skew_candidate_bound(spark, hot_band_sf_dir):
     EXACTLY the hot clique C(30,2) — the distinct() collapses the
     4-band multiplicity, and unique docs contribute nothing."""
     from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.dedup import (
-        minhash_candidate_pairs,
+        _hashed_shingle_sets,
+        lsh_candidates,
         q_dedup_minhash,
     )
 
     sf_dir, n_hot, _ = hot_band_sf_dir
     release_family("dedup_shingle_hashsets")
     try:
-        cands = minhash_candidate_pairs(spark, sf_dir).collect()
+        cands = lsh_candidates(_hashed_shingle_sets(spark, sf_dir)).collect()
         hot_clique = n_hot * (n_hot - 1) // 2
         in_hot = [
             (r.doc_id_a, r.doc_id_b)

@@ -1,6 +1,6 @@
 """Streaming tests (SURVEY.md §5.3-5.4): batch/stream equivalence, late
-data + watermark semantics, fan-out sink, stream-static and stream-stream
-joins, session windows — the parity the reference's two divergent
+data + watermark semantics, fan-out sink, stream-static scoring — the
+parity the reference's two divergent
 implementations (spark_consumer vs analytical_server) never established.
 
 File-replay fixtures: events rows re-written as multiple parquet files in
@@ -23,10 +23,7 @@ from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event
 )
 from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.core import (
     decode_wire_events,
-    enrich_stream_static,
-    session_windows,
     sliding_rolling_counts,
-    stream_stream_join,
     windowed_counts_scaled,
 )
 from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.sinks import (
@@ -230,76 +227,6 @@ def test_fanout_delivers_every_batch_to_every_sink(spark, events_df, replay_dir)
     expected = {r["event_id"] for r in events_df.select("event_id").collect()}
     assert set(seen_a) == expected
     assert set(seen_b) == expected
-
-
-def test_stream_static_enrichment(spark, sf_dir, events_df, replay_dir):
-    """Stream-static join: every streamed event picks up its user's dim row."""
-    directory, schema = replay_dir
-    stream = file_replay_stream(spark, directory, schema, 2)
-    dim = table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment"
-    )
-    joined = enrich_stream_static(stream, dim, "user_id")
-    name = f"enr_{uuid.uuid4().hex[:8]}"
-    _run_to_completion(joined, name, "append")
-    got = spark.sql(
-        f"SELECT count(*) AS n, count(c_mktsegment) AS matched FROM {name}"
-    ).collect()[0]
-    assert got["n"] == events_df.count()
-    # every user_id in events exists in customer at these SFs
-    assert got["matched"] == got["n"]
-
-
-def test_stream_stream_join_time_bounded(spark, tmp_path):
-    """Stream-stream join with dual watermarks + time-range condition."""
-    schema = "event_id long, ts_s string, user_id long"
-    left_rows = [(1, "2024-01-01 00:00:00", 7), (2, "2024-01-01 00:05:00", 7)]
-    right_rows = [
-        (10, "2024-01-01 00:00:30", 7),  # within 1 min of left #1
-        (11, "2024-01-01 00:20:00", 7),  # matches nothing
-    ]
-    dirs = []
-    for tag, rows in (("l", left_rows), ("r", right_rows)):
-        d = tmp_path / f"ss_{tag}_{uuid.uuid4().hex[:6]}"
-        spark.createDataFrame(rows, schema).withColumn(
-            "ts", F.to_timestamp("ts_s")
-        ).select("event_id", "ts", "user_id").coalesce(1).write.parquet(str(d))
-        dirs.append(d)
-    rd_schema = spark.read.parquet(str(dirs[0])).schema
-    left = file_replay_stream(spark, str(dirs[0]), rd_schema, 10)
-    right = file_replay_stream(spark, str(dirs[1]), rd_schema, 10)
-    joined = stream_stream_join(left, right, "user_id").select(
-        F.col("l.event_id").alias("l_id"), F.col("r.event_id").alias("r_id")
-    )
-    name = f"ss_{uuid.uuid4().hex[:8]}"
-    _run_to_completion(joined, name, "append")
-    pairs = {
-        (r["l_id"], r["r_id"]) for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-    assert pairs == {(1, 10)}
-
-
-def test_session_window_stream(spark, tmp_path):
-    """session_window groups events separated by < gap into one session."""
-    schema = "event_id long, ts_s string, user_id long"
-    rows = [
-        (1, "2024-01-01 00:00:00", 1),
-        (2, "2024-01-01 00:10:00", 1),  # same session (gap 10 min < 30)
-        (3, "2024-01-01 02:00:00", 1),  # new session
-        (4, "2024-01-01 00:00:00", 2),
-    ]
-    d = tmp_path / f"sw_{uuid.uuid4().hex[:6]}"
-    spark.createDataFrame(rows, schema).withColumn(
-        "ts", F.to_timestamp("ts_s")
-    ).select("event_id", "ts", "user_id").coalesce(1).write.parquet(str(d))
-    stream = file_replay_stream(spark, str(d), spark.read.parquet(str(d)).schema)
-    name = f"sw_{uuid.uuid4().hex[:8]}"
-    _run_to_completion(session_windows(stream), name, "complete")
-    got = sorted(
-        (r["user_id"], r["n_events"])
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    )
-    assert got == [(1, 1), (1, 2), (2, 1)]
 
 
 def test_wire_decode_matches_reference_payload(spark):
@@ -568,175 +495,6 @@ def test_observed_wire_metrics_surface_in_progress(spark, tmp_path):
     assert metrics["n_ts_failures"] == 2  # garbage + bad timestamp
 
 
-def test_stream_stream_left_outer_emits_unmatched(spark, events_df, tmp_path):
-    """Left-outer stream-stream join: an unmatched left row is emitted
-    null-padded once both watermarks pass its join window (proved no
-    match can still arrive) — the reference's dashboard left-join
-    semantics (analytical_server.py:451-459) on live data."""
-    import datetime as dt
-
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.core import (
-        stream_stream_join,
-    )
-
-    schema = "k string, ts timestamp"
-    t = lambda h, m: dt.datetime(2024, 1, 1, h, m)  # noqa: E731
-
-    def write_stream_dir(name, batches):
-        d = tmp_path / name
-        d.mkdir()
-        for i, rows in enumerate(batches):
-            spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-                str(d / f"tmp{i}")
-            )
-        flat = tmp_path / f"{name}_flat"
-        flat.mkdir()
-        idx = 0
-        for sub in sorted(d.iterdir()):
-            for f in sorted(sub.glob("*.parquet")):
-                f.rename(flat / f"{idx:02d}.parquet")
-                idx += 1
-        return str(flat)
-
-    left_dir = write_stream_dir(
-        "ssl",
-        [
-            [("A", t(10, 0)), ("B", t(10, 0))],  # A matches, B won't
-            [("Z1", t(12, 0))],                   # watermark pusher
-            [("Z2", t(12, 1))],                   # extra batch: eviction fires
-        ],
-    )
-    right_dir = write_stream_dir(
-        "ssr",
-        [
-            [("A", t(10, 0))],
-            [("Y1", t(12, 0))],
-            [("Y2", t(12, 1))],
-        ],
-    )
-    ls = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(left_dir)
-    rs = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(right_dir)
-    joined = stream_stream_join(
-        ls, rs, "k", watermark="1 minute", max_skew="1 minute", how="leftOuter"
-    ).select(F.col("l.k").alias("lk"), F.col("r.k").alias("rk"))
-    name = f"sso_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql(f"SELECT lk, rk FROM {name}").collect()
-    matched = {(r["lk"], r["rk"]) for r in rows if r["rk"] is not None}
-    unmatched = {r["lk"] for r in rows if r["rk"] is None}
-    assert ("A", "A") in matched
-    assert "B" in unmatched, f"rows={rows}"
-
-
-def test_ohlc_stream_equals_batch(spark, events_df, replay_dir):
-    """Streaming OHLC candles (min_by/max_by state) == batch candles over
-    the same events — ordered aggregation survives micro-batch splits."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.core import (
-        ohlc_candles,
-    )
-
-    directory, schema = replay_dir
-    stream = file_replay_stream(spark, directory, schema)
-    name = f"ohlc_{uuid.uuid4().hex[:8]}"
-    _run_to_completion(ohlc_candles(stream), name, "complete")
-    got = {
-        r["window"]["start"]: (
-            r["open"], r["high"], r["low"], r["close"], r["n_events"]
-        )
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-    ord_key = F.struct(F.col("ts"), F.col("event_id"))
-    expected = {
-        r["minute"]: (r["open"], r["high"], r["low"], r["close"], r["n_events"])
-        for r in events_df.groupBy(
-            F.date_trunc("minute", "ts").alias("minute")
-        )
-        .agg(
-            F.min_by("value", ord_key).alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max_by("value", ord_key).alias("close"),
-            F.count("*").alias("n_events"),
-        )
-        .collect()
-    }
-    assert got == expected
-
-
-def test_ohlc_append_late_candle_correction(spark, tmp_path):
-    """Append-mode OHLC with scripted lateness: a late row that arrives
-    while its candle is still open (within watermark) corrects the candle
-    BEFORE the single append emission; a row arriving after the watermark
-    closed the candle is dropped, visibly counted in the state operator's
-    numRowsDroppedByWatermark metric — the correction/loss accounting a
-    production candle feed needs (the reference's Python service silently
-    miscounts the same row, analytical_server.py:33-36)."""
-    import shutil
-
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.core import (
-        ohlc_candles,
-    )
-
-    base = "2024-01-01 00:{s}"
-    batches = [
-        # candle 00:00 opens: open=10 (earliest), high=30
-        [(1, base.format(s="00:05"), 10.0), (2, base.format(s="00:20"), 30.0)],
-        # late-but-in-watermark row lands in the still-open candle
-        [(3, base.format(s="00:50"), 5.0)],
-        # watermark pusher: closes candle 00:00 -> single append emission
-        [(4, "2024-01-01 00:05:00", 99.0)],
-        # beyond-watermark straggler for the closed candle: dropped
-        [(5, base.format(s="40"), 1000.0)],
-    ]
-    schema = "event_id long, ts_s string, value double"
-    out = tmp_path / f"ohlc_late_{uuid.uuid4().hex[:8]}"
-    out.mkdir()
-    for i, rows in enumerate(batches):
-        tmp = out / f"b{i}"
-        spark.createDataFrame(rows, schema).withColumn(
-            "ts", F.to_timestamp("ts_s")
-        ).select("event_id", "ts", "value").coalesce(1).write.parquet(str(tmp))
-        pq = sorted(tmp.glob("*.parquet"))[0]
-        pq.rename(out / f"{i:02d}.parquet")
-        shutil.rmtree(tmp)
-    ts_schema = spark.read.parquet(str(out / "00.parquet")).schema
-    stream = file_replay_stream(spark, str(out), ts_schema, 1)
-    name = f"ohlc_app_{uuid.uuid4().hex[:8]}"
-    q = start_memory_sink(
-        ohlc_candles(stream, watermark="1 minute"),
-        name,
-        output_mode="append",
-        trigger=None,
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql(f"SELECT * FROM {name}").collect()
-    starts = [r["window"]["start"].isoformat() for r in rows]
-    # append mode: the closed candle appears exactly once — the
-    # beyond-watermark straggler (row 5) must not re-open/re-emit it
-    assert starts.count("2024-01-01T00:00:00") == 1
-    candles = {
-        r["window"]["start"].isoformat(): (
-            r["open"], r["high"], r["low"], r["close"], r["n_events"]
-        )
-        for r in rows
-    }
-    # the 00:00 candle carries the late correction (low/close=5 from row 3)
-    # and excludes the beyond-watermark row 5 (value 1000 appears nowhere);
-    # the drop is asserted on sink contents — the per-batch
-    # numRowsDroppedByWatermark metric is not guaranteed to register when
-    # the watermark advances in the same micro-batch as the straggler
-    assert candles["2024-01-01T00:00:00"] == (10.0, 30.0, 5.0, 5.0, 3)
-    assert all(r["high"] < 1000.0 for r in rows)
-
-
 def test_rocksdb_state_store_backend(spark, events_df, replay_dir):
     """The large-keyspace scale path: the same windowed aggregation runs
     on the RocksDB state store provider (state spills to local disk
@@ -801,9 +559,9 @@ def test_stream_scoring_against_batch_moments(spark, events_df, replay_dir):
     )
     z = (F.col("value") - F.col("mu")) / F.when(F.col("sd") != 0, F.col("sd"))
     stream = file_replay_stream(spark, directory, schema, 2)
-    scored = enrich_stream_static(
-        stream, moments, "event_type"
-    ).select("event_id", z.alias("z"))
+    scored = stream.join(F.broadcast(moments), "event_type").select(
+        "event_id", z.alias("z")
+    )
     name = f"score_{uuid.uuid4().hex[:8]}"
     _run_to_completion(scored, name, "append")
     got_flagged = {
@@ -822,29 +580,6 @@ def test_stream_scoring_against_batch_moments(spark, events_df, replay_dir):
     assert spark.sql(f"SELECT COUNT(*) n FROM {name}").first()["n"] == (
         events_df.count()
     )
-
-
-def test_decayed_window_counts_stream_equals_batch(spark, events_df, replay_dir):
-    """The streaming decayed-mass aggregation converges to the batch
-    computation of the same expression."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.core import (
-        decayed_window_counts,
-    )
-
-    directory, schema = replay_dir
-    stream = file_replay_stream(spark, directory, schema)
-    name = f"decay_{uuid.uuid4().hex[:8]}"
-    _run_to_completion(decayed_window_counts(stream), name, "complete")
-    got = {
-        (r["event_type"], r["window"]["start"]): (r["cnt"], r["decayed"])
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-    expected = {
-        (r["event_type"], r["window"]["start"]): (r["cnt"], r["decayed"])
-        for r in decayed_window_counts(events_df).collect()
-    }
-    assert got == expected
-    assert len(got) > 0
 
 
 def test_topk_sink_matches_batch_topk(spark, events_df, replay_dir):
@@ -912,49 +647,6 @@ def test_windowed_distinct_users_stream_equals_batch(
     }
     for w, est in got.items():
         assert abs(est - exact[w]) / exact[w] <= 0.05, (w, est, exact[w])
-
-
-def test_funnel_stream_chained_joins(spark, tmp_path):
-    """Chained stream-stream joins complete the funnel only for users
-    whose steps arrive in order within the window: user 7 completes,
-    user 8 never purchases, user 9's purchase is outside the window."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.core import (
-        funnel_stream,
-    )
-
-    schema = "event_id long, ts_s string, user_id long, event_type string"
-    rows = [
-        (1, "2024-01-01 00:00:00", 7, "view"),
-        (2, "2024-01-01 00:10:00", 7, "click"),
-        (3, "2024-01-01 00:20:00", 7, "purchase"),
-        (4, "2024-01-01 00:00:00", 8, "view"),
-        (5, "2024-01-01 00:05:00", 8, "click"),
-        (6, "2024-01-01 00:00:00", 9, "view"),
-        (7, "2024-01-01 00:10:00", 9, "click"),
-        (8, "2024-01-01 02:00:00", 9, "purchase"),  # > 30 min after click
-        (9, "2024-01-01 06:00:00", 99, "view"),  # watermark pusher
-        (10, "2024-01-01 06:00:00", 99, "click"),
-        (11, "2024-01-01 06:00:00", 99, "purchase"),
-    ]
-    d = tmp_path / f"fs_{uuid.uuid4().hex[:6]}"
-    spark.createDataFrame(rows, schema).withColumn(
-        "ts", F.to_timestamp("ts_s")
-    ).select("event_id", "ts", "user_id", "event_type").coalesce(
-        1
-    ).write.parquet(str(d))
-    stream = file_replay_stream(
-        spark, str(d), spark.read.parquet(str(d)).schema
-    )
-    name = f"fs_{uuid.uuid4().hex[:8]}"
-    _run_to_completion(funnel_stream(stream), name, "append")
-    got = {
-        (r["user_id"], r["vts"].isoformat(), r["pts"].isoformat())
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-    assert (7, "2024-01-01T00:00:00", "2024-01-01T00:20:00") in got
-    users = {u for (u, _, _) in got}
-    assert 8 not in users
-    assert 9 not in users
 
 
 def test_stateful_checkpoint_recovery_resumes_state(

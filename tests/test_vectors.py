@@ -1,45 +1,7 @@
-"""The Arrow-batched pandas_udf cosine path returns the same top-k as the
-pure-builtin codegen path (both float64)."""
+"""Vector operators: the power-method PCA component is unit-norm,
+deterministic and Rayleigh-monotone."""
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
-
-from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.catalog import (
-    table,
-)
-from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.functions.vectors import (
-    as_double,
-    cosine,
-    cosine_topk_pandas,
-)
-
-
-def test_pandas_udf_topk_equals_builtin(spark, sf_dir):
-    emb = table(spark, sf_dir, "embeddings")
-    qv = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
-    ]
-    others = emb.filter(F.col("vec_id") != 0)
-
-    got = cosine_topk_pandas(others, qv, k=10).collect()
-
-    qdf = spark.createDataFrame([(qv,)], "qv array<double>")
-    expected = (
-        others.crossJoin(F.broadcast(qdf))
-        .select(
-            "vec_id",
-            cosine(as_double(F.col("embedding")), F.col("qv")).alias("sim"),
-        )
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(10)
-        .collect()
-    )
-    assert [r["vec_id"] for r in got] == [r["vec_id"] for r in expected]
-    for g, e in zip(got, expected):
-        assert g["sim"] == pytest.approx(e["sim"], abs=1e-12)
 
 
 def test_pca_power_unit_norm_and_rayleigh_monotone(spark, sf_dir, duck):
