@@ -37,12 +37,6 @@ Inventory:
   — or by the operator itself when lineage allows
   (``q_hierarchy_data_edges`` unpersists inline after its eager
   checkpoints).
-- **streaming view checkpoints** — :func:`publish_view` is the one way
-  a stream publishes a global temp view (``start_topk_sink``,
-  ``ts_similarity_stream``, ``bitmap_distinct_stream``): it checkpoints
-  the frame eagerly, re-registers the view and frees the checkpoint
-  the view held before, so each view holds at most one live RDD;
-  :func:`release_transients` frees the last ones.
 - **disk-layout artifacts** (NOT RDD storage): the bucketed catalog
   tables (`operators/joins.py` ``_bucketed_pair``) live in the
   warehouse directory, cost no executor memory, and are dropped via
@@ -66,7 +60,6 @@ _FAMILIES: dict[str, None] = {}
 
 _TRANSIENTS: list[DataFrame] = []
 _CHECKPOINT_RDDS: list[tuple] = []
-_VIEW_CHECKPOINTS: dict[tuple, tuple] = {}
 
 
 def session_memo(family: str):
@@ -170,34 +163,6 @@ def track_checkpoint(df: DataFrame) -> DataFrame:
     return df
 
 
-def publish_view(df: DataFrame, name: str) -> DataFrame:
-    """Publish ``df`` as global temp view ``name`` and return the
-    checkpointed frame behind it.
-
-    The frame is materialized with an eager ``localCheckpoint`` first:
-    a lazy view over a micro-batch would re-execute the streaming plan
-    whenever it is next queried, which is both wrong (stale state) and
-    rejected by the state store's commit validation. Each publish then
-    frees the checkpoint RDD the view held before, so a view that a
-    stream republishes every micro-batch keeps ONE live checkpoint RDD
-    (without the release, each replaced checkpoint holds executor
-    storage until a JVM GC lets the ContextCleaner free it; round-6
-    audit finding). The new frame is self-contained, so dropping the
-    replaced RDD is safe.
-    (External readers racing the swap window would re-query the view on
-    the next trigger; in-process consumers read between batches.)"""
-    ck = df.localCheckpoint(eager=True)
-    ck.createOrReplaceGlobalTempView(name)
-    key = (ck.sparkSession.sparkContext.applicationId, name)
-    ref = _checkpoint_rdd(ck)
-    prev = _VIEW_CHECKPOINTS.pop(key, None)
-    if ref is not None:
-        _VIEW_CHECKPOINTS[key] = ref
-    if prev is not None:
-        _unpersist_rdd(prev)
-    return ck
-
-
 def release_transients() -> None:
     while _TRANSIENTS:
         try:
@@ -206,9 +171,6 @@ def release_transients() -> None:
             pass
     while _CHECKPOINT_RDDS:
         _unpersist_rdd(_CHECKPOINT_RDDS.pop())
-    for ref in list(_VIEW_CHECKPOINTS.values()):
-        _unpersist_rdd(ref)
-    _VIEW_CHECKPOINTS.clear()
 
 
 def SESSION_CACHE_CLEARERS() -> dict:

@@ -106,25 +106,3 @@ def write_bucketed(
         .mode(mode)
     )
     writer.saveAsTable(table_name)
-
-
-def write_training_shards(docs: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Materialize a corpus as fixed-size TRAINING SHARDS: the
-    deterministic global-shuffle rank (``operators/corpus.
-    shard_assignments`` — two-phase bucket construction, no
-    single-partition sort) assigns every doc a shard; the write is
-    hive-partitioned by ``shard_id`` with rows sorted by the global rank
-    within each shard, so a trainer streaming shard files in shard_id
-    order replays the exact logical shuffle order, reproducibly, from
-    any worker count."""
-    from .operators.corpus import shard_assignments
-
-    (
-        shard_assignments(docs)
-        .repartition("shard_id")
-        .sortWithinPartitions("grn")
-        .drop("hv", "b", "off", "bc")
-        .write.partitionBy("shard_id")
-        .mode(mode)
-        .parquet(path)
-    )

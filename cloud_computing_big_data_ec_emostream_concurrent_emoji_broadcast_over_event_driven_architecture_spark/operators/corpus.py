@@ -325,8 +325,7 @@ def q_dedup_bloom_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     with zero shuffle of the probe stream.  On a real cluster the bit
     set compacts further into a bitmap via bit-OR partial aggregation;
     the distinct-position relation is the engine-portable equivalent
-    with identical semantics.  ``streaming/core.bloom_probe_stream``
-    runs the probe side per micro-batch against this same bit set."""
+    with identical semantics."""
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     sh = shingle_rows(docs)
     seen_bits = bloom_bits(sh.filter(F.col("doc_id") % 2 == 0))
@@ -498,8 +497,7 @@ def shard_assignments(docs: DataFrame) -> DataFrame:
     shuffle rank and shard of every document, computed with the
     two-phase bucket construction (range-bucket on the hash's top bits,
     prefix-summed bucket offsets + within-bucket row_number) — no
-    single-partition sort anywhere.  ``catalog.write_training_shards``
-    materializes this as shard-partitioned parquet."""
+    single-partition sort anywhere."""
     h = docs.withColumn(
         "hv",
         md5_long(F.concat(F.lit("shuf:"), F.col("doc_id").cast("string"))),

@@ -342,11 +342,11 @@ def _minhash_oracle() -> str:
     """
 
 
-def lsh_band_rows(sig_df: DataFrame) -> DataFrame:
+def lsh_band_rows(sig_df: DataFrame, band_size: int = BAND_SIZE) -> DataFrame:
     """(doc_id, band, band_key) — one row per LSH band, band_key the
-    '_'-joined band slice of the signature: NUM_BANDS bands of
-    BAND_SIZE minhashes, the banding ``_minhash_cand_cte`` replays in
-    SQL."""
+    '_'-joined band slice of the signature: len(MINHASH_AB) // band_size
+    bands of ``band_size`` minhashes, the banding ``_minhash_cand_cte``
+    (default size) and ``_band_cand_sql`` replay in SQL."""
     return sig_df.select(
         "doc_id",
         F.explode(
@@ -358,20 +358,22 @@ def lsh_band_rows(sig_df: DataFrame) -> DataFrame:
                             "_",
                             *[
                                 F.element_at(
-                                    "sig", b * BAND_SIZE + j + 1
+                                    "sig", b * band_size + j + 1
                                 ).cast("string")
-                                for j in range(BAND_SIZE)
+                                for j in range(band_size)
                             ],
                         ).alias("band_key"),
                     )
-                    for b in range(NUM_BANDS)
+                    for b in range(len(MINHASH_AB) // band_size)
                 ]
             )
         ).alias("bk"),
     ).select("doc_id", "bk.band", "bk.band_key")
 
 
-def lsh_candidates_raw(sig_df: DataFrame) -> DataFrame:
+def lsh_candidates_raw(
+    sig_df: DataFrame, band_size: int = BAND_SIZE
+) -> DataFrame:
     """Band-collision pairs (doc_id_a < doc_id_b) WITHOUT the distinct —
     one row per shared band (a pair colliding in k bands appears k
     times, k ≤ NUM_BANDS). Cost is O(docs × bands) keyed on
@@ -398,7 +400,7 @@ def lsh_candidates_raw(sig_df: DataFrame) -> DataFrame:
     most pairs collide in most bands; there, reinstate
     :func:`lsh_candidates` (distinct-early) for the affected verifier.
     """
-    bands = lsh_band_rows(sig_df)
+    bands = lsh_band_rows(sig_df, band_size)
     # rename-then-join-on-key-list: sidesteps self-join attribute
     # ambiguity (both sides share one lineage); the a < b filter is
     # pushed into the sort-merge join condition by Catalyst
@@ -411,7 +413,7 @@ def lsh_candidates_raw(sig_df: DataFrame) -> DataFrame:
     )
 
 
-def lsh_candidates(sig_df: DataFrame) -> DataFrame:
+def lsh_candidates(sig_df: DataFrame, band_size: int = BAND_SIZE) -> DataFrame:
     """Distinct band-collision pairs (doc_id_a < doc_id_b) over a
     (doc_id, sig) table — the candidate generator skew audits count
     independently of verification (tests/test_skew.py plants a
@@ -419,7 +421,7 @@ def lsh_candidates(sig_df: DataFrame) -> DataFrame:
     the candidate count at exactly the hot clique, not x NUM_BANDS).
     The verifying tiers ride :func:`lsh_candidates_raw` and dedup
     survivors instead."""
-    return lsh_candidates_raw(sig_df).distinct()
+    return lsh_candidates_raw(sig_df, band_size).distinct()
 
 
 @register(
@@ -1497,44 +1499,9 @@ def _band_candidates(
     referenced by both the volume count and the recall join, and
     memoized so repeated invocations (multi-iteration bench loops)
     reuse one checkpoint instead of accumulating storage per call."""
-    nb = len(MINHASH_AB) // band_size
-    br = _hashed_shingle_sets(spark, sf_dir).select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            "_",
-                            *[
-                                F.element_at(
-                                    "sig", b * band_size + j + 1
-                                ).cast("string")
-                                for j in range(band_size)
-                            ],
-                        ).alias("band_key"),
-                    )
-                    for b in range(nb)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.band_key")
-    x, y = br.alias("x"), br.alias("y")
-    return (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.band_key") == F.col("y.band_key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_id_a"),
-            F.col("y.doc_id").alias("doc_id_b"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    return lsh_candidates(
+        _hashed_shingle_sets(spark, sf_dir), band_size
+    ).localCheckpoint(eager=True)
 
 
 @register(

@@ -849,8 +849,7 @@ def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one shuffle on user_id for the window, one channel rollup
     over purchase rows only. The two ignore-nulls last-values share
     one window spec (a single sort), and at 100 TB the state per user
-    is one running (ts, type) pair — the same shape the streaming
-    stateful twin keeps."""
+    is one running (ts, type) pair."""
     ev = table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")

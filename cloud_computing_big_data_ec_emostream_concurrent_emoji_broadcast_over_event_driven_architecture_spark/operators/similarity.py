@@ -2932,20 +2932,6 @@ def ivf2_shard_bits(n: int) -> int:
     return IVF2_SHARD_BITS_MAX
 
 
-def _ivf2_shard_col(v: Column, sb: int) -> Column:
-    """Packed shard code (int) for an array<double> vector: ``sb`` sign
-    bits from the dedicated IVF shard planes, bit r ← plane
-    IVF2_SHARD_PLANE_BASE + r. sb = 0 packs to the constant 0 — the
-    below-cap degenerate bucket key."""
-    if sb == 0:
-        return F.lit(0).cast("int")
-    bits = _rhp_bit_exprs(v, sb, start=IVF2_SHARD_PLANE_BASE)
-    code = bits[0]
-    for r in range(1, sb):
-        code = code + bits[r] * F.lit(1 << r)
-    return code.cast("int")
-
-
 def _ivf2_sb_sql(count_src: str = "(SELECT COUNT(*) FROM embeddings)") -> str:
     """Oracle twin of :func:`ivf2_shard_bits` over ``count_src`` (a
     scalar-subquery SQL string — the append path derives its frozen
@@ -3037,8 +3023,9 @@ def _ivf2_pc_ctes(p: str, pre_cte: str, gate_sql: str) -> str:
 
 def _ivf2_shard_ctes(p: str, width_sql: str, src: str | None = None) -> str:
     """CTE fragment computing ``{p}sfull`` (vec_id, sfull) from ``src``
-    (default ``{p}ev``) — the DuckDB replay of :func:`_ivf2_shard_col`
-    at fold width ``width_sql``: same dedicated planes, same
+    (default ``{p}ev``) — the DuckDB replay of the plane codes that
+    :func:`_ivf2_masked_shard_col` folds, at fold width ``width_sql``:
+    same dedicated planes, same
     exact-decimal sign sums, same packing. Width 0 leaves the contrib
     relation empty and every vector COALESCEs to code 0. The final
     per-cell shard is a prefix mask of this full code (``sfull %
@@ -4500,12 +4487,11 @@ def drift_audit_rows(
     spark: SparkSession, sf_dir: str, frozen: DataFrame
 ) -> DataFrame:
     """The drift-audit aggregate with the frozen-index side supplied by
-    the caller as (vec_id, sim_frozen) — shared by the batch
-    ``q_ivf_drift_audit`` (session append assignment) and the streamed-
-    index form (``streaming/core.ivf_index_append_stream``'s sink read,
-    round-10 item 5: the audit must be readable off an index whose
-    posting lists grew continuously). The retrain side and the
-    decimal-exact averages are identical either way."""
+    the caller as (vec_id, sim_frozen) — the batch
+    ``q_ivf_drift_audit`` passes the session append assignment, and
+    any index whose posting lists grew by appends can be audited the
+    same way. The retrain side and the decimal-exact averages do not
+    depend on the frozen side."""
     full = _twolevel_assignment(spark, sf_dir)
     fcents = _twolevel_centroids(spark, sf_dir)
     full_sim = full.join(F.broadcast(fcents), "cent_id").select(
@@ -4949,11 +4935,10 @@ def q_dedup_ingest_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ingest_dedup_rows(base_a: DataFrame, delta_a: DataFrame) -> DataFrame:
     """(doc_id, cent_id, matched_doc_id, max_sim) for every delta row
-    near-dup to a base row in its (cent_id, shard) bucket — the shared
-    core of batch ``q_dedup_ingest_incremental`` AND the streaming twin
-    (``streaming/core.semantic_dedup_stream`` routes each micro-batch
-    through the same frozen router and calls THIS on it), so
-    stream == batch holds by construction. Inputs are
+    near-dup to a base row in its (cent_id, shard) bucket — the pair
+    stage of ``q_dedup_ingest_incremental``. A verdict depends only on
+    the row itself and the frozen index, so any micro-batch routed
+    through the same frozen router gets the batch answer. Inputs are
     (vec_id, v, cent_id, shard[, ...]) frames from the frozen-router
     assignment paths."""
     from pyspark.sql import Window
@@ -5000,11 +4985,9 @@ def ann_serve_rows(
 ) -> DataFrame:
     """(q_id, rnk, vec_id, sim) — per-query top-``k`` standing-corpus
     neighbors within the query's frozen (cent_id, shard) bucket — the
-    shared core of batch ``q_ann_serve_incremental`` AND its streaming
-    twin (``streaming/core.ann_serve_stream`` routes each micro-batch
-    through the same frozen router and calls THIS on it), so
-    stream == batch holds by construction, exactly like
-    :func:`ingest_dedup_rows`. Inputs are (vec_id, v, cent_id, shard
+    rank stage of ``q_ann_serve_incremental``; like
+    :func:`ingest_dedup_rows`, an answer depends only on the query and
+    the frozen index. Inputs are (vec_id, v, cent_id, shard
     [, ...]) frames from the frozen-router assignment paths; a query
     with an empty bucket simply emits no rows (the recall audit
     families quantify that miss class)."""
@@ -5085,9 +5068,7 @@ def q_ann_serve_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-size-independent at constant occupancy, identical to
     ``q_dedup_ingest_incremental``'s cost shape (same join, no
     threshold, rank instead of argmax). The base side is read from its
-    persisted posting-list form, never recomputed; the streaming twin
-    (``streaming/core.ann_serve_stream``) runs the SAME pair stage per
-    micro-batch.
+    persisted posting-list form, never recomputed.
 
     The oracle replays training, both frozen-router assignments, and
     the per-query rank end to end (a fourth append-path live proof).

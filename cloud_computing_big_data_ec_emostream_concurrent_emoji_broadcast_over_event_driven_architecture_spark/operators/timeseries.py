@@ -1712,8 +1712,7 @@ def q_sliding_distinct_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast), the fan-out is bounded by cells × window-width — never
     events × width — and the final rollup keys on the endpoint hour.
     At 100 TB the bounded-keyspace alternative trades exactness for
-    state (the streaming HLL twin ``windowed_distinct_users``); this is
-    the exact batch form. All arithmetic is on integers and
+    state (an HLL sketch per window); this is the exact batch form. All arithmetic is on integers and
     timestamps."""
     ev = table(spark, sf_dir, "events")
     cells = ev.select(

@@ -6,10 +6,6 @@ The reference's wire record is one JSON object per Kafka message
 The engine declares it once and parses with ``from_json`` (schema-checked),
 not ``json_tuple`` (reference spark_consumer.py:28-30 declares a schema it
 never uses).
-
-The driver's generalized ``events`` table and TPC-H-ish tables are declared
-here too so streaming file sources can read with explicit schemas
-(readStream requires one).
 """
 
 from __future__ import annotations
@@ -28,33 +24,3 @@ EMOJI_EVENT_WIRE_SCHEMA = T.StructType(
 # ISO-8601 with microseconds, as produced by datetime.isoformat()
 # (reference client.py:111) — parsed WITHOUT the LEGACY policy.
 ISO_MICROS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-
-# --- driver testdata tables (TESTDATA.md / FIXTURES.md) -------------------
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), True),
-        T.StructField("ts", T.TimestampType(), True),
-        T.StructField("user_id", T.LongType(), True),
-        T.StructField("event_type", T.StringType(), True),
-        T.StructField("value", T.DoubleType(), True),
-        T.StructField("props", T.StringType(), True),
-    ]
-)
-
-DOCUMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ]
-)
-
-EMBEDDINGS_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType(), True),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), True),
-        T.StructField("label", T.IntegerType(), True),
-    ]
-)

@@ -50,9 +50,9 @@ def kafka_connector_status(
     "usable": bool, "reason": str}`` where ``reason`` is the
     human-readable verdict ("ok", or which of the connector jar /
     broker is missing and how to supply it). When the path is unusable,
-    the certified in-repo substitute is the ``emoji_wire`` custom
-    DataSource (sources/emoji_wire.py) — same wire format, replayable
-    offsets under checkpointing."""
+    the in-repo transport is the gateway spool
+    (``streaming/ingest.py`` ``ingest_stream``) — same wire format,
+    replayable file offsets under checkpointing."""
     import os as _os
     import socket as _socket
 
@@ -93,8 +93,8 @@ def kafka_connector_status(
         "reason": "ok"
         if usable
         else "; ".join(missing)
-        + " — use the emoji_wire custom DataSource as the certified "
-        "substitute (sources/emoji_wire.py)",
+        + " — use the gateway spool (streaming/ingest.py ingest_stream) "
+        "as the in-repo transport",
     }
 
 

@@ -105,44 +105,3 @@ def start_kafka_sink(
         .outputMode(output_mode)
         .start()
     )
-
-
-def start_topk_sink(
-    counts: DataFrame,
-    query_name: str,
-    k: int = 3,
-    key_col: str = "event_type",
-    window_col: str = "window",
-    order_col: str = "cnt",
-    output_mode: str = "complete",
-) -> StreamingQuery:
-    """Top-k per window on a STREAMING aggregate (the reference
-    dashboard's 'top emojis right now' view, analytical_server.py:105-109
-    recomputed per HTTP request). Rank functions aren't allowed directly
-    on a streaming aggregation, so the rank runs inside ``foreachBatch``
-    — per micro-batch, over the (small, window×key-sized) aggregate
-    output, never over raw events — and is published as global temp
-    view ``query_name`` through :func:`caches.publish_view` (the engine
-    twin of the dashboard endpoint)."""
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from ..caches import publish_view
-
-    def rank_batch(batch_df: DataFrame, batch_id: int) -> None:
-        w = W.partitionBy(window_col).orderBy(
-            F.desc(order_col), F.asc(key_col)
-        )
-        publish_view(
-            batch_df.withColumn("rank", F.row_number().over(w)).filter(
-                F.col("rank") <= k
-            ),
-            query_name,
-        )
-
-    return (
-        counts.writeStream.outputMode(output_mode)
-        .queryName(f"{query_name}_src")
-        .foreachBatch(rank_batch)
-        .start()
-    )

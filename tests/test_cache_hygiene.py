@@ -12,8 +12,6 @@ from __future__ import annotations
 
 import time
 
-import pytest
-
 from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.caches import (
     SESSION_CACHE_CLEARERS,
     clear_all_session_caches,
@@ -132,134 +130,3 @@ def test_pair_cache_owns_its_checkpoints(spark, sf_dir):
     assert persisted_rdd_count(spark) <= level
     clear_all_session_caches()
     assert _settled_count(spark, base) <= base
-
-
-def _live_rdds_after_view_stream(spark, sf_dir, tmp_path, start):
-    """Run ``start(stream, name)`` — a stream that republishes a global
-    temp view every micro-batch — over a 6-file event replay, and
-    return (live, base): the persisted-RDD count after it stopped and
-    the settled count before it started."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.catalog import (
-        table,
-    )
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.sources.streams import (
-        file_replay_stream,
-    )
-
-    ev = table(spark, sf_dir, "events")
-    lo = ev.agg(F.min("ts")).collect()[0][0]
-    events_df = ev.filter(
-        F.col("ts") < F.lit(lo) + F.expr("INTERVAL 2 HOURS")
-    ).select("event_id", "ts", "user_id", "event_type", "value")
-    out = tmp_path / "replay"
-    rows = events_df.orderBy("ts", "event_id").collect()
-    chunk = len(rows) // 6 + 1
-    for i in range(6):
-        part = rows[i * chunk : (i + 1) * chunk]
-        if part:
-            spark.createDataFrame(part, events_df.schema).coalesce(
-                1
-            ).write.parquet(str(out / f"part{i:02d}"))
-
-    clear_all_session_caches()
-    base = _settled_count(spark, 0)
-    name = f"view_hyg_{uuid.uuid4().hex[:8]}"
-    stream = file_replay_stream(spark, str(out), events_df.schema)
-    q = start(stream, name)
-    q.processAllAvailable()
-    q.stop()
-    return persisted_rdd_count(spark), base
-
-
-def test_streaming_view_swap_bounds_checkpoint_chain(spark, sf_dir, tmp_path):
-    """A multi-batch foreachBatch stream that re-checkpoints its
-    accumulated view each trigger must hold a BOUNDED number of
-    persisted RDDs — the swap releases each replaced batch's blocks
-    (pre-round-6 this leaked one checkpoint per micro-batch, unbounded
-    storage growth over a long stream)."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.core import (
-        bitmap_distinct_stream,
-    )
-
-    live, base = _live_rdds_after_view_stream(
-        spark,
-        sf_dir,
-        tmp_path,
-        lambda stream, name: bitmap_distinct_stream(stream, name=name),
-    )
-    # 6 micro-batches ran; only the LAST batch's two view checkpoints
-    # (words + out) may remain live — not one pair per batch
-    assert live - base <= 2, (live, base)
-    clear_all_session_caches()
-    assert _settled_count(spark, base) <= base
-
-
-def _ts_similarity(stream, name):
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.core import (
-        ts_similarity_stream,
-    )
-
-    return ts_similarity_stream(stream, name=name)
-
-
-def _topk(stream, name):
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.core import (
-        windowed_counts_scaled,
-    )
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.sinks import (
-        start_topk_sink,
-    )
-
-    return start_topk_sink(windowed_counts_scaled(stream), name, k=2)
-
-
-@pytest.mark.parametrize(
-    "start,bound",
-    [
-        # cells + output views
-        pytest.param(_ts_similarity, 2, id="ts_similarity_stream"),
-        # the ranked view
-        pytest.param(_topk, 1, id="start_topk_sink"),
-    ],
-)
-def test_view_publisher_bounds_checkpoint_chain(
-    spark, sf_dir, tmp_path, start, bound
-):
-    """The same bound for the other streams that publish a view every
-    micro-batch: each view keeps only its latest checkpoint live."""
-    live, base = _live_rdds_after_view_stream(spark, sf_dir, tmp_path, start)
-    assert live - base <= bound, (live, base)
-    clear_all_session_caches()
-    assert _settled_count(spark, base) <= base
-
-
-def test_publish_view_frees_the_replaced_checkpoint(spark):
-    """Republishing a view frees the checkpoint it held before at once,
-    even while the old frame is still referenced — so the JVM's
-    ContextCleaner (which frees an unreferenced checkpoint on GC, and
-    can make the stream-level bounds above pass without the swap) is
-    not what freed it."""
-    import uuid
-
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.caches import (
-        _checkpoint_rdd,
-        publish_view,
-    )
-
-    def persisted(df):
-        rdds = spark.sparkContext._jsc.getPersistentRDDs()  # noqa: SLF001
-        return rdds.containsKey(_checkpoint_rdd(df)[1])
-
-    name = f"pub_{uuid.uuid4().hex[:8]}"
-    first = publish_view(spark.range(10), name)
-    assert persisted(first)
-    second = publish_view(spark.range(20), name)
-    assert not persisted(first)
-    assert persisted(second)
-    assert spark.table(f"global_temp.{name}").count() == 20
-    clear_all_session_caches()
-    assert not persisted(second)

@@ -16,8 +16,6 @@ oracle-parity hash checks, which only prove Spark == DuckDB):
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators import (
     corpus,
 )
@@ -154,32 +152,3 @@ def test_winnowing_recovers_exact_tier_pairs(spark, sf_dir):
     assert exact, "exact tier found no pairs — fixture changed?"
     missed = exact - winnow
     assert not missed, f"winnowing missed exact-tier pairs: {missed}"
-
-
-def test_write_training_shards_roundtrip(spark, sf_dir, tmp_path):
-    """Shard-partitioned write replays the exact logical shuffle order:
-    per-shard row counts match the q_corpus_shuffle_shards aggregate,
-    and the global ranks read back contiguous from 1..N."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.catalog import (
-        table as cat_table,
-        write_training_shards,
-    )
-
-    docs = cat_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    path = str(tmp_path / "shards")
-    write_training_shards(docs, path)
-
-    back = spark.read.parquet(path)
-    per_shard = {
-        r["shard_id"]: r["n"]
-        for r in back.groupBy("shard_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    expected = {
-        r["shard_id"]: r["n_docs"]
-        for r in corpus.q_corpus_shuffle_shards(spark, sf_dir).collect()
-    }
-    assert per_shard == expected
-    ranks = sorted(r["grn"] for r in back.select("grn").collect())
-    assert ranks == list(range(1, len(ranks) + 1))

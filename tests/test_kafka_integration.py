@@ -51,8 +51,8 @@ requires_kafka = pytest.mark.skipif(
     reason=(
         "no Kafka broker reachable at SPARK_GRAFT_KAFKA_BOOTSTRAP="
         f"{BOOTSTRAP!r} — set it to host:port of a live broker; the "
-        "certified in-repo substitute for broker-less environments is "
-        "the emoji_wire custom DataSource (sources/emoji_wire.py)"
+        "in-repo transport for broker-less environments is the gateway "
+        "spool (streaming/ingest.py ingest_stream)"
     ),
 )
 
@@ -149,8 +149,8 @@ def test_kafka_round_trip_windowed_counts(spark, tmp_path):
 
 def test_connector_status_names_missing_pieces(spark):
     """The gate is observable: in a broker-less env the status names the
-    missing jar/broker explicitly and points at the emoji_wire
-    substitute (round-6 advisory: no silent/generic skip reasons)."""
+    missing jar/broker explicitly and points at the gateway spool
+    (round-6 advisory: no silent/generic skip reasons)."""
     from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.sources.streams import (
         kafka_connector_status,
     )
@@ -163,8 +163,8 @@ def test_connector_status_names_missing_pieces(spark):
         assert status["reason"] == "ok"
     else:
         # the reason must name at least one concrete missing piece and
-        # the certified substitute
-        assert "emoji_wire" in status["reason"]
+        # the in-repo transport
+        assert "ingest_stream" in status["reason"]
         assert ("jar" in status["reason"]) or ("broker" in status["reason"])
     # with no bootstrap the broker can never be reachable
     assert status["broker_reachable"] is False

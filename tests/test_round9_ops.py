@@ -7,7 +7,6 @@ from __future__ import annotations
 import math
 
 import duckdb
-import pytest
 from pyspark.sql import functions as F
 
 from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.caches import (
@@ -89,7 +88,9 @@ def test_shard_col_matches_oracle_replay(spark, sf_dir):
     """Bit-parity of the shard code itself at a FORCED nonzero width
     (the fixtures are all below the cap, so the 300x soak would be the
     only coverage otherwise): Spark's decimal-fold sign bits over the
-    dedicated planes == the DuckDB CTE replay, vector by vector."""
+    dedicated planes == the DuckDB CTE replay, vector by vector. Every
+    cell gets the full width (pc = wmax), so the masked fold returns
+    the whole code the CTE computes."""
     from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.functions.vectors import (
         as_double,
     )
@@ -100,7 +101,7 @@ def test_shard_col_matches_oracle_replay(spark, sf_dir):
         as_double_sql,
     )
     from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.similarity import (
-        _ivf2_shard_col,
+        _ivf2_masked_shard_col,
         _ivf2_shard_ctes,
     )
 
@@ -111,9 +112,9 @@ def test_shard_col_matches_oracle_replay(spark, sf_dir):
         .filter(F.col("vec_id") < 32)
         .select(
             "vec_id",
-            _ivf2_shard_col(as_double(F.col("embedding")), sb).alias(
-                "shard"
-            ),
+            _ivf2_masked_shard_col(
+                as_double(F.col("embedding")), F.lit(sb), sb
+            ).alias("shard"),
         )
         .collect()
     }

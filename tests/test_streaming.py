@@ -283,96 +283,6 @@ def test_sliding_rolling_equals_batch_range_frame(spark, events_df, replay_dir):
         assert got[(r["event_type"], r["window_end"])] == r["rolling"]
 
 
-def test_stateful_running_stats_equals_batch(spark, events_df, replay_dir):
-    """applyInPandasWithState running (count, sum) per key: the last
-    update-mode emission per key equals the batch groupBy — the custom
-    stateful path (SURVEY §2.9 ST5) pinned to the declarative one."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.stateful import (
-        running_key_stats,
-    )
-
-    directory, schema = replay_dir
-    stream = file_replay_stream(spark, directory, schema)
-    name = f"state_{uuid.uuid4().hex[:8]}"
-    _run_to_completion(running_key_stats(stream), name, "update")
-    rows = spark.sql(f"SELECT * FROM {name}").collect()
-    last: dict[str, tuple] = {}
-    for r in rows:  # n_events is monotone per key -> max == final state
-        prev = last.get(r["key"])
-        if prev is None or r["n_events"] > prev[0]:
-            last[r["key"]] = (r["n_events"], r["total_value"])
-        assert r["evicted"] is False
-    expected = {
-        r["event_type"]: (r["n"], r["total"])
-        for r in events_df.groupBy("event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("value").alias("total"),
-        )
-        .collect()
-    }
-    assert set(last) == set(expected)
-    for k, (n, total) in expected.items():
-        assert last[k][0] == n
-        assert last[k][1] == pytest.approx(total, rel=1e-9)
-
-
-def test_stateful_ttl_evicts_idle_keys(spark, events_df, tmp_path):
-    """Event-time TTL: a key that stops sending is evicted once the
-    watermark passes its last activity + ttl, emitting a final
-    evicted=true row — the watermark-driven generalization of the
-    reference's 3-minute deque eviction (analytical_server.py:49-52)."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.stateful import (
-        running_key_stats,
-    )
-
-    rows = events_df.limit(0)  # schema only
-    sess = events_df.sparkSession
-    mk = lambda i, typ, minute: (  # noqa: E731
-        i,
-        __import__("datetime").datetime(2024, 1, 1, 12, minute, 0),
-        1,
-        typ,
-        1.0,
-    )
-    # batch 1: both keys active; batches 2-3: only 'b' keeps sending,
-    # advancing the watermark far past a's last activity + ttl
-    batches = [
-        [mk(1, "a", 0), mk(2, "b", 0)],
-        [mk(3, "b", 30)],
-        [mk(4, "b", 59)],
-    ]
-    out = tmp_path / f"ttl_{uuid.uuid4().hex[:8]}"
-    out.mkdir()
-    for i, batch in enumerate(batches):
-        sess.createDataFrame(batch, rows.schema).coalesce(1).write.parquet(
-            str(out / f"b{i}")
-        )
-    flat = tmp_path / f"ttlflat_{uuid.uuid4().hex[:8]}"
-    flat.mkdir()
-    idx = 0
-    for sub in sorted(out.iterdir()):
-        for f in sorted(sub.glob("*.parquet")):
-            f.rename(flat / f"{idx:02d}.parquet")
-            idx += 1
-    stream = file_replay_stream(sess, str(flat), rows.schema, 1)
-    name = f"ttl_{uuid.uuid4().hex[:8]}"
-    _run_to_completion(
-        running_key_stats(
-            stream, watermark="0 seconds", ttl_ms=5 * 60 * 1000
-        ),
-        name,
-        "update",
-    )
-    emitted = spark.sql(f"SELECT * FROM {name}").collect()
-    evicted = [r for r in emitted if r["evicted"]]
-    assert any(r["key"] == "a" for r in evicted), (
-        "idle key 'a' should be evicted by the event-time TTL"
-    )
-    a_final = [r for r in evicted if r["key"] == "a"][0]
-    assert a_final["n_events"] == 1
-
-
 def test_checkpoint_recovery_resumes_state(spark, events_df, replay_dir, tmp_path):
     """Exactly-once recovery: a windowed aggregation killed mid-stream and
     restarted from its checkpoint resumes state (no double counting, no
@@ -415,28 +325,6 @@ def test_checkpoint_recovery_resumes_state(spark, events_df, replay_dir, tmp_pat
         .collect()
     }
     assert out == expected
-
-
-def test_stream_dedup_drops_redeliveries(spark, events_df, tmp_path):
-    """dropDuplicatesWithinWatermark: a stream where every micro-batch is
-    delivered twice (and some rows straddle batches) collapses to the
-    distinct batch rows."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.core import (
-        dedup_stream,
-    )
-
-    base = events_df.limit(500)
-    doubled = base.union(base)  # exact re-delivery of every row
-    out = tmp_path / f"dup_{uuid.uuid4().hex[:8]}"
-    doubled.orderBy("ts", "event_id").coalesce(3).write.parquet(str(out))
-    stream = file_replay_stream(spark, str(out), events_df.schema, 1)
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    _run_to_completion(
-        dedup_stream(stream, watermark="365 days"), name, "append"
-    )
-    got = spark.sql(f"SELECT COUNT(*) AS n, COUNT(DISTINCT event_id) AS d FROM {name}").collect()[0]
-    assert got["n"] == base.count()
-    assert got["d"] == base.count()
 
 
 def test_quarantine_split_catches_bad_wire_records(spark):
@@ -582,157 +470,6 @@ def test_stream_scoring_against_batch_moments(spark, events_df, replay_dir):
     )
 
 
-def test_topk_sink_matches_batch_topk(spark, events_df, replay_dir):
-    """The foreachBatch top-k view over the streaming windowed counts
-    converges to the batch top-k per window."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.sinks import (
-        start_topk_sink,
-    )
-    from pyspark.sql import Window as W
-
-    directory, schema = replay_dir
-    stream = file_replay_stream(spark, directory, schema)
-    name = f"topk_{uuid.uuid4().hex[:8]}"
-    q = start_topk_sink(windowed_counts_scaled(stream), name, k=2)
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        (r["event_type"], r["window"]["start"], r["rank"])
-        for r in spark.sql(f"SELECT * FROM global_temp.{name}").collect()
-    }
-    batch = windowed_counts_scaled(events_df)
-    w = W.partitionBy("window").orderBy(F.desc("cnt"), F.asc("event_type"))
-    expected = {
-        (r["event_type"], r["window"]["start"], r["rank"])
-        for r in batch.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 2)
-        .collect()
-    }
-    assert got == expected
-    assert len(got) > 0
-
-
-def test_windowed_distinct_users_stream_equals_batch(
-    spark, events_df, replay_dir
-):
-    """HLL register-max merging is order-insensitive, so the streamed
-    per-window distinct estimate is IDENTICAL to the batch run — and
-    within the configured rsd of the exact per-window distinct."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.core import (
-        windowed_distinct_users,
-    )
-
-    directory, schema = replay_dir
-    stream = file_replay_stream(spark, directory, schema)
-    name = f"dus_{uuid.uuid4().hex[:8]}"
-    _run_to_completion(windowed_distinct_users(stream), name, "complete")
-    got = {
-        r["window"]["start"]: r["approx_users"]
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-    expected = {
-        r["window"]["start"]: r["approx_users"]
-        for r in windowed_distinct_users(events_df).collect()
-    }
-    assert got == expected
-    assert len(got) > 0
-    exact = {
-        r["w"]: r["d"]
-        for r in events_df.groupBy(
-            F.window("ts", "1 minute").alias("win")
-        )
-        .agg(F.countDistinct("user_id").alias("d"))
-        .select(F.col("win.start").alias("w"), "d")
-        .collect()
-    }
-    for w, est in got.items():
-        assert abs(est - exact[w]) / exact[w] <= 0.05, (w, est, exact[w])
-
-
-def test_stateful_checkpoint_recovery_resumes_state(
-    spark, events_df, replay_dir, tmp_path
-):
-    """applyInPandasWithState killed mid-stream and restarted from its
-    checkpoint resumes the per-key (count, sum) state — the custom-state
-    twin of test_checkpoint_recovery_resumes_state (VERDICT r3 #6:
-    eviction + recovery pinned for both stateful paths)."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.stateful import (
-        running_key_stats,
-    )
-
-    directory, schema = replay_dir
-    ckpt = str(tmp_path / f"sckpt_{uuid.uuid4().hex[:8]}")
-    last: dict = {}
-
-    def capture(bdf, bid):
-        for r in bdf.collect():
-            prev = last.get(r["key"])
-            if prev is None or r["n_events"] > prev[0]:
-                last[r["key"]] = (r["n_events"], r["total_value"])
-
-    def start():
-        stream = file_replay_stream(spark, directory, schema)
-        return (
-            running_key_stats(stream)
-            .writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(capture)
-        )
-
-    q = start().trigger(processingTime="0 seconds").start()
-    while len(q.recentProgress) < 2:
-        import time as _t
-
-        _t.sleep(0.2)
-    q.stop()
-    q2 = start().trigger(availableNow=True).start()
-    q2.awaitTermination()
-
-    expected = {
-        r["event_type"]: (r["n"], r["total"])
-        for r in events_df.groupBy("event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    assert set(last) == set(expected)
-    for k, (n, total) in expected.items():
-        assert last[k][0] == n, f"{k}: resumed count {last[k][0]} != {n}"
-        assert last[k][1] == pytest.approx(total, rel=1e-9)
-
-
-def test_new_users_per_minute_stream_equals_batch(
-    spark, events_df, replay_dir
-):
-    """Streaming first-seen user counts equal the batch first-occurrence
-    decomposition (q_running_distinct_users' first stage) on in-order
-    replay — and their running sum ends at the exact distinct-user
-    count."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.core import (
-        new_users_per_minute,
-    )
-
-    directory, schema = replay_dir
-    stream = file_replay_stream(spark, directory, schema)
-    name = f"nu_{uuid.uuid4().hex[:8]}"
-    _run_to_completion(
-        new_users_per_minute(stream), name, "complete"
-    )
-    got = {
-        r["window"]["start"]: r["new_users"]
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-    batch = {
-        r["minute"]: r["n"]
-        for r in events_df.groupBy("user_id")
-        .agg(F.min(F.date_trunc("minute", "ts")).alias("minute"))
-        .groupBy("minute")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert got == batch
-    assert sum(got.values()) == events_df.select("user_id").distinct().count()
-
-
 def test_dq_monitor_stream_matches_batch_counts(spark, events_df, tmp_path):
     """The streaming constraint monitor's per-window counts equal the
     batch q_dq_audit arithmetic applied per minute — replaying the same
@@ -782,313 +519,3 @@ def test_dq_monitor_stream_matches_batch_counts(spark, events_df, tmp_path):
         .collect()
     }
     assert got == expected
-
-
-def test_attribution_stream_matches_batch_on_inorder_replay(
-    spark, events_df, tmp_path
-):
-    """The stateful last-touch attribution stream reproduces the batch
-    window's per-purchase channel exactly when events replay in event-
-    time order (micro-batch boundaries included: state carries the last
-    touch across batches)."""
-    import uuid as _uuid
-
-    from pyspark.sql import Window
-
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.joins import (
-        ATTR_TOUCHES,
-        ATTR_WINDOW_DAYS,
-    )
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.stateful import (
-        attribution_stream,
-    )
-
-    out = tmp_path / f"attr_{_uuid.uuid4().hex[:8]}"
-    # 4 ts-ordered files -> in-order micro-batches with maxFilesPerTrigger
-    rows = events_df.orderBy("ts", "event_id").collect()
-    chunk = len(rows) // 4 + 1
-    for i in range(4):
-        part = rows[i * chunk : (i + 1) * chunk]
-        if part:
-            spark.createDataFrame(part, events_df.schema).coalesce(
-                1
-            ).write.parquet(str(out), mode="append")
-    stream = (
-        spark.readStream.schema(events_df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(out))
-    )
-    name = f"attr_{_uuid.uuid4().hex[:8]}"
-    q = (
-        attribution_stream(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["user_id"], r["event_id"]): r["channel"]
-        for r in spark.table(name).collect()
-    }
-
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    is_touch = F.col("event_type").isin(*ATTR_TOUCHES)
-    batch = (
-        events_df.select(
-            "user_id",
-            "event_id",
-            "event_type",
-            F.col("ts").cast("timestamp").alias("ts"),
-            F.last(
-                F.when(is_touch, F.col("ts").cast("timestamp")),
-                ignorenulls=True,
-            )
-            .over(w)
-            .alias("lt_ts"),
-            F.last(F.when(is_touch, F.col("event_type")), ignorenulls=True)
-            .over(w)
-            .alias("lt_type"),
-        )
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            "event_id",
-            F.when(
-                F.col("lt_ts").isNotNull()
-                & (
-                    F.col("lt_ts")
-                    >= F.col("ts") - F.expr(f"INTERVAL {ATTR_WINDOW_DAYS} DAY")
-                ),
-                F.col("lt_type"),
-            )
-            .otherwise(F.lit("direct"))
-            .alias("channel"),
-        )
-    )
-    expected = {
-        (r["user_id"], r["event_id"]): r["channel"] for r in batch.collect()
-    }
-    assert got == expected
-
-
-def test_ts_similarity_stream_matches_batch_moments(
-    spark, events_df, replay_dir
-):
-    """Incrementally-merged cells give the SAME correlation table as a
-    one-shot batch over the full prefix: count partials are exact and
-    re-aggregable, so after the last micro-batch every moment — and
-    therefore every rounded corr — is bit-equal to batch."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.core import (
-        ts_similarity_stream,
-    )
-
-    directory, schema = replay_dir
-    stream = file_replay_stream(spark, directory, schema)
-    # the fixture is a 2-hour slice; use its most active user as the
-    # query series so the test is non-degenerate
-    quser = (
-        events_df.groupBy("user_id")
-        .count()
-        .orderBy(F.desc("count"), F.asc("user_id"))
-        .first()
-        .user_id
-    )
-    name = f"tssim_{uuid.uuid4().hex[:8]}"
-    q = ts_similarity_stream(stream, query_user=quser, name=name)
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        r.user_id: r.corr
-        for r in spark.sql(f"SELECT * FROM global_temp.{name}").collect()
-    }
-
-    cells = events_df.groupBy(
-        "user_id", F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(F.count("*").alias("cnt"))
-    n = cells.select("hour").distinct().count()
-    qcells = {
-        r.hour: r.cnt
-        for r in cells.filter(F.col("user_id") == quser).collect()
-    }
-    qsx = sum(qcells.values())
-    qsx2 = sum(v * v for v in qcells.values())
-    expected = {}
-    stats = {}
-    for r in cells.collect():
-        s = stats.setdefault(r.user_id, [0, 0, 0])  # sx, sx2, sxy
-        s[0] += r.cnt
-        s[1] += r.cnt * r.cnt
-        s[2] += r.cnt * qcells.get(r.hour, 0)
-    for user, (sx, sx2, sxy) in stats.items():
-        if user == quser:
-            continue
-        var_x = n * sx2 - sx * sx
-        var_q = n * qsx2 - qsx * qsx
-        if var_x > 0 and var_q > 0:
-            expected[user] = round(
-                (n * sxy - sx * qsx) / (var_x * var_q) ** 0.5, 6
-            )
-    assert got == expected
-    assert expected  # non-degenerate: some users scored
-
-
-def test_ts_similarity_stream_restart_resets_cells(
-    spark, events_df, replay_dir
-):
-    """Restarting a similarity stream under the SAME view name must NOT
-    merge the previous run's cells (batch 0 drops the stale view) — a
-    second identical replay yields the identical correlation table, not
-    a double-counted one."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.core import (
-        ts_similarity_stream,
-    )
-
-    directory, schema = replay_dir
-    name = f"tssim_rs_{uuid.uuid4().hex[:8]}"
-    quser = (
-        events_df.groupBy("user_id")
-        .count()
-        .orderBy(F.desc("count"), F.asc("user_id"))
-        .first()
-        .user_id
-    )
-
-    def run_once():
-        stream = file_replay_stream(spark, directory, schema)
-        q = ts_similarity_stream(stream, query_user=quser, name=name)
-        q.processAllAvailable()
-        q.stop()
-        return {
-            r.user_id: r.corr
-            for r in spark.sql(
-                f"SELECT * FROM global_temp.{name}"
-            ).collect()
-        }
-
-    first = run_once()
-    second = run_once()
-    assert first  # non-degenerate
-    assert second == first
-
-
-def test_bitmap_distinct_stream_equals_batch(spark, events_df, replay_dir):
-    """Incrementally OR-merged bitmap words give the SAME exact
-    per-type distinct counts as the batch operator on the full prefix,
-    and a same-name restart resets rather than double-merges."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.core import (
-        bitmap_distinct_stream,
-    )
-
-    name = f"bmd_{uuid.uuid4().hex[:8]}"
-    directory, schema = replay_dir
-
-    def run_once():
-        stream = file_replay_stream(spark, directory, schema)
-        q = bitmap_distinct_stream(stream, name=name)
-        q.processAllAvailable()
-        q.stop()
-        return {
-            r.event_type: (r.distinct_users, r.bitmap_words)
-            for r in spark.sql(
-                f"SELECT * FROM global_temp.{name}"
-            ).collect()
-        }
-
-    got = run_once()
-    expected = {
-        r.event_type: (r.d, r.w)
-        for r in events_df.groupBy("event_type", F.expr("user_id div 63"))
-        .agg(F.count_distinct("user_id").alias("du"))
-        .groupBy("event_type")
-        .agg(
-            F.sum("du").cast("bigint").alias("d"),
-            F.count("*").cast("bigint").alias("w"),
-        )
-        .collect()
-    }
-    assert got == expected
-    assert got  # non-degenerate
-    assert run_once() == got  # restart resets, not double-merges
-
-
-def test_growth_flows_stream_equals_batch_classification(
-    spark, sf_dir, tmp_path
-):
-    """In-order multi-day replay: the stateful streaming classifier
-    emits exactly the batch growth-accounting flows (churn excluded —
-    the documented streaming divergence: absence needs a timer)."""
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.streaming.stateful import (
-        growth_flows_stream,
-    )
-
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    # multi-day replay (the shared 2-hour fixture is single-day —
-    # degenerate for day-grain flows): all events, 4 ts-ordered chunks
-    directory = tmp_path / f"growth_replay_{uuid.uuid4().hex[:8]}"
-    rows = ev.orderBy("ts", "event_id").collect()
-    chunk = len(rows) // 4 + 1
-    for i in range(4):
-        part = rows[i * chunk : (i + 1) * chunk]
-        if part:
-            spark.createDataFrame(part, ev.schema).coalesce(1).write.parquet(
-                str(directory / f"p{i:02d}")
-            )
-    flat = tmp_path / f"growth_flat_{uuid.uuid4().hex[:8]}"
-    flat.mkdir()
-    n = 0
-    for sub in sorted(directory.iterdir()):
-        for f in sorted(sub.glob("*.parquet")):
-            f.rename(flat / f"{n:02d}.parquet")
-            n += 1
-
-    stream = file_replay_stream(spark, str(flat), ev.schema)
-    name = f"growth_{uuid.uuid4().hex[:8]}"
-    q = (
-        growth_flows_stream(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        (r.user_id, r.day_num, r.flow)
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-
-    from pyspark.sql import Window as W
-
-    cells = ev.select(
-        "user_id",
-        (
-            F.unix_timestamp(F.date_trunc("day", F.col("ts")).cast("timestamp"))
-            / 86400
-        )
-        .cast("long")
-        .alias("day_num"),
-    ).distinct()
-    w = W.partitionBy("user_id").orderBy("day_num")
-    flow = (
-        F.when(F.lag("day_num").over(w).isNull(), F.lit("new"))
-        .when(
-            F.col("day_num") - F.lag("day_num").over(w) == 1,
-            F.lit("retained"),
-        )
-        .otherwise(F.lit("resurrected"))
-    )
-    expected = {
-        (r.user_id, r.day_num, r.flow)
-        for r in cells.select("user_id", "day_num", flow.alias("flow"))
-        .collect()
-    }
-    assert got == expected
-    assert len({f for (_, _, f) in got}) == 3  # all three flows occur
