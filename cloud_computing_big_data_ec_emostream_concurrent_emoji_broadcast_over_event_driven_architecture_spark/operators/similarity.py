@@ -10,7 +10,13 @@
 - IVF-style ANN: assign every vector to its nearest of K k-means-trained
   centroids (deterministic first-K init + unrolled Lloyd iterations, so
   fully oracle-checkable), probe only the query's centroid bucket — the
-  index-shaped scale path.
+  index-shaped scale path. Two indexes: the fixed-K=8 flat one and the
+  dynamic-K two-level one. The two-level index has ONE build
+  (:func:`_ivf2_index`) over a base slice: the whole corpus for the
+  session's index, the first 3/4 for the frozen append index. Every
+  query reads either index through the same bucket-join helpers —
+  probe + top-k, batch rank, within-bucket pairs — keyed on
+  ``["cent_id"]`` (fixed-K) or ``["cent_id", "shard"]`` (two-level).
 
 All cosine math is float64 after explicit casts in BOTH engines; outputs
 round to 6 dp before hashing. The LSH hyperplanes are derived from an
@@ -750,6 +756,21 @@ def _kmeans_recenter(assigned_df: DataFrame) -> DataFrame:
     )
 
 
+def _lloyd(emb: DataFrame, k: int, train: DataFrame) -> DataFrame:
+    """(cent_id, cv) after {KMEANS_ITERS} Lloyd rounds over ``train``
+    (vec_id, v) from the deterministic first-``k`` init (vec_id < k of
+    ``emb``) — the one k-means training loop: the fixed-K index trains
+    on the whole corpus, the two-level build on its bounded sample. The
+    oracles unroll the same rounds (``_kmeans_assign_sql`` /
+    ``_kmeans_recenter_sql``)."""
+    cents = emb.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
+    )
+    for _ in range(KMEANS_ITERS):
+        cents = _kmeans_recenter(_kmeans_assign(train, cents))
+    return cents
+
+
 def trained_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(cent_id, cv) — K-MEANS-TRAINED centroids: {KMEANS_ITERS} Lloyd
     iterations from the deterministic first-K init (the same unrolled
@@ -761,12 +782,7 @@ def trained_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
-    cents = emb.filter(F.col("vec_id") < IVF_K).select(
-        F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
-    )
-    for _ in range(KMEANS_ITERS):
-        cents = _kmeans_recenter(_kmeans_assign(emb, cents))
-    return cents
+    return _lloyd(emb, IVF_K, emb)
 
 
 @session_memo("ivf_assignments")
@@ -779,33 +795,155 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @session_memo("ivf_assignments")
 def _ivf_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, embedding, cent_id) — every vector assigned to its
-    nearest centroid bucket, PERSISTED per (session, sf_dir): the IVF
-    index is built once and shared by every ANN query in the session
+    """(vec_id, v, cent_id) — every vector assigned to its nearest
+    centroid bucket, PERSISTED per (session, sf_dir): the IVF index is
+    built once and shared by every ANN query in the session
     (single-probe, multi-probe, the recall-curve helper). At cluster
     scale this is the index-build job whose output would live as a
     bucketed table; rebuilding it per query — the previous shape — is
     what the 10× scaling run flagged."""
-    emb = table(spark, sf_dir, "embeddings")
-    cents = _ivf_centroids(spark, sf_dir)
-    prepped = _spread(
-        emb.select(
+    emb = table(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double(F.col("embedding")).alias("v")
+    )
+    return _kmeans_assign(emb, _ivf_centroids(spark, sf_dir)).persist()
+
+
+# --- the bucket-join layer ---------------------------------------------------
+# Every IVF query reads an index frame (vec_id, v, *keys) through these
+# helpers; ``keys`` is the bucket key: ["cent_id"] on the fixed-K index,
+# ["cent_id", "shard"] on the two-level one. Cosines keep the oracle's
+# dot/(norm·norm) op order with the index row first, so hoisting a norm
+# out of the pair loop never moves a bit.
+
+
+def _probe_rank(cents: DataFrame, qrow: DataFrame, nprobe: int) -> DataFrame:
+    """(cent_id, cv, *qrow columns) of the ``nprobe`` centroids nearest
+    the query vector ``qv`` of the one-row ``qrow`` (cosine, cent_id
+    tie-break) — the multi-probe list, a K-row rank."""
+    from pyspark.sql import Window
+
+    w = Window.orderBy(F.desc("q_sim"), F.asc("cent_id"))
+    return (
+        cents.crossJoin(F.broadcast(qrow))
+        .withColumn("q_sim", cosine(F.col("cv"), F.col("qv")))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= nprobe)
+        .drop("q_sim", "rn")
+    )
+
+
+def _probe(index: DataFrame, probes: DataFrame, keys: list[str]) -> DataFrame:
+    """Rows of ``index`` in the buckets ``probes`` lists (one row per
+    probed bucket: its ``keys`` plus the query's columns, ``qv`` at
+    least), the query vector itself excluded — one broadcast equi-join
+    on the bucket key, so the probe scans only the listed buckets."""
+    return index.join(F.broadcast(probes), keys).filter(
+        F.col("vec_id") != QUERY_VEC_ID
+    )
+
+
+def _cosine_topk(cand: DataFrame, *cols: str) -> DataFrame:
+    """(vec_id, *cols, sim): the top-{TOP_K} probed candidates by cosine
+    to ``qv`` (vec_id tie-break) as TakeOrderedAndProject — each
+    partition keeps k rows, no global sort."""
+    return (
+        cand.select(
+            "vec_id", *cols, cosine(F.col("v"), F.col("qv")).alias("sim")
+        )
+        .orderBy(F.desc("sim"), F.asc("vec_id"))
+        .limit(TOP_K)
+        .select("vec_id", *cols, F.round("sim", 6).alias("sim"))
+    )
+
+
+def _batch_topk(index: DataFrame, queries: DataFrame, keys: list[str]) -> DataFrame:
+    """(q_id, rnk, vec_id, sim): each query's top-{ANN_BATCH_K} rows of
+    ``index`` within its own bucket (every row when ``keys`` is empty —
+    the exact side of a recall audit), one per-query window with the
+    vec_id tie-break. ``queries`` is index-shaped (vec_id, v, *keys);
+    the caller decides whether it broadcasts. Both sides' norms are
+    computed once per row, not once per pair."""
+    from pyspark.sql import Window
+
+    q = queries.select(
+        *keys,
+        F.col("vec_id").alias("q_id"),
+        F.col("v").alias("qv"),
+        norm(F.col("v")).alias("nq"),
+    )
+    scored = (
+        index.select(*keys, "vec_id", "v", norm(F.col("v")).alias("nv"))
+        .join(q, keys or None)
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .select(
+            "q_id",
             "vec_id",
-            "embedding",
-            as_double(F.col("embedding")).alias("v"),
-            norm(as_double(F.col("embedding"))).alias("nv"),
+            (
+                dot(F.col("v"), F.col("qv")) / (F.col("nv") * F.col("nq"))
+            ).alias("sim"),
         )
     )
+    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
     return (
-        prepped.crossJoin(F.broadcast(_cent_array(cents)))
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= ANN_BATCH_K)
         .select(
+            "q_id",
+            F.col("rnk").cast("int").alias("rnk"),
             "vec_id",
-            "embedding",
-            _argmin_cent(
-                F.col("v"), F.col("nv"), F.col("cs")
-            ).alias("cent_id"),
+            F.round("sim", 6).alias("sim"),
         )
-        .persist()
+    )
+
+
+def _recall_rows(index: DataFrame, keys: list[str]) -> DataFrame:
+    """(q_id, k, n_hit, recall): recall@{ANN_BATCH_K} of single-probe
+    search over ``index`` against the exact top-{ANN_BATCH_K}, for the
+    {ANN_BATCH_Q}-query batch (vec_id < {ANN_BATCH_Q}). Both rank lists
+    are |q|×k rows, so the intersection and the rollup broadcast."""
+    queries = F.broadcast(index.filter(F.col("vec_id") < ANN_BATCH_Q))
+    exact = _batch_topk(index, queries, [])
+    approx = _batch_topk(index, queries, keys)
+    hits = (
+        exact.join(F.broadcast(approx), ["q_id", "vec_id"])
+        .groupBy("q_id")
+        .agg(F.count("*").cast("bigint").alias("n_hit"))
+    )
+    n_hit = F.coalesce(F.col("n_hit"), F.lit(0).cast("bigint"))
+    return (
+        queries.select(F.col("vec_id").alias("q_id"))
+        .join(F.broadcast(hits), "q_id", "left")
+        .select(
+            "q_id",
+            F.lit(ANN_BATCH_K).alias("k"),
+            n_hit.alias("n_hit"),
+            F.round(n_hit * F.lit(1.0) / ANN_BATCH_K, 4).alias("recall"),
+        )
+    )
+
+
+def _bucket_pairs(a: DataFrame, b: DataFrame, keys: list[str]) -> DataFrame:
+    """(*keys, id_a, id_b, sim) for every pair of an ``a`` row and a
+    ``b`` row in the same bucket — the within-bucket pair scan, an
+    equi-join on ``keys`` (SortMergeJoin: measured faster than a
+    shuffled hash join on rows that carry whole vectors). Each row's
+    norm is computed once on the join input, not once per pair."""
+
+    def side(df: DataFrame, s: str) -> DataFrame:
+        return df.select(
+            *keys,
+            F.col("vec_id").alias(f"id_{s}"),
+            F.col("v").alias(f"v{s}"),
+            norm(F.col("v")).alias(f"n{s}"),
+        )
+
+    return side(a, "a").join(side(b, "b"), keys).select(
+        *keys,
+        "id_a",
+        "id_b",
+        (dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias(
+            "sim"
+        ),
     )
 
 
@@ -918,26 +1056,11 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline amortizes index construction — and the probe scans ~N/K
     vectors instead of N (nprobe=1 here; recall/latency trades by
     raising it)."""
-    emb = table(spark, sf_dir, "embeddings")
     assigned = _ivf_assignment(spark, sf_dir)
-    qbucket = assigned.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("cent_id").alias("q_cent")
+    qrow = assigned.filter(F.col("vec_id") == QUERY_VEC_ID).select(
+        "cent_id", F.col("v").alias("qv")
     )
-    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        as_double(F.col("embedding")).alias("qv")
-    )
-    sim_to_q = cosine(as_double(F.col("embedding")), F.col("qv"))
-    return (
-        assigned.join(
-            F.broadcast(qbucket), F.col("cent_id") == F.col("q_cent")
-        )
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", sim_to_q.alias("sim"))
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(TOP_K)
-        .select("vec_id", F.round("sim", 6).alias("sim"))
-    )
+    return _cosine_topk(_probe(assigned, qrow, ["cent_id"]))
 
 
 @register(
@@ -1051,46 +1174,27 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ann_ivf_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    nprobe: int = 1,
-    query_vec_id: int = QUERY_VEC_ID,
-    k: int = TOP_K,
-) -> DataFrame:
+def _ivf_probes(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
+    """(cent_id, cv, qv): the ``nprobe`` fixed-K buckets nearest the
+    query vector — the probe list of the fixed-K multi-probe queries."""
+    qrow = _ivf_assignment(spark, sf_dir).filter(
+        F.col("vec_id") == QUERY_VEC_ID
+    ).select(F.col("v").alias("qv"))
+    return _probe_rank(_ivf_centroids(spark, sf_dir), qrow, nprobe)
+
+
+def ann_ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
     """IVF top-k with multi-probe: scan the ``nprobe`` centroid buckets
     nearest to the query instead of just its own. Recall rises toward
     brute-force as nprobe → K while probe cost stays ~nprobe·N/K —
     the standard IVF recall/latency dial (tests measure the recall curve
     against the exact q_similarity_topk baseline)."""
-    from pyspark.sql import Window
-
-    emb = table(spark, sf_dir, "embeddings")
-    cents = _ivf_centroids(spark, sf_dir)
-    assigned = _ivf_assignment(spark, sf_dir)
-    q0 = emb.filter(F.col("vec_id") == query_vec_id).select(
-        as_double(F.col("embedding")).alias("qv")
-    )
-    qw = Window.orderBy(F.desc("q_sim"), F.asc("cent_id"))
-    probe_buckets = (
-        cents.crossJoin(F.broadcast(q0))
-        .select("cent_id", cosine(F.col("cv"), F.col("qv")).alias("q_sim"))
-        .withColumn("rn", F.row_number().over(qw))
-        .filter(F.col("rn") <= nprobe)
-        .select(F.col("cent_id").alias("q_cent"))
-    )
-    q = emb.filter(F.col("vec_id") == query_vec_id).select(
-        as_double(F.col("embedding")).alias("qv")
-    )
-    sim_to_q = cosine(as_double(F.col("embedding")), F.col("qv"))
-    return (
-        assigned.join(F.broadcast(probe_buckets), F.col("cent_id") == F.col("q_cent"))
-        .filter(F.col("vec_id") != query_vec_id)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", sim_to_q.alias("sim"))
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", F.round("sim", 6).alias("sim"))
+    return _cosine_topk(
+        _probe(
+            _ivf_assignment(spark, sf_dir),
+            _ivf_probes(spark, sf_dir, nprobe),
+            ["cent_id"],
+        )
     )
 
 
@@ -1535,32 +1639,7 @@ def q_ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     on cent_id, and the final top-k is TakeOrderedAndProject — no global
     sort, no all-pairs anywhere. Recall-vs-nprobe is curve-tested in
     tests/test_ann_recall.py."""
-    emb = table(spark, sf_dir, "embeddings")
-    cents = _ivf_centroids(spark, sf_dir)
-    assigned = _ivf_assignment(spark, sf_dir)
-    from pyspark.sql import Window
-
-    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        as_double(F.col("embedding")).alias("qv")
-    )
-    qw = Window.orderBy(F.desc("q_sim"), F.asc("cent_id"))
-    probes = (
-        cents.crossJoin(F.broadcast(q))
-        .select("cent_id", cosine(F.col("cv"), F.col("qv")).alias("q_sim"))
-        .withColumn("rn", F.row_number().over(qw))
-        .filter(F.col("rn") <= IVF_PROBES)
-        .select("cent_id")
-    )
-    sim_to_q = cosine(as_double(F.col("embedding")), F.col("qv"))
-    return (
-        assigned.join(F.broadcast(probes), "cent_id")
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", sim_to_q.alias("sim"))
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(TOP_K)
-        .select("vec_id", F.round("sim", 6).alias("sim"))
-    )
+    return ann_ivf_topk(spark, sf_dir, IVF_PROBES)
 
 
 PCA_DIM = 64  # fixture embedding width (FIXTURES.md)
@@ -1767,24 +1846,23 @@ PQ_K = 4  # codebook entries per subspace (anchor vectors vec_id 0..3)
 PQ_TOP = 10
 
 
-def _pq_elem(dialect: str, vec: str, i: int) -> str:
-    if dialect == "duck":
-        return f"CAST({vec}[{i}] AS DOUBLE)"
-    return f"CAST(element_at({vec}, {i}) AS DOUBLE)"
+def _pq_elem(vec: str, i: int) -> str:
+    return f"CAST({vec}[{i}] AS DOUBLE)"
 
 
-def _pq_sq(dialect: str, va: str, vb: str, lo: int, hi: int) -> str:
-    """Squared L2 over dims [lo, hi] — IDENTICAL term order in both
-    dialects so the double arithmetic is bit-equal across engines."""
+def _pq_sq(va: str, vb: str, lo: int, hi: int) -> str:
+    """Squared L2 over dims [lo, hi] as unrolled DuckDB SQL — the
+    left-associated term order the Spark fold (:func:`_sq_fold_sql`)
+    adds in, so the double arithmetic is bit-equal across engines."""
     terms = [
-        f"({_pq_elem(dialect, va, i)} - {_pq_elem(dialect, vb, i)})"
-        f" * ({_pq_elem(dialect, va, i)} - {_pq_elem(dialect, vb, i)})"
+        f"({_pq_elem(va, i)} - {_pq_elem(vb, i)})"
+        f" * ({_pq_elem(va, i)} - {_pq_elem(vb, i)})"
         for i in range(lo, hi + 1)
     ]
     return "(" + " + ".join(terms) + ")"
 
 
-def _pq_dist_cols(dialect: str) -> list[str]:
+def _pq_dist_cols() -> list[str]:
     """d{s}_{k}: vector-to-centroid subspace distances; g{s}_{k}: the
     query's distances to the same centroids (the ADC lookup table)."""
     cols = []
@@ -1792,51 +1870,14 @@ def _pq_dist_cols(dialect: str) -> list[str]:
         lo, hi = s * PQ_SUB + 1, (s + 1) * PQ_SUB
         for k in range(PQ_K):
             cols.append(
-                f"{_pq_sq(dialect, 'embedding', f'a{k}', lo, hi)} AS d{s}_{k}"
+                f"{_pq_sq('embedding', f'a{k}', lo, hi)} AS d{s}_{k}"
             )
             cols.append(
-                f"{_pq_sq(dialect, 'qe', f'a{k}', lo, hi)} AS g{s}_{k}"
+                f"{_pq_sq('qe', f'a{k}', lo, hi)} AS g{s}_{k}"
             )
     cols.append(
-        f"{_pq_sq(dialect, 'embedding', 'qe', 1, PCA_DIM)} AS ex"
+        f"{_pq_sq('embedding', 'qe', 1, PCA_DIM)} AS ex"
     )
-    return cols
-
-
-def _pq_sq_col(va: str, vb: str, lo: int, hi: int) -> Column:
-    """Squared L2 over dims [lo, hi] as a zip_with/aggregate fold —
-    BIT-EQUAL to :func:`_pq_sq`'s unrolled left-associated sum that the
-    DuckDB oracle evaluates: the fold adds the same squared terms in the
-    same left-to-right order, and its +0.0 seed is exact because a
-    square is never -0.0 (0.0 + t == t for every t ≥ 0 in IEEE 754)."""
-    n = hi - lo + 1
-    return F.aggregate(
-        F.zip_with(
-            F.slice(F.col(va), lo, n),
-            F.slice(F.col(vb), lo, n),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _pq_dist_cols_spark() -> list[Column]:
-    """The Spark twin of ``_pq_dist_cols`` built as COLUMNS, not parsed
-    SQL strings. The unrolled string form expands to ~2.3k expression
-    nodes across 65 projections — measured ~6.7 s of analysis plus a
-    whole-stage-codegen body big enough to hurt (exec 2.3 s vs 0.3 s on
-    the same 2k-row scan); the fold form is one nested higher-order
-    expression per column, same values bit-for-bit (pinned by
-    tests/test_round8_ops.py::test_pq_fold_equals_unrolled_strings)."""
-    cols = []
-    for s in range(PQ_M):
-        lo, hi = s * PQ_SUB + 1, (s + 1) * PQ_SUB
-        for k in range(PQ_K):
-            cols.append(_pq_sq_col("embedding", f"a{k}", lo, hi).alias(f"d{s}_{k}"))
-            cols.append(_pq_sq_col("qe", f"a{k}", lo, hi).alias(f"g{s}_{k}"))
-    cols.append(_pq_sq_col("embedding", "qe", 1, PCA_DIM).alias("ex"))
     return cols
 
 
@@ -1958,17 +1999,23 @@ def _pq_cb_recenter(assigned: DataFrame) -> DataFrame:
 
 @session_memo("ivf_assignments")
 def _pq_trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ONE-row frame of the trained codebook, pivoted to columns
-    ``c{s}_{k}`` (each a PQ_SUB-dim array<double>) — the broadcast
-    payload the scoring queries cross-join, exactly like the old anchor
-    row. Trained on the same bounded sample as the two-level IVF
-    (vec_id < min(N, IVF2_SAMPLE)), {KMEANS_ITERS} Lloyd iterations,
+    """The trained codebook (see :func:`_pq_codebook`) over the same
+    bounded sample as the two-level IVF (vec_id < min(N, IVF2_SAMPLE)),
     session-persisted."""
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
     n = emb.count()
-    samp = emb.filter(F.col("vec_id") < min(n, IVF2_SAMPLE))
+    return _pq_codebook(emb.filter(F.col("vec_id") < min(n, IVF2_SAMPLE)))
+
+
+def _pq_codebook(samp: DataFrame) -> DataFrame:
+    """ONE-row frame of the codebook trained per subspace on ``samp``
+    (vec_id, v), pivoted to columns ``c{s}_{k}`` (each a PQ_SUB-dim
+    array<double>) — the broadcast payload the scoring queries
+    cross-join, exactly like the old anchor row. First-{PQ_K} init,
+    {KMEANS_ITERS} Lloyd iterations, persisted; the raw and the
+    residual codebooks both train here."""
     sv_rows = _spread(_pq_subvector_rows(samp))
     cb = sv_rows.filter(F.col("vec_id") < PQ_K).select(
         "s", F.col("vec_id").cast("int").alias("k"), F.col("sv").alias("cw")
@@ -2062,33 +2109,19 @@ def _pqt_ctes(prefix: str = "pq", src: str | None = None) -> str:
     return ",\n        ".join(ctes)
 
 
-def _pqt_sq(dialect: str, vec: str, cw: str, lo: int) -> str:
+def _pqt_sq(vec: str, cw: str, lo: int) -> str:
     """Squared L2 between ``vec`` dims [lo, lo+PQ_SUB-1] and the
-    PQ_SUB-dim codeword list ``cw`` — identical term order in both
-    dialects (the trained twin of :func:`_pq_sq`)."""
+    PQ_SUB-dim codeword list ``cw`` — the trained twin of
+    :func:`_pq_sq`, same term order."""
     terms = [
-        f"({_pq_elem(dialect, vec, lo + i)} - {cw}[{i + 1}])"
-        f" * ({_pq_elem(dialect, vec, lo + i)} - {cw}[{i + 1}])"
+        f"({_pq_elem(vec, lo + i)} - {cw}[{i + 1}])"
+        f" * ({_pq_elem(vec, lo + i)} - {cw}[{i + 1}])"
         for i in range(PQ_SUB)
     ]
     return "(" + " + ".join(terms) + ")"
 
 
-def _pqt_sq_col(vec: str, cw: str, lo: int) -> Column:
-    """Spark fold twin of :func:`_pqt_sq` — bit-equal by the +0.0-seed
-    square-terms argument (see :func:`_pq_sq_col`)."""
-    return F.aggregate(
-        F.zip_with(
-            F.slice(F.col(vec), lo, PQ_SUB),
-            F.col(cw),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
-
-
-def _pqt_dist_cols(dialect: str) -> list[str]:
+def _pqt_dist_cols() -> list[str]:
     """Trained-codebook scoring columns: same d/g/ex names as the anchor
     family, so ``_pq_adc_expr`` applies unchanged."""
     cols = []
@@ -2096,23 +2129,12 @@ def _pqt_dist_cols(dialect: str) -> list[str]:
         lo = s * PQ_SUB + 1
         for k in range(PQ_K):
             cols.append(
-                f"{_pqt_sq(dialect, 'embedding', f'c{s}_{k}', lo)} AS d{s}_{k}"
+                f"{_pqt_sq('embedding', f'c{s}_{k}', lo)} AS d{s}_{k}"
             )
             cols.append(
-                f"{_pqt_sq(dialect, 'qe', f'c{s}_{k}', lo)} AS g{s}_{k}"
+                f"{_pqt_sq('qe', f'c{s}_{k}', lo)} AS g{s}_{k}"
             )
-    cols.append(f"{_pq_sq(dialect, 'embedding', 'qe', 1, PCA_DIM)} AS ex")
-    return cols
-
-
-def _pqt_dist_cols_spark() -> list[Column]:
-    cols = []
-    for s in range(PQ_M):
-        lo = s * PQ_SUB + 1
-        for k in range(PQ_K):
-            cols.append(_pqt_sq_col("embedding", f"c{s}_{k}", lo).alias(f"d{s}_{k}"))
-            cols.append(_pqt_sq_col("qe", f"c{s}_{k}", lo).alias(f"g{s}_{k}"))
-    cols.append(_pq_sq_col("embedding", "qe", 1, PCA_DIM).alias("ex"))
+    cols.append(f"{_pq_sq('embedding', 'qe', 1, PCA_DIM)} AS ex")
     return cols
 
 
@@ -2130,9 +2152,9 @@ def _pqt_dist_cols_spark() -> list[Column]:
 # subspace's (min distance, selected ADC entry) in a single
 # transform+fold, so a scoring relation is PQ_M struct expressions
 # instead of 64 named columns. Bit-equality with the unrolled oracle
-# SQL is pinned by tests/test_round11_opt.py. The unrolled builders
-# above remain the oracle-side (DuckDB) template and the pinned
-# cross-check surface.
+# SQL, evaluated by DuckDB over the same fixture, is pinned by
+# tests/test_round11_opt.py. The unrolled builders above are the
+# oracle-side (DuckDB) template only.
 
 
 def _sq_fold_sql(a: str, b: str) -> str:
@@ -2140,7 +2162,7 @@ def _sq_fold_sql(a: str, b: str) -> str:
     shared inner loop of every PQ distance, as Spark SQL text. Same
     left-to-right term order as the unrolled oracle SQL; the 0.0D seed
     is exact because a square is never -0.0; the double casts are exact
-    (float widening) or no-ops, matching ``_pq_sq_col``/``_pqt_sq_col``.
+    (float widening) or no-ops, matching the oracle's ``CAST(x AS DOUBLE)``.
     Text instead of Column calls because each python-lambda Column costs
     dozens of py4j round trips — building the 16 per-subspace folds as
     Columns measured ~1.0 s of pure driver time per scoring relation,
@@ -2168,10 +2190,16 @@ def _pq_packed_cb(cb: DataFrame, alias: str = "cb") -> DataFrame:
     )
 
 
-def _pq_packed_anchor_cb(anchors: DataFrame, alias: str = "cb") -> DataFrame:
-    """Packed form of the ANCHOR codebook (codeword (s, k) = subspace-s
-    slice of anchor vector a{k}) — the slices are exactly the dims the
-    unrolled ``_pq_dist_cols`` terms touch."""
+def _pq_packed_anchor_cb(emb: DataFrame, alias: str = "cb") -> DataFrame:
+    """Packed form of the ANCHOR codebook over ``emb`` (vec_id, v):
+    codeword (s, k) is the subspace-s slice of anchor vector vec_id k —
+    exactly the dims the unrolled ``_pq_dist_cols`` terms touch."""
+    anchors = emb.filter(F.col("vec_id") < PQ_K).groupBy().agg(
+        *[
+            F.max(F.when(F.col("vec_id") == k, F.col("v"))).alias(f"a{k}")
+            for k in range(PQ_K)
+        ]
+    )
     return anchors.select(
         F.array(
             *[
@@ -2236,18 +2264,35 @@ def _pq_packed_rec_sql(vec: str, cb: str = "cb") -> str:
 
 def _pq_packed_ex_sql(vec: str, qvec: str) -> str:
     """Full-vector exact squared L2 (the ``ex`` audit column) — the
-    same fold ``_pq_sq_col(vec, qvec, 1, PCA_DIM)`` builds, as text."""
+    oracle's ``ex`` term as one fold."""
     return _sq_fold_sql(
         f"slice({vec}, 1, {PCA_DIM})", f"slice({qvec}, 1, {PCA_DIM})"
     )
 
 
-def _pq_packed_adc_ex(vec: str, qvec: str) -> list[Column]:
-    """[adc, ex] for the serving queries."""
-    return [
-        F.expr(_pq_packed_adc_sql(vec, qvec)).alias("adc"),
-        F.expr(_pq_packed_ex_sql("embedding", "qe")).alias("ex"),
-    ]
+def _pq_topk(
+    cand: DataFrame, cb: DataFrame, vec: str = "v", qvec: str = "qv"
+) -> DataFrame:
+    """(vec_id, adc_dist, exact_dist): the ADC top-{PQ_TOP} of ``cand``
+    against the one-row packed codebook ``cb`` — ``vec``'s codes scored
+    with ``qvec``'s lookup table (the residual queries pass their
+    residual columns), the exact squared L2 of ``v`` to ``qv``
+    alongside as the quantization-error audit; TakeOrderedAndProject."""
+    return (
+        cand.crossJoin(F.broadcast(cb))
+        .select(
+            "vec_id",
+            F.expr(_pq_packed_adc_sql(vec, qvec)).alias("adc"),
+            F.expr(_pq_packed_ex_sql("v", "qv")).alias("ex"),
+        )
+        .orderBy("adc", "vec_id")
+        .limit(PQ_TOP)
+        .select(
+            "vec_id",
+            F.round("adc", 6).alias("adc_dist"),
+            F.round("ex", 6).alias("exact_dist"),
+        )
+    )
 
 
 def _pq_audit_pair(
@@ -2256,8 +2301,9 @@ def _pq_audit_pair(
     vb: tuple[str, str, str],
 ) -> DataFrame:
     """BOTH audit variants from ONE scoring relation. ``base`` carries
-    the candidate rows plus two packed codebooks (``cba``, ``cbb``);
-    each variant is (name, vec, qvec). One projection computes
+    the candidate rows (``v``, ``qv`` and each variant's vector
+    columns) plus two packed codebooks (``cba``, ``cbb``); each variant
+    is (name, vec, qvec). One projection computes
     (adc, rec) per variant plus the shared ``ex``; the readout is ONE
     combined MSE aggregation (one relation pass for both variants,
     where the per-variant form paid two), one ADC top list per variant,
@@ -2274,7 +2320,7 @@ def _pq_audit_pair(
         F.expr(_pq_packed_rec_sql(veca, "cba")).alias("rec_a"),
         F.expr(_pq_packed_adc_sql(vecb, qvecb, "cbb")).alias("adc_b"),
         F.expr(_pq_packed_rec_sql(vecb, "cbb")).alias("rec_b"),
-        F.expr(_pq_packed_ex_sql("embedding", "qe")).alias("ex"),
+        F.expr(_pq_packed_ex_sql("v", "qv")).alias("ex"),
     )
 
     def _mse(c: str) -> Column:
@@ -2315,7 +2361,7 @@ def _pq_audit_pair(
 
 
 def _pq_oracle() -> str:
-    dist_cols = ",\n                   ".join(_pqt_dist_cols("duck"))
+    dist_cols = ",\n                   ".join(_pqt_dist_cols())
     return f"""
         WITH {_pqt_ctes()},
         q AS (
@@ -2363,25 +2409,13 @@ def q_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines with identical double-arithmetic term order, so the oracle
     hash-checks the full scoring pipeline including argmin code
     assignment."""
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cbp = _pq_trained_codebook(spark, sf_dir)
-    q_row = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qe")
+    emb = table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").alias("v")
     )
-    dists = (
-        emb.crossJoin(F.broadcast(_pq_packed_cb(cbp)))
-        .crossJoin(F.broadcast(q_row))
-        .select("vec_id", *_pq_packed_adc_ex("embedding", "qe"))
-    )
-    return (
-        dists
-        .orderBy("adc", "vec_id")
-        .limit(PQ_TOP)
-        .select(
-            "vec_id",
-            F.round("adc", 6).alias("adc_dist"),
-            F.round("ex", 6).alias("exact_dist"),
-        )
+    q_row = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
+    return _pq_topk(
+        emb.crossJoin(F.broadcast(q_row)),
+        _pq_packed_cb(_pq_trained_codebook(spark, sf_dir)),
     )
 
 
@@ -2444,8 +2478,8 @@ def _pq_variant_sql(name: str, dists: str) -> str:
         f"MAX(CASE WHEN vec_id = {k} THEN embedding END) AS a{k}"
         for k in range(PQ_K)
     ))
-    .replace("{ACOLS}", ",\n                   ".join(_pq_dist_cols("duck")))
-    .replace("{TCOLS}", ",\n                   ".join(_pqt_dist_cols("duck")))
+    .replace("{ACOLS}", ",\n                   ".join(_pq_dist_cols()))
+    .replace("{TCOLS}", ",\n                   ".join(_pqt_dist_cols()))
     .replace("{AROW}", _pq_variant_sql("anchor", "adists"))
     .replace("{TROW}", _pq_variant_sql("trained", "tdists")),
 )
@@ -2466,26 +2500,18 @@ def q_pq_train_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair over the scored relation, and decimal-exact MSE folds so the
     corpus mean is summation-order-independent. The oracle replays
     codebook training AND both scoring pipelines end to end."""
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    emb = table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").alias("v")
+    )
     cbp = _pq_trained_codebook(spark, sf_dir)
-    aq = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qe")
-    )
-    anchors = emb.filter(F.col("vec_id") < PQ_K).groupBy().agg(
-        *[
-            F.max(
-                F.when(F.col("vec_id") == k, F.col("embedding"))
-            ).alias(f"a{k}")
-            for k in range(PQ_K)
-        ]
-    )
+    aq = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
     base = (
-        emb.crossJoin(F.broadcast(_pq_packed_anchor_cb(anchors, "cba")))
+        emb.crossJoin(F.broadcast(_pq_packed_anchor_cb(emb, "cba")))
         .crossJoin(F.broadcast(_pq_packed_cb(cbp, "cbb")))
         .crossJoin(F.broadcast(aq))
     )
     return _pq_audit_pair(
-        base, ("anchor", "embedding", "qe"), ("trained", "embedding", "qe")
+        base, ("anchor", "v", "qv"), ("trained", "v", "qv")
     )
 
 
@@ -2585,7 +2611,7 @@ def _ivf_pq_oracle() -> str:
         f"MAX(CASE WHEN vec_id = {k} THEN embedding END) AS a{k}"
         for k in range(PQ_K)
     )
-    dist_cols = ",\n                   ".join(_pq_dist_cols("duck"))
+    dist_cols = ",\n                   ".join(_pq_dist_cols())
     return f"""
         WITH {_ASSIGN_SQL},
         qv AS (
@@ -2647,48 +2673,9 @@ def q_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     individually oracle-checked; this pins their composition (bucket
     restriction must not change any surviving ADC score)."""
     assigned = _ivf_assignment(spark, sf_dir)
-    cents = _ivf_centroids(spark, sf_dir)
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    from pyspark.sql import Window
-
-    qv = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        as_double(F.col("embedding")).alias("qvv")
-    )
-    qw = Window.orderBy(F.desc("q_sim"), F.asc("cent_id"))
-    probes = (
-        cents.crossJoin(F.broadcast(qv))
-        .select("cent_id", cosine(F.col("cv"), F.col("qvv")).alias("q_sim"))
-        .withColumn("rn", F.row_number().over(qw))
-        .filter(F.col("rn") <= IVF_PROBES)
-        .select("cent_id")
-    )
-    anchors = emb.filter(F.col("vec_id") < PQ_K).groupBy().agg(
-        *[
-            F.max(
-                F.when(F.col("vec_id") == k, F.col("embedding"))
-            ).alias(f"a{k}")
-            for k in range(PQ_K)
-        ]
-    )
-    qe_row = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("qe")
-    )
-    dists = (
-        assigned.join(F.broadcast(probes), "cent_id")
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(_pq_packed_anchor_cb(anchors)))
-        .crossJoin(F.broadcast(qe_row))
-        .select("vec_id", *_pq_packed_adc_ex("embedding", "qe"))
-    )
-    return (
-        dists
-        .orderBy("adc", "vec_id")
-        .limit(PQ_TOP)
-        .select(
-            "vec_id",
-            F.round("adc", 6).alias("adc_dist"),
-            F.round("ex", 6).alias("exact_dist"),
-        )
+    probes = _ivf_probes(spark, sf_dir, IVF_PROBES)
+    return _pq_topk(
+        _probe(assigned, probes, ["cent_id"]), _pq_packed_anchor_cb(assigned)
     )
 
 
@@ -2742,40 +2729,13 @@ def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     smallest) matches q_dedup_exact/q_dedup_embedding so removal lists
     compose across tiers."""
     assigned = _ivf_assignment(spark, sf_dir)
-    # per-vector norm computed on the JOIN INPUT (N rows), not per
-    # within-cluster pair (~N·cluster_size) — same op order as cosine()
-    # so sims stay bit-identical (the q_similarity_pairs hoist)
-    sides = assigned.select(
-        "vec_id", "cent_id", as_double(F.col("embedding")).alias("v")
-    ).withColumn("nv", norm(F.col("v")))
-    a = sides.select(
-        F.col("cent_id"),
-        F.col("vec_id").alias("keep_cand"),
-        F.col("v").alias("va"),
-        F.col("nv").alias("na"),
+    pairs = _bucket_pairs(assigned, assigned, ["cent_id"]).filter(
+        (F.col("id_a") < F.col("id_b")) & (F.col("sim") >= SEMDEDUP_EPS)
     )
-    b = sides.select(
-        F.col("cent_id"),
-        F.col("vec_id").alias("drop_id"),
-        F.col("v").alias("vb"),
-        F.col("nv").alias("nb"),
-    )
-    pairs = (
-        a.join(b, "cent_id")
-        .filter(F.col("keep_cand") < F.col("drop_id"))
-        .withColumn(
-            "sim",
-            dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
-        )
-        .filter(F.col("sim") >= SEMDEDUP_EPS)
-    )
-    return (
-        pairs.groupBy(F.col("drop_id").alias("doc_id"))
-        .agg(
-            F.min("cent_id").alias("cent_id"),
-            F.min("keep_cand").alias("kept_doc_id"),
-            F.round(F.max("sim"), 6).alias("max_sim"),
-        )
+    return pairs.groupBy(F.col("id_b").alias("doc_id")).agg(
+        F.min("cent_id").alias("cent_id"),
+        F.min("id_a").alias("kept_doc_id"),
+        F.round(F.max("sim"), 6).alias("max_sim"),
     )
 
 
@@ -2826,36 +2786,9 @@ def q_ann_batch_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-sized. Rank ordering ties break on vec_id so cross-engine
     ulp-identical cosines rank identically (both engines fold the
     dot/norm sums in index order over identical doubles)."""
-    from pyspark.sql import Window
-
     assigned = _ivf_assignment(spark, sf_dir)
-    sides = assigned.select(
-        "vec_id", "cent_id", as_double(F.col("embedding")).alias("v")
-    )
-    queries = sides.filter(F.col("vec_id") < ANN_BATCH_Q).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("cent_id").alias("q_cent"),
-        F.col("v").alias("qv"),
-    )
-    scored = (
-        sides.join(
-            F.broadcast(queries),
-            (F.col("cent_id") == F.col("q_cent"))
-            & (F.col("vec_id") != F.col("q_id")),
-        )
-        .select("q_id", "vec_id", cosine(F.col("v"), F.col("qv")).alias("sim"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= ANN_BATCH_K)
-        .select(
-            "q_id",
-            F.col("rnk").cast("int").alias("rnk"),
-            "vec_id",
-            F.round("sim", 6).alias("sim"),
-        )
-    )
+    queries = F.broadcast(assigned.filter(F.col("vec_id") < ANN_BATCH_Q))
+    return _batch_topk(assigned, queries, ["cent_id"])
 
 
 # (SEMDEDUP_TARGET_CLUSTER is defined with the module constants at the top.)
@@ -2879,7 +2812,9 @@ def q_ann_batch_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
 # membership still hash-matches. Every dynamic-K rider —
 # q_dedup_semdedup_scaled (the headline), q_ann_ivf_scaled,
 # q_semdedup_threshold_sweep, q_ann_ivf_twolevel — shares ONE
-# session-persisted build. The flat assign survives only at FIXED K=8
+# session-persisted build. The build has one implementation,
+# :func:`_ivf2_index`, whose only argument is the base slice: the whole
+# corpus here, the first 3/4 for the frozen append index below. The flat assign survives only at FIXED K=8
 # (the pedagogical q_dedup_semdedup / q_ann_ivf family), where N·K is
 # linear by construction.
 # Dial sizing: K grows with the corpus up to the cap; the cap keeps
@@ -3071,15 +3006,34 @@ def _isqrt4_sql(k_sql: str) -> str:
     )
 
 
+class _IVF2Index(NamedTuple):
+    """One two-level build over a base slice (see :func:`_ivf2_index`)."""
+
+    emb: DataFrame  # (vec_id, v): the whole double-cast corpus
+    t: int  # the base slice is vec_id < t
+    wmax: int  # fold width of the shard code: max per-cell width
+    cents: DataFrame  # (cent_id, cv): the trained fine centroids
+    coarse_arr: DataFrame  # one row: the coarse routers' struct array
+    groups: DataFrame  # (coarse_id, fs): fine centroids per router
+    pcm: DataFrame | None  # (cent_id, pc) widths; None below the gate
+    pre: DataFrame  # (vec_id, v, cent_id) of the base slice
+    assigned: DataFrame  # (vec_id, v, cent_id, shard) of the base slice
+
+
 @session_memo("ivf_assignments")
-def _twolevel_index(spark: SparkSession, sf_dir: str) -> dict:
-    """The two-level sample-trained build, session-persisted — THE
-    dynamic-K index every scaled rider shares: ``assigned`` (vec_id, v,
-    cent_id, shard), the trained fine centroids ``cents`` (cent_id, cv)
-    and the persisted intermediates ``pre``/``pcm`` (None below the
-    shard gate). ``shard`` is the re-shard tier's OCCUPANCY-ADAPTIVE
-    hash-plane split: each cell's own width (:func:`_ivf2_pc_col` over
-    its pre-split occupancy, gated inert below the K cap by
+def _ivf2_index(
+    spark: SparkSession, sf_dir: str, base: tuple[int, int]
+) -> _IVF2Index:
+    """THE two-level sample-trained build, session-persisted, over the
+    base slice ``base = (num, den)``: the first ``num·n // den`` vectors
+    by vec_id. Two slices exist — ``(1, 1)``, the whole corpus, is the
+    dynamic-K index every scaled rider shares; ``(IVF_APPEND_NUM,
+    IVF_APPEND_DEN)`` is the frozen append index the delta routes
+    through (:func:`_append_assignment`). Every dial — K, the router
+    count, the sample, the shard gate — derives from the slice's count.
+    ``shard`` is the re-shard tier's OCCUPANCY-ADAPTIVE hash-plane
+    split: each cell's own width (:func:`_ivf2_pc_col` over its
+    pre-split occupancy, gated inert below the K cap by
     :func:`ivf2_shard_bits`), prefix-masked from one full-width sign
     code; riders whose cost is bucket-bound join on BOTH
     (cent_id, shard)."""
@@ -3089,18 +3043,16 @@ def _twolevel_index(spark: SparkSession, sf_dir: str) -> dict:
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
     n = emb.count()
-    k = max(8, min(n // SEMDEDUP_TARGET_CLUSTER, IVF2_K_CAP))
-    samp_n = min(n, IVF2_SAMPLE)
+    num, den = base
+    t = (num * n) // den
+    k = max(8, min(t // SEMDEDUP_TARGET_CLUSTER, IVF2_K_CAP))
     k2 = max(4, math.isqrt(k))
-    sb = ivf2_shard_bits(n)
-    samp = emb.filter(F.col("vec_id") < samp_n)
-    cents = samp.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
-    )
-    for _ in range(KMEANS_ITERS):
-        cents = _kmeans_recenter(_kmeans_assign(samp, cents))
-    coarse_arr = _cent_array(cents.filter(F.col("cent_id") < k2))
-    # route each fine centroid to its nearest coarse router
+    samp = emb.filter(F.col("vec_id") < min(t, IVF2_SAMPLE))
+    cents = _lloyd(emb, k, samp).persist()
+    coarse_arr = _cent_array(cents.filter(F.col("cent_id") < k2)).persist()
+    # route each fine centroid to its nearest coarse router, then one
+    # cent_id-ascending struct array per router (the _argmin_cent
+    # tie-break order)
     routed = (
         cents.withColumn("ncv", norm(F.col("cv")))
         .crossJoin(F.broadcast(coarse_arr))
@@ -3112,19 +3064,51 @@ def _twolevel_index(spark: SparkSession, sf_dir: str) -> dict:
             ).alias("coarse_id"),
         )
     )
-    # per-router fine-centroid struct arrays (cent_id-ascending, the
-    # _argmin_cent tie-break order)
     groups = routed.groupBy("coarse_id").agg(
         F.array_sort(
             F.collect_list(
-                F.struct(
-                    "cent_id", "cv", norm(F.col("cv")).alias("nc")
-                )
+                F.struct("cent_id", "cv", norm(F.col("cv")).alias("nc"))
             )
         ).alias("fs")
+    ).persist()
+    pre = _route_pre(
+        emb.filter(F.col("vec_id") < t) if num < den else emb,
+        coarse_arr,
+        groups,
     )
+    pcm, wmax = None, 0
+    if ivf2_shard_bits(t) > 0:
+        # occupancy-adaptive per-cell split: the slice's own routed
+        # occupancies pick each cell's width — stored with the index
+        # like FAISS's inverted-list layout, and NEVER re-derived on
+        # append (the delta reuses these widths; drift/stats audits say
+        # when to rebuild). pcm is K rows (broadcast); the wmax action
+        # is a K-row aggregate. Below the gate no cell splits and the
+        # shard is constant 0 — bit-identical to every pre-round-9
+        # fixture result.
+        pre = pre.persist()
+        pcm = (
+            pre.groupBy("cent_id")
+            .agg(F.count("*").alias("occ"))
+            .select("cent_id", _ivf2_pc_col(F.col("occ")).alias("pc"))
+            .persist()
+        )
+        wmax = pcm.agg(F.max("pc")).first()[0]
+    assigned = _mask_shard(pre, pcm, wmax).persist()
+    return _IVF2Index(
+        emb, t, wmax, cents, coarse_arr, groups, pcm, pre, assigned
+    )
+
+
+def _route_pre(
+    df: DataFrame, coarse_arr: DataFrame, groups: DataFrame
+) -> DataFrame:
+    """(vec_id, v, cent_id) of rows assigned through a frozen two-level
+    router: coarse broadcast fold, then the fine fold within the routed
+    group — the exact rule both the oracle's window replay and the full
+    build use."""
     va = (
-        _spread(emb.select("vec_id", "v", norm(F.col("v")).alias("nv")))
+        _spread(df.select("vec_id", "v", norm(F.col("v")).alias("nv")))
         .crossJoin(F.broadcast(coarse_arr))
         .select(
             "vec_id",
@@ -3135,57 +3119,41 @@ def _twolevel_index(spark: SparkSession, sf_dir: str) -> dict:
             ).alias("coarse_id"),
         )
     )
-    pre = va.join(F.broadcast(groups), "coarse_id").select(
+    return va.join(F.broadcast(groups), "coarse_id").select(
         "vec_id",
         "v",
         _argmin_cent(F.col("v"), F.col("nv"), F.col("fs")).alias(
             "cent_id"
         ),
     )
-    pcm = None
-    if sb == 0:
-        # below the engagement gate: no cell splits, shard constant
-        # 0 — bit-identical to every pre-round-9 fixture result
-        assigned = pre.withColumn("shard", F.lit(0).cast("int"))
-    else:
-        # occupancy-adaptive per-cell split: occupancies of the
-        # preliminary assignment pick each cell's width, one
-        # full-width sign code per vector is prefix-masked to its
-        # cell's width. pcm is K rows (broadcast); the wmax action
-        # is a K-row aggregate.
-        pre = pre.persist()
-        pcm = (
-            pre.groupBy("cent_id")
-            .agg(F.count("*").alias("occ"))
-            .select("cent_id", _ivf2_pc_col(F.col("occ")).alias("pc"))
-            .persist()
-        )
-        wmax = pcm.agg(F.max("pc")).first()[0]
-        assigned = pre.join(F.broadcast(pcm), "cent_id").select(
-            "vec_id",
-            "v",
-            "cent_id",
-            _ivf2_masked_shard_col(
-                F.col("v"), F.col("pc"), wmax
-            ).alias("shard"),
-        )
-    # the trained fine centroids ride alongside the assignment — K
-    # rows, reused by the drift audit's sim-to-centroid join. Persisted
-    # before the assignment, whose cached plan then reads them.
-    cents = cents.persist()
-    return {
-        "assigned": assigned.persist(), "cents": cents, "pre": pre, "pcm": pcm
-    }
+
+
+def _mask_shard(pre: DataFrame, pcm: DataFrame | None, wmax: int) -> DataFrame:
+    """Attach the occupancy-adaptive shard to a (vec_id, v, cent_id)
+    pre-assignment: one ``wmax``-bit sign code per vector, prefix-masked
+    to its cell's frozen width (``pcm``: cent_id → pc; a cell absent
+    from the map — empty at freeze time — takes width 0). wmax = 0 (the
+    below-gate regime) short-circuits to the constant-0 shard."""
+    if wmax == 0 or pcm is None:
+        return pre.withColumn("shard", F.lit(0).cast("int"))
+    return pre.join(F.broadcast(pcm), "cent_id", "left").select(
+        "vec_id",
+        "v",
+        "cent_id",
+        _ivf2_masked_shard_col(
+            F.col("v"), F.coalesce(F.col("pc"), F.lit(0)), wmax
+        ).alias("shard"),
+    )
 
 
 def _twolevel_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, v, cent_id, shard) of the session's two-level index."""
-    return _twolevel_index(spark, sf_dir)["assigned"]
+    return _ivf2_index(spark, sf_dir, (1, 1)).assigned
 
 
 def _twolevel_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(cent_id, cv) of the session's two-level index."""
-    return _twolevel_index(spark, sf_dir)["cents"]
+    return _ivf2_index(spark, sf_dir, (1, 1)).cents
 
 
 def _twolevel_train_ctes(prefix: str = "") -> list[str]:
@@ -3330,26 +3298,7 @@ def q_dedup_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-level rule, so cluster membership must agree bit-for-bit.
     Everything downstream matches ``q_dedup_semdedup``: equi-join on
     cent_id, drop-larger-id convention."""
-    assigned = _twolevel_assignment(spark, sf_dir).withColumn(
-        # once-per-vector norm on the join input (the q_dedup_semdedup
-        # hoist) — identical op order keeps sims bit-stable
-        "nv",
-        norm(F.col("v")),
-    )
-    a = assigned.select(
-        F.col("cent_id"),
-        F.col("shard"),
-        F.col("vec_id").alias("keep_cand"),
-        F.col("v").alias("va"),
-        F.col("nv").alias("na"),
-    )
-    b = assigned.select(
-        F.col("cent_id"),
-        F.col("shard"),
-        F.col("vec_id").alias("drop_id"),
-        F.col("v").alias("vb"),
-        F.col("nv").alias("nb"),
-    )
+    assigned = _twolevel_assignment(spark, sf_dir)
     # ROUND-10 NOTE (guide §3.1 — strategy picked by measurement, kept
     # deliberate): the bucket self-join runs as SortMergeJoin. A
     # SHUFFLE_HASH hint was tried (bucket occupancy is capped, so the
@@ -3360,18 +3309,12 @@ def q_dedup_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sort feeds the join's (cent_id, shard) clustering for free. Keep
     # SMJ; it also spills gracefully if a future corpus breaks the
     # occupancy cap.
-    pairs = (
-        a.join(b, ["cent_id", "shard"])
-        .filter(F.col("keep_cand") < F.col("drop_id"))
-        .withColumn(
-            "sim",
-            dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
-        )
-        .filter(F.col("sim") >= NEAR_DUP_COS)
+    pairs = _bucket_pairs(assigned, assigned, ["cent_id", "shard"]).filter(
+        (F.col("id_a") < F.col("id_b")) & (F.col("sim") >= NEAR_DUP_COS)
     )
-    return pairs.groupBy(F.col("drop_id").alias("doc_id")).agg(
+    return pairs.groupBy(F.col("id_b").alias("doc_id")).agg(
         F.min("cent_id").alias("cent_id"),
-        F.min("keep_cand").alias("kept_doc_id"),
+        F.min("id_a").alias("kept_doc_id"),
         F.round(F.max("sim"), 6).alias("max_sim"),
     )
 
@@ -3415,23 +3358,9 @@ def q_ann_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     must agree across engines."""
     assigned = _twolevel_assignment(spark, sf_dir)
     qrow = assigned.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("cent_id").alias("q_cent"),
-        F.col("shard").alias("q_shard"),
-        F.col("v").alias("qv"),
+        "cent_id", "shard", F.col("v").alias("qv")
     )
-    sim_to_q = cosine(F.col("v"), F.col("qv"))
-    return (
-        assigned.join(
-            F.broadcast(qrow),
-            (F.col("cent_id") == F.col("q_cent"))
-            & (F.col("shard") == F.col("q_shard")),
-        )
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .select("vec_id", sim_to_q.alias("sim"))
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(TOP_K)
-        .select("vec_id", F.round("sim", 6).alias("sim"))
-    )
+    return _cosine_topk(_probe(assigned, qrow, ["cent_id", "shard"]))
 
 
 @register(
@@ -3472,23 +3401,9 @@ def q_ann_ivf_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     end to end, so bucket membership must agree bit-for-bit."""
     assigned = _twolevel_assignment(spark, sf_dir)
     qrow = assigned.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("cent_id").alias("q_cent"),
-        F.col("shard").alias("q_shard"),
-        F.col("v").alias("qv"),
+        "cent_id", "shard", F.col("v").alias("qv")
     )
-    sim_to_q = cosine(F.col("v"), F.col("qv"))
-    return (
-        assigned.join(
-            F.broadcast(qrow),
-            (F.col("cent_id") == F.col("q_cent"))
-            & (F.col("shard") == F.col("q_shard")),
-        )
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .select("vec_id", sim_to_q.alias("sim"))
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(TOP_K)
-        .select("vec_id", F.round("sim", 6).alias("sim"))
-    )
+    return _cosine_topk(_probe(assigned, qrow, ["cent_id", "shard"]))
 
 
 @register(
@@ -3553,61 +3468,7 @@ def q_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-joined relations, and the intersection + rollup is
     |q|x k rows. Ordering ties break on vec_id everywhere, so the two
     engines rank ulp-identical cosines identically."""
-    from pyspark.sql import Window
-
-    assigned = _ivf_assignment(spark, sf_dir)
-    sides = assigned.select(
-        "vec_id", "cent_id", as_double(F.col("embedding")).alias("v")
-    )
-    queries = sides.filter(F.col("vec_id") < ANN_BATCH_Q).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("cent_id").alias("q_cent"),
-        F.col("v").alias("qv"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-
-    def topk(joined) -> DataFrame:
-        return (
-            joined.select(
-                "q_id", "vec_id", cosine(F.col("v"), F.col("qv")).alias("sim")
-            )
-            .withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= ANN_BATCH_K)
-            .select("q_id", "vec_id")
-        )
-
-    exact = topk(
-        sides.join(F.broadcast(queries), F.col("vec_id") != F.col("q_id"))
-    )
-    approx = topk(
-        sides.join(
-            F.broadcast(queries),
-            (F.col("cent_id") == F.col("q_cent"))
-            & (F.col("vec_id") != F.col("q_id")),
-        )
-    )
-    # both rank lists are |q|×k rows — broadcast the intersection and
-    # the final rollup (window outputs carry no stats, so Spark would
-    # otherwise sort-merge 80-row relations)
-    hits = (
-        exact.join(F.broadcast(approx), ["q_id", "vec_id"])
-        .groupBy("q_id")
-        .agg(F.count("*").cast("bigint").alias("n_hit"))
-    )
-    return (
-        queries.select("q_id")
-        .join(F.broadcast(hits), "q_id", "left")
-        .select(
-            "q_id",
-            F.lit(ANN_BATCH_K).alias("k"),
-            F.coalesce(F.col("n_hit"), F.lit(0).cast("bigint")).alias(
-                "n_hit"
-            ),
-            F.round(
-                F.coalesce(F.col("n_hit"), F.lit(0.0)) / ANN_BATCH_K, 4
-            ).alias("recall"),
-        )
-    )
+    return _recall_rows(_ivf_assignment(spark, sf_dir), ["cent_id"])
 
 
 @register(
@@ -3748,24 +3609,11 @@ def q_semdedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     a threshold on one engine only."""
     assigned = _twolevel_assignment(spark, sf_dir)
     n_tot = assigned.agg(F.count("*").alias("n"))
-    a = assigned.select(
-        "cent_id",
-        "shard",
-        F.col("vec_id").alias("keep_cand"),
-        F.col("v").alias("va"),
-    )
-    b = assigned.select(
-        "cent_id",
-        "shard",
-        F.col("vec_id").alias("drop_id"),
-        F.col("v").alias("vb"),
-    )
     pairs = (
-        a.join(b, ["cent_id", "shard"])
-        .filter(F.col("keep_cand") < F.col("drop_id"))
+        _bucket_pairs(assigned, assigned, ["cent_id", "shard"])
+        .filter(F.col("id_a") < F.col("id_b"))
         .select(
-            "drop_id",
-            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("sim"),
+            F.col("id_b").alias("drop_id"), F.round("sim", 6).alias("sim")
         )
     )
     th = spark.createDataFrame(
@@ -3907,7 +3755,7 @@ def q_embedding_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_pq_twolevel_oracle() -> str:
-    dist_cols = ",\n                   ".join(_pqt_dist_cols("duck"))
+    dist_cols = ",\n                   ".join(_pqt_dist_cols())
     return f"""
         WITH {_twolevel_assign_ctes()},
         {_pqt_ctes()},
@@ -3963,32 +3811,12 @@ def q_ann_ivf_pq_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-level routing, bucket restriction, and ADC scoring end to end
     — bucket membership AND code assignment must agree bit-for-bit."""
     assigned = _twolevel_assignment(spark, sf_dir)
-    cbp = _pq_trained_codebook(spark, sf_dir)
     qrow = assigned.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("cent_id").alias("q_cent"),
-        F.col("shard").alias("q_shard"),
-        F.col("v").alias("qe"),
+        "cent_id", "shard", F.col("v").alias("qv")
     )
-    dists = (
-        assigned.join(
-            F.broadcast(qrow),
-            (F.col("cent_id") == F.col("q_cent"))
-            & (F.col("shard") == F.col("q_shard")),
-        )
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .select("vec_id", F.col("v").alias("embedding"), "qe")
-        .crossJoin(F.broadcast(_pq_packed_cb(cbp)))
-        .select("vec_id", *_pq_packed_adc_ex("embedding", "qe"))
-    )
-    return (
-        dists
-        .orderBy("adc", "vec_id")
-        .limit(PQ_TOP)
-        .select(
-            "vec_id",
-            F.round("adc", 6).alias("adc_dist"),
-            F.round("ex", 6).alias("exact_dist"),
-        )
+    return _pq_topk(
+        _probe(assigned, qrow, ["cent_id", "shard"]),
+        _pq_packed_cb(_pq_trained_codebook(spark, sf_dir)),
     )
 
 
@@ -4052,7 +3880,11 @@ def q_ivf_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- incremental index maintenance ------------------------------------------
 # base = the first IVF_APPEND_NUM/IVF_APPEND_DEN of the corpus (by the
 # fixture's dense vec_id — the "yesterday's corpus" stand-in); delta =
-# the rest, assigned through the FROZEN base-trained index.
+# the rest, assigned through the FROZEN base-trained index. The frozen
+# index is the same two-level build as the session's full index
+# (:func:`_ivf2_index`), only over this base slice; the delta routes
+# through its router and reuses its per-cell split widths
+# (:func:`_append_assignment`).
 IVF_APPEND_NUM = 3
 IVF_APPEND_DEN = 4
 
@@ -4236,189 +4068,40 @@ def q_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-class _AppendIndex(NamedTuple):
-    emb: DataFrame
-    t: int
-    wmax: int
-    cents: DataFrame
-    coarse_arr: DataFrame
-    groups: DataFrame
-    pcm: DataFrame | None
-    bpre: DataFrame
-
-
-@session_memo("ivf_assignments")
-def _append_index(spark: SparkSession, sf_dir: str) -> _AppendIndex:
-    """The FROZEN base-trained index parts shared by the append-path
-    riders: emb the double-cast corpus, t the base/delta split point,
-    wmax/pcm the frozen occupancy-adaptive split widths (fold width +
-    per-cell map, derived from the BASE slice's routed occupancies when
-    the global gate :func:`ivf2_shard_bits` of the base count is ≥ 1;
-    0/None below it), cents the base-trained fine centroids,
-    coarse_arr/groups the router broadcast payloads, bpre the base
-    slice's persisted pre-assignment. Trained parts persist per
-    (session, sf_dir) (round-8 ADVICE: ``q_ivf_index_append``,
-    ``q_ivf_drift_audit`` and ``q_dedup_ingest_incremental`` used to
-    each retrain the same frozen index in one session — now they share
-    one training, mirroring :func:`_twolevel_index`)."""
-    import math
-
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    n = emb.count()
-    t = (IVF_APPEND_NUM * n) // IVF_APPEND_DEN
-    k = max(8, min(t // SEMDEDUP_TARGET_CLUSTER, IVF2_K_CAP))
-    samp_n = min(t, IVF2_SAMPLE)
-    k2 = max(4, math.isqrt(k))
-    samp = emb.filter(F.col("vec_id") < samp_n)
-    cents = emb.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
-    )
-    for _ in range(KMEANS_ITERS):
-        cents = _kmeans_recenter(_kmeans_assign(samp, cents))
-    coarse_arr = _cent_array(cents.filter(F.col("cent_id") < k2))
-    routed = (
-        cents.withColumn("ncv", norm(F.col("cv")))
-        .crossJoin(F.broadcast(coarse_arr))
-        .select(
-            "cent_id",
-            "cv",
-            _argmin_cent(
-                F.col("cv"), F.col("ncv"), F.col("cs")
-            ).alias("coarse_id"),
-        )
-    )
-    groups = routed.groupBy("coarse_id").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct("cent_id", "cv", norm(F.col("cv")).alias("nc"))
-            )
-        ).alias("fs")
-    )
-    cents = cents.persist()
-    coarse_arr = coarse_arr.persist()
-    groups = groups.persist()
-    sb = ivf2_shard_bits(t)
-    # FROZEN per-cell split widths (round 9, second cut): the base
-    # slice routes through the frozen router once; its per-cell
-    # occupancies pick each cell's split width — stored with the
-    # index like FAISS's inverted-list layout, and NEVER re-derived
-    # on append (the delta reuses yesterday's widths; drift/stats
-    # audits say when to rebuild). Below the gate (sb = 0) the map
-    # is empty and every shard is 0.
-    bpre = _route_pre(
-        emb.filter(F.col("vec_id") < t), coarse_arr, groups
-    ).persist()
-    if sb == 0:
-        pcm = None
-        wmax = 0
-    else:
-        pcm = (
-            bpre.groupBy("cent_id")
-            .agg(F.count("*").alias("occ"))
-            .select(
-                "cent_id", _ivf2_pc_col(F.col("occ")).alias("pc")
-            )
-            .persist()
-        )
-        wmax = pcm.agg(F.max("pc")).first()[0]
-    return _AppendIndex(emb, t, wmax, cents, coarse_arr, groups, pcm, bpre)
-
-
-def _route_pre(
-    df: DataFrame, coarse_arr: DataFrame, groups: DataFrame
-) -> DataFrame:
-    """(vec_id, v, cent_id) of rows assigned through a frozen two-level
-    router: coarse broadcast fold, then the fine fold within the routed
-    group — the exact rule both the oracle's window replay and the full
-    build use."""
-    va = (
-        _spread(df.select("vec_id", "v", norm(F.col("v")).alias("nv")))
-        .crossJoin(F.broadcast(coarse_arr))
-        .select(
-            "vec_id",
-            "v",
-            "nv",
-            _argmin_cent(
-                F.col("v"), F.col("nv"), F.col("cs")
-            ).alias("coarse_id"),
-        )
-    )
-    return va.join(F.broadcast(groups), "coarse_id").select(
-        "vec_id",
-        "v",
-        _argmin_cent(F.col("v"), F.col("nv"), F.col("fs")).alias(
-            "cent_id"
-        ),
-    )
-
-
-def _mask_shard(pre: DataFrame, pcm: DataFrame | None, wmax: int) -> DataFrame:
-    """Attach the occupancy-adaptive shard to a (vec_id, v, cent_id)
-    pre-assignment: one ``wmax``-bit sign code per vector, prefix-masked
-    to its cell's frozen width (``pcm``: cent_id → pc; a cell absent
-    from the map — empty at freeze time — takes width 0). wmax = 0 (the
-    below-gate regime) short-circuits to the constant-0 shard."""
-    if wmax == 0 or pcm is None:
-        return pre.withColumn("shard", F.lit(0).cast("int"))
-    return pre.join(F.broadcast(pcm), "cent_id", "left").select(
-        "vec_id",
-        "v",
-        "cent_id",
-        _ivf2_masked_shard_col(
-            F.col("v"), F.coalesce(F.col("pc"), F.lit(0)), wmax
-        ).alias("shard"),
-    )
-
-
-def _route_assign(
-    df: DataFrame,
-    coarse_arr: DataFrame,
-    groups: DataFrame,
-    pcm: DataFrame | None = None,
-    wmax: int = 0,
-) -> DataFrame:
-    """Frozen-router assignment WITH the frozen per-cell shard — the
-    composition streaming ingest uses per micro-batch (all broadcast
-    state: router K+√K rows, width map ≤K rows)."""
-    return _mask_shard(_route_pre(df, coarse_arr, groups), pcm, wmax)
-
-
 @session_memo("ivf_assignments")
 def _append_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, v, cent_id, shard, sim) of the delta slice under the
     FROZEN base-trained two-level index (see :func:`q_ivf_index_append`)
     — ``sim`` is the RAW cosine to the chosen centroid (riders round).
-    Persisted per (session, sf_dir): the append riders (index append,
-    drift audit, dedup-at-ingest) share one routing pass."""
-    ix = _append_index(spark, sf_dir)
-    assigned = _route_assign(
-        ix.emb.filter(F.col("vec_id") >= ix.t),
-        ix.coarse_arr,
-        ix.groups,
-        ix.pcm,
-        ix.wmax,
+    The delta routes through the frozen router and takes its cell's
+    frozen split width (width 0 in a cell that was empty at freeze
+    time). Persisted per (session, sf_dir): the append riders (index
+    append, drift audit, dedup-at-ingest, serve) share one routing
+    pass."""
+    ix = _ivf2_index(spark, sf_dir, (IVF_APPEND_NUM, IVF_APPEND_DEN))
+    delta = _route_pre(
+        ix.emb.filter(F.col("vec_id") >= ix.t), ix.coarse_arr, ix.groups
     )
     # the chosen centroid's cosine, recomputed via the same dot/norm
     # expressions the fold ranked with (bit-identical by determinism)
-    return assigned.join(F.broadcast(ix.cents), "cent_id").select(
-        "vec_id",
-        "v",
-        "cent_id",
-        "shard",
-        cosine(F.col("v"), F.col("cv")).alias("sim"),
-    ).persist()
+    return (
+        _mask_shard(delta, ix.pcm, ix.wmax)
+        .join(F.broadcast(ix.cents), "cent_id")
+        .select(
+            "vec_id",
+            "v",
+            "cent_id",
+            "shard",
+            cosine(F.col("v"), F.col("cv")).alias("sim"),
+        )
+        .persist()
+    )
 
 
-@session_memo("ivf_assignments")
 def _append_base_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, v, cent_id, shard) of the BASE slice through the same
-    frozen router — how its posting lists were stored at its own ingest
-    time; the pre-assignment is the SAME persisted frame the width map
-    was frozen from."""
-    ix = _append_index(spark, sf_dir)
-    return _mask_shard(ix.bpre, ix.pcm, ix.wmax).persist()
+    """(vec_id, v, cent_id, shard) of the BASE slice through the frozen
+    router — how its posting lists were stored at its own ingest time."""
+    return _ivf2_index(spark, sf_dir, (IVF_APPEND_NUM, IVF_APPEND_DEN)).assigned
 
 
 DRIFT_EPS = 0.01  # a delta vector "drifted" if retrain fits it this much better
@@ -4480,18 +4163,6 @@ def q_ivf_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     frozen = _append_assignment(spark, sf_dir).select(
         "vec_id", F.col("sim").alias("sim_frozen")
     )
-    return drift_audit_rows(spark, sf_dir, frozen)
-
-
-def drift_audit_rows(
-    spark: SparkSession, sf_dir: str, frozen: DataFrame
-) -> DataFrame:
-    """The drift-audit aggregate with the frozen-index side supplied by
-    the caller as (vec_id, sim_frozen) — the batch
-    ``q_ivf_drift_audit`` passes the session append assignment, and
-    any index whose posting lists grew by appends can be audited the
-    same way. The retrain side and the decimal-exact averages do not
-    depend on the frozen side."""
     full = _twolevel_assignment(spark, sf_dir)
     fcents = _twolevel_centroids(spark, sf_dir)
     full_sim = full.join(F.broadcast(fcents), "cent_id").select(
@@ -4569,31 +4240,11 @@ def q_ann_ivf_multiprobe_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame
     this the centroid-carrying twin of ``q_ann_ivf_twolevel``'s live
     proof."""
     assigned = _twolevel_assignment(spark, sf_dir)
-    cents = _twolevel_centroids(spark, sf_dir)
-    from pyspark.sql import Window
-
-    qv = assigned.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("v").alias("qvv"), F.col("shard").alias("qsh")
+    qrow = assigned.filter(F.col("vec_id") == QUERY_VEC_ID).select(
+        "shard", F.col("v").alias("qv")
     )
-    qw = Window.orderBy(F.desc("q_sim"), F.asc("cent_id"))
-    probes = (
-        cents.crossJoin(F.broadcast(qv))
-        .select("cent_id", cosine(F.col("cv"), F.col("qvv")).alias("q_sim"))
-        .withColumn("rn", F.row_number().over(qw))
-        .filter(F.col("rn") <= IVF2_PROBES)
-        .select("cent_id")
-    )
-    sim_to_q = cosine(F.col("v"), F.col("qvv"))
-    return (
-        assigned.join(F.broadcast(probes), "cent_id")
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(qv))
-        .filter(F.col("shard") == F.col("qsh"))
-        .select("vec_id", sim_to_q.alias("sim"))
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(TOP_K)
-        .select("vec_id", F.round("sim", 6).alias("sim"))
-    )
+    probes = _probe_rank(_twolevel_centroids(spark, sf_dir), qrow, IVF2_PROBES)
+    return _cosine_topk(_probe(assigned, probes, ["cent_id", "shard"]))
 
 
 @register(
@@ -4637,36 +4288,15 @@ def q_ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     join back to `embeddings` for the label here stands in for that
     co-located metadata; the session index carries only (vec_id, v,
     cent_id). Oracle rides the memoizable shared chain (fa only)."""
-    assigned = _twolevel_assignment(spark, sf_dir)
-    lab = table(spark, sf_dir, "embeddings").select("vec_id", "label")
-    qrow = (
-        assigned.join(lab, "vec_id")
-        .filter(F.col("vec_id") == QUERY_VEC_ID)
-        .select(
-            F.col("cent_id").alias("q_cent"),
-            F.col("shard").alias("q_shard"),
-            F.col("v").alias("qv"),
-            F.col("label").alias("q_label"),
-        )
+    lab = table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("label").cast("long").alias("label")
     )
-    sim_to_q = cosine(F.col("v"), F.col("qv"))
-    return (
-        assigned.join(lab, "vec_id")
-        .join(
-            F.broadcast(qrow),
-            (F.col("cent_id") == F.col("q_cent"))
-            & (F.col("shard") == F.col("q_shard"))
-            & (F.col("label") == F.col("q_label")),
-        )
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .select(
-            "vec_id",
-            F.col("label").cast("long").alias("label"),
-            sim_to_q.alias("sim"),
-        )
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(TOP_K)
-        .select("vec_id", "label", F.round("sim", 6).alias("sim"))
+    index = _twolevel_assignment(spark, sf_dir).join(lab, "vec_id")
+    qrow = index.filter(F.col("vec_id") == QUERY_VEC_ID).select(
+        "cent_id", "shard", "label", F.col("v").alias("qv")
+    )
+    return _cosine_topk(
+        _probe(index, qrow, ["cent_id", "shard", "label"]), "label"
     )
 
 
@@ -4737,59 +4367,8 @@ def q_ann_recall_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets; per-query rank windows, |q|×k intersection, broadcast
     rollup. The oracle rides the memoizable shared chain (it needs
     only ``fa``), so soaks pay the training once across every rider."""
-    from pyspark.sql import Window
-
-    sides = _twolevel_assignment(spark, sf_dir)
-    queries = sides.filter(F.col("vec_id") < ANN_BATCH_Q).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("cent_id").alias("q_cent"),
-        F.col("shard").alias("q_sh"),
-        F.col("v").alias("qv"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-
-    def topk(joined) -> DataFrame:
-        return (
-            joined.select(
-                "q_id", "vec_id", cosine(F.col("v"), F.col("qv")).alias("sim")
-            )
-            .withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= ANN_BATCH_K)
-            .select("q_id", "vec_id")
-        )
-
-    exact = topk(
-        sides.join(F.broadcast(queries), F.col("vec_id") != F.col("q_id"))
-    )
-    approx = topk(
-        sides.join(
-            F.broadcast(queries),
-            (F.col("cent_id") == F.col("q_cent"))
-            & (F.col("shard") == F.col("q_sh"))
-            & (F.col("vec_id") != F.col("q_id")),
-        )
-    )
-    hits = (
-        exact.join(F.broadcast(approx), ["q_id", "vec_id"])
-        .groupBy("q_id")
-        .agg(F.count("*").cast("bigint").alias("n_hit"))
-    )
-    return (
-        queries.select("q_id")
-        .join(F.broadcast(hits), "q_id", "left")
-        .select(
-            "q_id",
-            F.lit(ANN_BATCH_K).alias("k"),
-            F.coalesce(F.col("n_hit"), F.lit(0).cast("bigint")).alias(
-                "n_hit"
-            ),
-            F.round(
-                F.coalesce(F.col("n_hit"), F.lit(0).cast("bigint"))
-                * F.lit(1.0)
-                / ANN_BATCH_K,
-                4,
-            ).alias("recall"),
-        )
+    return _recall_rows(
+        _twolevel_assignment(spark, sf_dir), ["cent_id", "shard"]
     )
 
 
@@ -4839,37 +4418,9 @@ def q_ann_batch_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch broadcasts onto the bucket equi-join; per-query rank windows
     over bucket-sized input, vec_id tie-break. The oracle needs only
     ``fa``, so it rides the soak memo."""
-    from pyspark.sql import Window
-
-    sides = _twolevel_assignment(spark, sf_dir)
-    queries = sides.filter(F.col("vec_id") < ANN_BATCH_Q).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("cent_id").alias("q_cent"),
-        F.col("shard").alias("q_sh"),
-        F.col("v").alias("qv"),
-    )
-    scored = (
-        sides.join(
-            F.broadcast(queries),
-            (F.col("cent_id") == F.col("q_cent"))
-            & (F.col("shard") == F.col("q_sh"))
-            & (F.col("vec_id") != F.col("q_id")),
-        )
-        .select("q_id", "vec_id", cosine(F.col("v"), F.col("qv")).alias("sim"))
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= ANN_BATCH_K)
-        .select(
-            "q_id",
-            F.col("rnk").cast("int").alias("rnk"),
-            "vec_id",
-            F.round("sim", 6).alias("sim"),
-        )
-    )
+    assigned = _twolevel_assignment(spark, sf_dir)
+    queries = F.broadcast(assigned.filter(F.col("vec_id") < ANN_BATCH_Q))
+    return _batch_topk(assigned, queries, ["cent_id", "shard"])
 
 
 @register(
@@ -4927,102 +4478,22 @@ def q_dedup_ingest_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     via ``_LIVE_PROOFS``; memo == raw pinned in
     tests/test_oracle_memo.py). Pair membership AND similarities must
     agree bit-for-bit."""
-    return ingest_dedup_rows(
-        _append_base_assignment(spark, sf_dir),
-        _append_assignment(spark, sf_dir),
-    )
-
-
-def ingest_dedup_rows(base_a: DataFrame, delta_a: DataFrame) -> DataFrame:
-    """(doc_id, cent_id, matched_doc_id, max_sim) for every delta row
-    near-dup to a base row in its (cent_id, shard) bucket — the pair
-    stage of ``q_dedup_ingest_incremental``. A verdict depends only on
-    the row itself and the frozen index, so any micro-batch routed
-    through the same frozen router gets the batch answer. Inputs are
-    (vec_id, v, cent_id, shard[, ...]) frames from the frozen-router
-    assignment paths."""
     from pyspark.sql import Window
 
-    b = base_a.withColumn("nv", norm(F.col("v"))).select(
-        "cent_id",
-        "shard",
-        F.col("vec_id").alias("keep_cand"),
-        F.col("v").alias("vb"),
-        F.col("nv").alias("nb"),
-    )
-    d = delta_a.withColumn("nv", norm(F.col("v"))).select(
-        "cent_id",
-        "shard",
-        F.col("vec_id").alias("new_id"),
-        F.col("v").alias("vd"),
-        F.col("nv").alias("nd"),
-    )
-    pairs = (
-        b.join(d, ["cent_id", "shard"])
-        .withColumn(
-            "sim",
-            dot(F.col("vb"), F.col("vd")) / (F.col("nb") * F.col("nd")),
-        )
-        .filter(F.col("sim") >= NEAR_DUP_COS)
-    )
-    w = Window.partitionBy("new_id").orderBy(
-        F.desc("sim"), F.asc("keep_cand")
-    )
+    pairs = _bucket_pairs(
+        _append_base_assignment(spark, sf_dir),
+        _append_assignment(spark, sf_dir),
+        ["cent_id", "shard"],
+    ).filter(F.col("sim") >= NEAR_DUP_COS)
+    w = Window.partitionBy("id_b").orderBy(F.desc("sim"), F.asc("id_a"))
     return (
         pairs.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select(
-            F.col("new_id").alias("doc_id"),
+            F.col("id_b").alias("doc_id"),
             "cent_id",
-            F.col("keep_cand").alias("matched_doc_id"),
+            F.col("id_a").alias("matched_doc_id"),
             F.round("sim", 6).alias("max_sim"),
-        )
-    )
-
-
-def ann_serve_rows(
-    base_a: DataFrame, query_a: DataFrame, k: int = ANN_BATCH_K
-) -> DataFrame:
-    """(q_id, rnk, vec_id, sim) — per-query top-``k`` standing-corpus
-    neighbors within the query's frozen (cent_id, shard) bucket — the
-    rank stage of ``q_ann_serve_incremental``; like
-    :func:`ingest_dedup_rows`, an answer depends only on the query and
-    the frozen index. Inputs are (vec_id, v, cent_id, shard
-    [, ...]) frames from the frozen-router assignment paths; a query
-    with an empty bucket simply emits no rows (the recall audit
-    families quantify that miss class)."""
-    from pyspark.sql import Window
-
-    b = base_a.withColumn("nv", norm(F.col("v"))).select(
-        "cent_id",
-        "shard",
-        "vec_id",
-        F.col("v").alias("vb"),
-        F.col("nv").alias("nb"),
-    )
-    q = query_a.withColumn("nv", norm(F.col("v"))).select(
-        "cent_id",
-        "shard",
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("vq"),
-        F.col("nv").alias("nq"),
-    )
-    pairs = b.join(q, ["cent_id", "shard"]).select(
-        "q_id",
-        "vec_id",
-        (dot(F.col("vb"), F.col("vq")) / (F.col("nb") * F.col("nq"))).alias(
-            "sim"
-        ),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "q_id",
-            F.col("rnk").cast("int").alias("rnk"),
-            "vec_id",
-            F.round("sim", 6).alias("sim"),
         )
     )
 
@@ -5073,9 +4544,10 @@ def q_ann_serve_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle replays training, both frozen-router assignments, and
     the per-query rank end to end (a fourth append-path live proof).
     Rank order AND similarities must agree bit-for-bit."""
-    return ann_serve_rows(
+    return _batch_topk(
         _append_base_assignment(spark, sf_dir),
         _append_assignment(spark, sf_dir),
+        ["cent_id", "shard"],
     )
 
 
@@ -5135,32 +4607,14 @@ def _pq_residual_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`_pq_trained_codebook`, run on r = v − centroid(v) rows."""
     res = _pq_residual_frame(spark, sf_dir)
     n = table(spark, sf_dir, "embeddings").count()
-    samp = res.filter(F.col("vec_id") < min(n, IVF2_SAMPLE)).select(
-        "vec_id", F.col("rv").alias("v")
+    return _pq_codebook(
+        res.filter(F.col("vec_id") < min(n, IVF2_SAMPLE)).select(
+            "vec_id", F.col("rv").alias("v")
+        )
     )
-    sv_rows = _spread(_pq_subvector_rows(samp))
-    cb = sv_rows.filter(F.col("vec_id") < PQ_K).select(
-        "s",
-        F.col("vec_id").cast("int").alias("k"),
-        F.col("sv").alias("cw"),
-    )
-    for _ in range(KMEANS_ITERS):
-        cb = _pq_cb_recenter(_pq_cb_assign(sv_rows, cb))
-    piv = cb.groupBy().agg(
-        *[
-            F.max(
-                F.when(
-                    (F.col("s") == s) & (F.col("k") == k), F.col("cw")
-                )
-            ).alias(f"c{s}_{k}")
-            for s in range(PQ_M)
-            for k in range(PQ_K)
-        ]
-    )
-    return piv.persist()
 
 
-def _pqr_dist_cols(dialect: str) -> list[str]:
+def _pqr_dist_cols() -> list[str]:
     """Residual-codebook scoring columns: d from the candidate's
     residual, g from the (per-cell) query residual, exact full-vector
     distance alongside — same d/g/ex names, so ``_pq_adc_expr`` and
@@ -5170,12 +4624,12 @@ def _pqr_dist_cols(dialect: str) -> list[str]:
         lo = s * PQ_SUB + 1
         for k in range(PQ_K):
             cols.append(
-                f"{_pqt_sq(dialect, 'rv', f'c{s}_{k}', lo)} AS d{s}_{k}"
+                f"{_pqt_sq('rv', f'c{s}_{k}', lo)} AS d{s}_{k}"
             )
             cols.append(
-                f"{_pqt_sq(dialect, 'qrv', f'c{s}_{k}', lo)} AS g{s}_{k}"
+                f"{_pqt_sq('qrv', f'c{s}_{k}', lo)} AS g{s}_{k}"
             )
-    cols.append(f"{_pq_sq(dialect, 'embedding', 'qe', 1, PCA_DIM)} AS ex")
+    cols.append(f"{_pq_sq('embedding', 'qe', 1, PCA_DIM)} AS ex")
     return cols
 
 
@@ -5206,7 +4660,7 @@ def _rres_ctes(with_cv: bool = False) -> str:
 
 
 def _ivfpq_residual_oracle() -> str:
-    dist_cols = ",\n                   ".join(_pqr_dist_cols("duck"))
+    dist_cols = ",\n                   ".join(_pqr_dist_cols())
     return f"""
         WITH {_twolevel_assign_ctes()},
         {_rres_ctes()},
@@ -5263,35 +4717,14 @@ def q_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction, per-subspace codebook training on residuals, and ADC
     scoring end to end."""
     res = _pq_residual_frame(spark, sf_dir)
-    cbp = _pq_residual_codebook(spark, sf_dir)
     qrow = res.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("cent_id").alias("q_cent"),
-        F.col("shard").alias("q_shard"),
-        F.col("v").alias("qe"),
-        F.col("rv").alias("qrv"),
+        "cent_id", "shard", F.col("v").alias("qv"), F.col("rv").alias("qrv")
     )
-    dists = (
-        res.join(
-            F.broadcast(qrow),
-            (F.col("cent_id") == F.col("q_cent"))
-            & (F.col("shard") == F.col("q_shard")),
-        )
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .select(
-            "vec_id", F.col("v").alias("embedding"), "rv", "qe", "qrv"
-        )
-        .crossJoin(F.broadcast(_pq_packed_cb(cbp)))
-        .select("vec_id", *_pq_packed_adc_ex("rv", "qrv"))
-    )
-    return (
-        dists
-        .orderBy("adc", "vec_id")
-        .limit(PQ_TOP)
-        .select(
-            "vec_id",
-            F.round("adc", 6).alias("adc_dist"),
-            F.round("ex", 6).alias("exact_dist"),
-        )
+    return _pq_topk(
+        _probe(res.drop("cv"), qrow, ["cent_id", "shard"]),
+        _pq_packed_cb(_pq_residual_codebook(spark, sf_dir)),
+        "rv",
+        "qrv",
     )
 
 
@@ -5326,9 +4759,9 @@ def q_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     .replace("{RRES}", _rres_ctes(with_cv=True))
     .replace("{PQT}", _pqt_ctes())
     .replace("{PQR}", _pqt_ctes("pr", _pqr_train_src_sql()))
-    .replace("{TCOLS}", ",\n                   ".join(_pqt_dist_cols("duck")))
+    .replace("{TCOLS}", ",\n                   ".join(_pqt_dist_cols()))
     .replace("{QRV}", _residual_list_sql("aq.qe", "r.cv", cast_v=True))
-    .replace("{RCOLS}", ",\n                   ".join(_pqr_dist_cols("duck")))
+    .replace("{RCOLS}", ",\n                   ".join(_pqr_dist_cols()))
     .replace("{TROW}", _pq_variant_sql("trained_raw", "tdists"))
     .replace("{RROW}", _pq_variant_sql("residual", "rdists")),
 )
@@ -5362,28 +4795,28 @@ def q_pq_residual_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation, one shared exact top list — guide §1.2/§2.4). The
     oracle replays BOTH codebook trainings, the index training, and
     both scoring pipelines end to end."""
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    emb = table(spark, sf_dir, "embeddings")
     res = _pq_residual_frame(spark, sf_dir)
     cbp = _pq_trained_codebook(spark, sf_dir)
     rcbp = _pq_residual_codebook(spark, sf_dir)
     aq = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qe")
+        F.col("embedding").alias("qv")
     )
     base = (
         res.crossJoin(F.broadcast(aq))
         .withColumn(
             "qrv",
             F.zip_with(
-                "qe", "cv", lambda x, y: x.cast("double") - y
+                "qv", "cv", lambda x, y: x.cast("double") - y
             ),
         )
-        .select("vec_id", F.col("v").alias("embedding"), "rv", "qrv", "qe")
+        .select("vec_id", "v", "rv", "qrv", "qv")
         .crossJoin(F.broadcast(_pq_packed_cb(cbp, "cba")))
         .crossJoin(F.broadcast(_pq_packed_cb(rcbp, "cbb")))
     )
     return _pq_audit_pair(
         base,
-        ("trained_raw", "embedding", "qe"),
+        ("trained_raw", "v", "qv"),
         ("residual", "rv", "qrv"),
     )
 
@@ -5417,39 +4850,21 @@ def _residual_multiprobe_cand(
     posting-list join before; now they read the tiny cached rows
     (guide §5: cache when reuse outweighs the memory, which here is a
     few hundred rows). Released with the ``ivf_assignments`` family."""
-    from pyspark.sql import Window
-
     res = _pq_residual_frame(spark, sf_dir)
-    cents = _twolevel_centroids(spark, sf_dir)
     qrow = res.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("v").alias("qe"), F.col("shard").alias("qsh")
+        "shard", F.col("v").alias("qv")
     )
-    qw = Window.orderBy(F.desc("q_sim"), F.asc("cent_id"))
-    probes = (
-        cents.crossJoin(F.broadcast(qrow))
-        .select(
-            "cent_id",
-            "cv",
-            cosine(F.col("cv"), F.col("qe")).alias("q_sim"),
-            "qe",
-        )
-        .withColumn("rn", F.row_number().over(qw))
-        .filter(F.col("rn") <= IVF2_PROBES)
-        .select(
-            "cent_id",
-            F.zip_with("qe", "cv", lambda x, y: x - y).alias("qrv"),
-        )
+    probes = _probe_rank(
+        _twolevel_centroids(spark, sf_dir), qrow, IVF2_PROBES
+    ).select(
+        "cent_id",
+        "shard",
+        "qv",
+        F.zip_with("qv", "cv", lambda x, y: x - y).alias("qrv"),
     )
     return (
-        res.join(F.broadcast(probes), "cent_id")
-        .crossJoin(F.broadcast(qrow))
-        .filter(
-            (F.col("shard") == F.col("qsh"))
-            & (F.col("vec_id") != QUERY_VEC_ID)
-        )
-        .select(
-            "vec_id", F.col("v").alias("embedding"), "rv", "qrv", "qe"
-        )
+        _probe(res.drop("cv"), probes, ["cent_id", "shard"])
+        .select("vec_id", "v", "rv", "qrv", "qv")
         .persist()
     )
 
@@ -5487,7 +4902,7 @@ def _residual_multiprobe_ctes() -> str:
 
 
 def _ivfpq_residual_multiprobe_oracle() -> str:
-    dist_cols = ",\n                   ".join(_pqr_dist_cols("duck"))
+    dist_cols = ",\n                   ".join(_pqr_dist_cols())
     return f"""
         WITH {_residual_multiprobe_ctes()},
         {_pqt_ctes('pr', _pqr_train_src_sql())},
@@ -5534,20 +4949,11 @@ def q_ann_ivfpq_residual_multiprobe(
     this nprobe. The oracle replays index training, residual frame,
     probe ranking, per-cell residuals, residual codebook training, and
     ADC end to end."""
-    cand = _residual_multiprobe_cand(spark, sf_dir)
-    rcbp = _pq_residual_codebook(spark, sf_dir)
-    dists = cand.crossJoin(F.broadcast(_pq_packed_cb(rcbp))).select(
-        "vec_id", *_pq_packed_adc_ex("rv", "qrv")
-    )
-    return (
-        dists
-        .orderBy("adc", "vec_id")
-        .limit(PQ_TOP)
-        .select(
-            "vec_id",
-            F.round("adc", 6).alias("adc_dist"),
-            F.round("ex", 6).alias("exact_dist"),
-        )
+    return _pq_topk(
+        _residual_multiprobe_cand(spark, sf_dir),
+        _pq_packed_cb(_pq_residual_codebook(spark, sf_dir)),
+        "rv",
+        "qrv",
     )
 
 
@@ -5572,8 +4978,8 @@ def q_ann_ivfpq_residual_multiprobe(
     """.replace("{MCAND}", _residual_multiprobe_ctes())
     .replace("{PQT}", _pqt_ctes())
     .replace("{PQR}", _pqt_ctes("pr", _pqr_train_src_sql()))
-    .replace("{TCOLS}", ",\n                   ".join(_pqt_dist_cols("duck")))
-    .replace("{RCOLS}", ",\n                   ".join(_pqr_dist_cols("duck")))
+    .replace("{TCOLS}", ",\n                   ".join(_pqt_dist_cols()))
+    .replace("{RCOLS}", ",\n                   ".join(_pqr_dist_cols()))
     .replace("{TROW}", _pq_variant_sql("trained_raw", "mtdists"))
     .replace("{RROW}", _pq_variant_sql("residual", "mrdists")),
 )
@@ -5603,6 +5009,6 @@ def q_pq_multiprobe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).crossJoin(F.broadcast(_pq_packed_cb(rcbp, "cbb")))
     return _pq_audit_pair(
         base,
-        ("trained_raw", "embedding", "qe"),
+        ("trained_raw", "v", "qv"),
         ("residual", "rv", "qrv"),
     )

@@ -77,19 +77,6 @@ def test_rhp_lsh_plan_is_bucketed_not_cartesian(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_registered_multiprobe_matches_helper(spark, sf_dir):
-    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.similarity import (
-        IVF_PROBES,
-        q_ann_ivf_multiprobe,
-    )
-
-    reg = [r["vec_id"] for r in q_ann_ivf_multiprobe(spark, sf_dir).collect()]
-    helper = [
-        r["vec_id"] for r in ann_ivf_topk(spark, sf_dir, IVF_PROBES).collect()
-    ]
-    assert reg == helper
-
-
 def test_trained_centroids_recall_at_least_pseudo(spark, sf_dir):
     """VERDICT r3 #3: the k-means-trained IVF index must recall at least
     as much as the old vec_id<K pseudo-centroid index at equal nprobe."""

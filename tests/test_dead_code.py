@@ -26,9 +26,6 @@ PKG = (
 # Test-only definitions kept on purpose, each with its reason.
 ALLOWED_TEST_ONLY = {
     "_universal_hash": "reference for the minhash fold's bit-equality test",
-    "_pq_dist_cols_spark": "reference for the PQ distance tests (ROADMAP E)",
-    "_pqt_dist_cols_spark": "reference for the PQ distance tests (ROADMAP E)",
-    "ann_ivf_topk": "reference for the multiprobe and recall-curve tests",
     "persisted_rdd_count": "test harness of the RDD-leak gate",
     "kafka_connector_status": "skip gate of the Kafka round-trip test",
     "kafka_events_stream": "the reference's own transport (SURVEY S1/S4)",

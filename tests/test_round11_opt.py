@@ -1,5 +1,6 @@
 """Round-11 optimization pins: packed PQ scoring must be bit-equal to
-the unrolled column form the DuckDB oracles still evaluate."""
+the unrolled column form the DuckDB oracles evaluate, as DuckDB
+evaluates it."""
 
 from __future__ import annotations
 
@@ -13,88 +14,82 @@ from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event
 )
 
 
-def _wide_ref(dists, adc_alias="adc"):
-    """(vec_id, adc, rec, ex) from an unrolled d/g/ex relation — the
-    pre-round-11 readout expressions over the named columns."""
-    rec = F.least(*[F.col(f"d0_{k}") for k in range(S.PQ_K)])
-    for s in range(1, S.PQ_M):
-        rec = rec + F.least(*[F.col(f"d{s}_{k}") for k in range(S.PQ_K)])
-    return dists.select(
-        "vec_id",
-        F.expr(S._pq_adc_expr()).alias(adc_alias),
-        rec.alias("rec"),
-        "ex",
-    )
-
-
-def test_packed_trained_scoring_bit_equals_unrolled(spark, sf_dir):
-    """adc/rec/ex from the round-11 packed index-aware folds must be
-    BIT-equal (compared with !=, no tolerance) to the unrolled
-    d{s}_{k}/g{s}_{k} column form over the whole fixture, for the
-    trained codebook."""
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cbp = S._pq_trained_codebook(spark, sf_dir)
-    q_row = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qe")
-    )
-    packed = emb.crossJoin(
-        F.broadcast(S._pq_packed_cb(cbp, "cba"))
-    ).crossJoin(F.broadcast(q_row)).select(
-        "vec_id",
-        F.expr(S._pq_packed_adc_sql("embedding", "qe", "cba")).alias("adc"),
-        F.expr(S._pq_packed_rec_sql("embedding", "cba")).alias("rec"),
-        F.expr(S._pq_packed_ex_sql("embedding", "qe")).alias("ex"),
-    )
-    ref = _wide_ref(
-        emb.crossJoin(F.broadcast(cbp))
+def _packed(emb, cb):
+    """{vec_id: (adc, rec, ex)} from the round-11 packed index-aware
+    folds over ``emb`` (vec_id, v) with packed codebook column ``cba``
+    and query vector vec_id 0."""
+    q_row = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
+    rows = (
+        emb.crossJoin(F.broadcast(cb))
         .crossJoin(F.broadcast(q_row))
-        .select("vec_id", *S._pqt_dist_cols_spark())
+        .select(
+            "vec_id",
+            F.expr(S._pq_packed_adc_sql("v", "qv", "cba")),
+            F.expr(S._pq_packed_rec_sql("v", "cba")),
+            F.expr(S._pq_packed_ex_sql("v", "qv")),
+        )
+        .collect()
     )
-    j = packed.alias("p").join(ref.alias("r"), "vec_id")
-    bad = j.filter(
-        (F.col("p.adc") != F.col("r.adc"))
-        | (F.col("p.rec") != F.col("r.rec"))
-        | (F.col("p.ex") != F.col("r.ex"))
-    ).count()
-    assert bad == 0
-    assert packed.count() == emb.count()
+    return {r[0]: tuple(r[1:]) for r in rows}
 
 
-def test_packed_anchor_scoring_bit_equals_unrolled(spark, sf_dir):
+def _unrolled(duck, ctes, cb_rel, dist_cols):
+    """{vec_id: (adc, rec, ex)} from the oracle's unrolled
+    d{s}_{k}/g{s}_{k}/ex columns and its ADC / reconstruction readouts,
+    as DuckDB evaluates them over the same fixture."""
+    rows = duck.execute(f"""
+        WITH {ctes},
+        q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
+        dists AS (
+            SELECT vec_id, {", ".join(dist_cols)}
+            FROM embeddings CROSS JOIN {cb_rel} CROSS JOIN q
+        )
+        SELECT vec_id, {S._pq_adc_expr()}, {S._pq_rec_sql()}, ex FROM dists
+    """).fetchall()
+    return {r[0]: tuple(r[1:]) for r in rows}
+
+
+def _assert_bit_equal(packed, unrolled):
+    assert len(packed) == len(unrolled)
+    bad = [v for v in unrolled if packed[v] != unrolled[v]]
+    assert not bad, [(v, packed[v], unrolled[v]) for v in bad[:3]]
+
+
+def test_packed_trained_scoring_bit_equals_unrolled(spark, sf_dir, duck):
+    """adc/rec/ex from the round-11 packed index-aware folds must be
+    BIT-equal (compared with !=, no tolerance) to the oracle's unrolled
+    d{s}_{k}/g{s}_{k} column form evaluated by DuckDB over the whole
+    fixture, for the trained codebook (each engine trains its own:
+    the oracle's training replay must land on the same codewords)."""
+    emb = table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").alias("v")
+    )
+    cb = S._pq_packed_cb(S._pq_trained_codebook(spark, sf_dir), "cba")
+    _assert_bit_equal(
+        _packed(emb, cb),
+        _unrolled(duck, S._pqt_ctes(), "pqcbp", S._pqt_dist_cols()),
+    )
+
+
+def test_packed_anchor_scoring_bit_equals_unrolled(spark, sf_dir, duck):
     """Same pin for the ANCHOR codebook (packed codewords are anchor
     slices) — covers q_pq_train_audit's anchor arm and q_ann_ivf_pq."""
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    anchors = emb.filter(F.col("vec_id") < S.PQ_K).groupBy().agg(
-        *[
-            F.max(
-                F.when(F.col("vec_id") == k, F.col("embedding"))
-            ).alias(f"a{k}")
-            for k in range(S.PQ_K)
-        ]
+    emb = table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").alias("v")
     )
-    q_row = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qe")
+    anch = ", ".join(
+        f"MAX(CASE WHEN vec_id = {k} THEN embedding END) AS a{k}"
+        for k in range(S.PQ_K)
     )
-    packed = emb.crossJoin(
-        F.broadcast(S._pq_packed_anchor_cb(anchors, "cba"))
-    ).crossJoin(F.broadcast(q_row)).select(
-        "vec_id",
-        F.expr(S._pq_packed_adc_sql("embedding", "qe", "cba")).alias("adc"),
-        F.expr(S._pq_packed_rec_sql("embedding", "cba")).alias("rec"),
-        F.expr(S._pq_packed_ex_sql("embedding", "qe")).alias("ex"),
+    _assert_bit_equal(
+        _packed(emb, S._pq_packed_anchor_cb(emb, "cba")),
+        _unrolled(
+            duck,
+            f"anch AS (SELECT {anch} FROM embeddings WHERE vec_id < {S.PQ_K})",
+            "anch",
+            S._pq_dist_cols(),
+        ),
     )
-    ref = _wide_ref(
-        emb.crossJoin(F.broadcast(anchors))
-        .crossJoin(F.broadcast(q_row))
-        .select("vec_id", *S._pq_dist_cols_spark())
-    )
-    j = packed.alias("p").join(ref.alias("r"), "vec_id")
-    bad = j.filter(
-        (F.col("p.adc") != F.col("r.adc"))
-        | (F.col("p.rec") != F.col("r.rec"))
-        | (F.col("p.ex") != F.col("r.ex"))
-    ).count()
-    assert bad == 0
 
 
 def test_minhash_fold_bit_equals_per_hash_array_mins(spark, sf_dir):

@@ -216,20 +216,24 @@ def test_ivf_index_stats_audits_the_real_index(spark, sf_dir):
     )
 
 
-def test_pq_fold_equals_unrolled_strings(spark, sf_dir):
-    """The Column-built zip_with/aggregate PQ distance fold must be
-    BIT-equal (not approximately equal) to the unrolled string form the
-    DuckDB oracles still evaluate — same squared terms, same
-    left-to-right association, exact +0.0 seed. Every d/g/ex column over
-    the whole fixture, compared with != (no tolerance)."""
+def test_pq_fold_equals_unrolled_strings(spark, sf_dir, duck):
+    """The Spark squared-L2 fold every PQ distance is built from
+    (``_sq_fold_sql``) must be BIT-equal (not approximately equal) to
+    the unrolled oracle columns ``_pq_dist_cols`` as DuckDB evaluates
+    them over the same fixture — same squared terms, same left-to-right
+    association, exact +0.0 seed. Every d/g/ex column over the whole
+    fixture, compared with != (no tolerance)."""
     from pyspark.sql import functions as F2
     from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.catalog import (
         table,
     )
     from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators.similarity import (
+        PCA_DIM,
         PQ_K,
+        PQ_M,
+        PQ_SUB,
         _pq_dist_cols,
-        _pq_dist_cols_spark,
+        _sq_fold_sql,
     )
 
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -245,19 +249,39 @@ def test_pq_fold_equals_unrolled_strings(spark, sf_dir):
         F2.col("embedding").alias("qe")
     )
     base = emb.crossJoin(F2.broadcast(anchors)).crossJoin(F2.broadcast(q_row))
-    unrolled = base.select(
-        "vec_id", *[F2.expr(c) for c in _pq_dist_cols("spark")]
+
+    def fold(a: str, b: str, lo: int, n: int):
+        return F2.expr(
+            _sq_fold_sql(f"slice({a}, {lo}, {n})", f"slice({b}, {lo}, {n})")
+        )
+
+    cols = []
+    for s in range(PQ_M):
+        lo = s * PQ_SUB + 1
+        for k in range(PQ_K):
+            cols.append(fold("embedding", f"a{k}", lo, PQ_SUB).alias(f"d{s}_{k}"))
+            cols.append(fold("qe", f"a{k}", lo, PQ_SUB).alias(f"g{s}_{k}"))
+    cols.append(fold("embedding", "qe", 1, PCA_DIM).alias("ex"))
+    spark_rows = {
+        r[0]: tuple(r[1:]) for r in base.select("vec_id", *cols).collect()
+    }
+
+    anch = ", ".join(
+        f"MAX(CASE WHEN vec_id = {k} THEN embedding END) AS a{k}"
+        for k in range(PQ_K)
     )
-    fold = base.select("vec_id", *_pq_dist_cols_spark())
-    assert unrolled.columns == fold.columns
-    joined = unrolled.alias("u").join(fold.alias("f"), "vec_id")
-    mismatch = None
-    for c in unrolled.columns:
-        if c == "vec_id":
-            continue
-        cond = F2.col(f"u.{c}") != F2.col(f"f.{c}")
-        mismatch = cond if mismatch is None else (mismatch | cond)
-    assert joined.filter(mismatch).count() == 0
+    duck_rows = {
+        r[0]: tuple(r[1:])
+        for r in duck.execute(f"""
+            WITH anch AS (SELECT {anch} FROM embeddings WHERE vec_id < {PQ_K}),
+                 q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
+            SELECT vec_id, {", ".join(_pq_dist_cols())}
+            FROM embeddings CROSS JOIN anch CROSS JOIN q
+        """).fetchall()
+    }
+    assert len(duck_rows) == len(spark_rows) == emb.count()
+    mismatch = [v for v in duck_rows if duck_rows[v] != spark_rows[v]]
+    assert not mismatch, mismatch[:5]
 
 
 def test_index_append_covers_delta_and_coassigns_duplicates(spark, tmp_path):

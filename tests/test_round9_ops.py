@@ -7,6 +7,7 @@ from __future__ import annotations
 import math
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.caches import (
@@ -181,17 +182,18 @@ def test_append_index_trains_once(spark, sf_dir):
         similarity as S,
     )
 
-    before = S._append_index(spark, sf_dir)
+    base = (S.IVF_APPEND_NUM, S.IVF_APPEND_DEN)
+    before = S._ivf2_index(spark, sf_dir, base)
     assert before.cents.is_cached
     assert before.coarse_arr.is_cached
     assert before.groups.is_cached
     S.q_ivf_index_append(spark, sf_dir).count()
     S.q_dedup_ingest_incremental(spark, sf_dir).count()
     # same persisted objects — no rider rebuilt the training
-    assert S._append_index(spark, sf_dir).cents is before.cents
+    assert S._ivf2_index(spark, sf_dir, base).cents is before.cents
     built = {k[2:] for k in _MEMO if k[0] == "ivf_assignments"}
     assert ("_append_assignment", sf_dir) in built
-    assert ("_append_base_assignment", sf_dir) in built
+    assert ("_ivf2_index", sf_dir, base) in built
 
 
 def test_ingest_dedup_reports_argmax_match(spark, sf_dir):
@@ -372,27 +374,29 @@ def test_rhp_frame_env_gated_serving(spark, sf_dir, tmp_path, monkeypatch):
     assert sk_got == sk_want
 
 
-def test_adaptive_shard_bounds_hot_cells(spark, sf_dir, monkeypatch):
+@pytest.mark.parametrize("base", ["full", "append"])
+def test_adaptive_shard_bounds_hot_cells(spark, sf_dir, monkeypatch, base):
     """Round-9 second cut: the re-shard tier splits PER CELL by frozen
     occupancy (FAISS hot-list splitting), not globally. Forced-on via
     shrunken dials (cap 4*8=32 < n), then pinned structurally: each
     cell's width pc follows the min-p integer rule over its PRE-SPLIT
     occupancy, every emitted shard < 2^pc of its own cell, cells at or
     under target never split (pc=0), and at least one hot cell DID
-    split (the tier engaged)."""
+    split (the tier engaged). Checked on both base slices of the one
+    two-level build: the whole corpus and the frozen append base, each
+    with its own width map."""
     from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.operators import (
         similarity as S,
     )
 
     monkeypatch.setattr(S, "SEMDEDUP_TARGET_CLUSTER", 8)
     monkeypatch.setattr(S, "IVF2_K_CAP", 4)
+    sl = (1, 1) if base == "full" else (S.IVF_APPEND_NUM, S.IVF_APPEND_DEN)
     release_family("ivf_assignments")
     try:
-        rows = S._twolevel_assignment(spark, sf_dir).collect()
-        pcm = {
-            r.cent_id: r.pc
-            for r in S._twolevel_index(spark, sf_dir)["pcm"].collect()
-        }
+        ix = S._ivf2_index(spark, sf_dir, sl)
+        rows = ix.assigned.collect()
+        pcm = {r.cent_id: r.pc for r in ix.pcm.collect()}
     finally:
         release_family("ivf_assignments")
 
