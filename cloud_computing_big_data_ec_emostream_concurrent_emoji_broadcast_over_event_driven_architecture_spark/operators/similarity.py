@@ -2814,9 +2814,10 @@ def q_ann_batch_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_semdedup_threshold_sweep, q_ann_ivf_twolevel — shares ONE
 # session-persisted build. The build has one implementation,
 # :func:`_ivf2_index`, whose only argument is the base slice: the whole
-# corpus here, the first 3/4 for the frozen append index below. The flat assign survives only at FIXED K=8
-# (the pedagogical q_dedup_semdedup / q_ann_ivf family), where N·K is
-# linear by construction.
+# corpus here, the first 3/4 for the frozen append index below. The
+# flat assign survives only at FIXED K=8 (the pedagogical
+# q_dedup_semdedup / q_ann_ivf family), where N·K is linear by
+# construction.
 # Dial sizing: K grows with the corpus up to the cap; the cap keeps
 # K ≤ sample/4 (first-K init must draw from the sample) and bounds the
 # Lloyd training cost at sample·K — the sample-bounded training is a
