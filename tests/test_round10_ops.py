@@ -92,7 +92,7 @@ def test_residual_multiprobe_per_cell_luts(spark, sf_dir):
             F.exists(
                 F.zip_with(
                     "qrv",
-                    F.zip_with("qe", "cv", lambda x, y: x - y),
+                    F.zip_with("qv", "cv", lambda x, y: x - y),
                     lambda a, b: a != b,
                 ),
                 lambda x: x,
