@@ -11,6 +11,7 @@ Layout
 - ``catalog``    : parquet table loading for a scale-factor directory
 - ``plans``      : the query registry — every operator is a named, oracle-
                    checked entry (name -> (spark, sf_dir) -> DataFrame + SQL)
+                   — and the live-plan walker and per-operator profiler
 - ``operators``  : batch operator implementations grouped by family
 - ``functions``  : reusable column-expression helpers (all JVM-side built-ins
                    unless noted)

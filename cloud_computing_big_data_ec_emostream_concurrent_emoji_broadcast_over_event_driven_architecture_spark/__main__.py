@@ -3,18 +3,22 @@
     python -m cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark list [tag]
     python -m ... run <query> [--sf-dir DIR] [--limit N]
     python -m ... explain <query> [--sf-dir DIR]
+    python -m ... profile <query> [--sf-dir DIR]
     python -m ... oracle <query>
 
 `list` prints every registered query (optionally filtered by tag) with
 its one-line description; `run` executes one against a scale-factor
 directory and shows the result; `explain` prints the formatted physical
-plan (the artifact to audit for scale); `oracle` prints the DuckDB twin
-SQL.
+plan (the artifact to audit for scale); `profile` runs the query and
+prints one JSON document: its wall time and every live node of the
+executed plan with its SQL metrics (rows, time, bytes, spill);
+`oracle` prints the DuckDB twin SQL.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import sys
 
 
@@ -25,7 +29,7 @@ def main(argv: list[str] | None = None) -> int:
     p_list = sub.add_parser("list", help="list registered queries")
     p_list.add_argument("tag", nargs="?", help="filter by tag")
 
-    for name in ("run", "explain"):
+    for name in ("run", "explain", "profile"):
         p = sub.add_parser(name)
         p.add_argument("query")
         p.add_argument("--sf-dir", default="/root/testdata/sf0.01")
@@ -66,10 +70,14 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = build_session(app_name=f"engine_{args.cmd}")
     try:
-        df = specs[args.query].fn(spark, args.sf_dir)
-        if args.cmd == "explain":
-            df.explain("formatted")
+        if args.cmd == "profile":
+            from .plans.profile import profile
+
+            print(json.dumps(profile(spark, args.query, args.sf_dir), indent=1))
+        elif args.cmd == "explain":
+            specs[args.query].fn(spark, args.sf_dir).explain("formatted")
         else:
+            df = specs[args.query].fn(spark, args.sf_dir)
             df.show(args.limit, truncate=False)
             print(f"({df.count()} rows total)")
     finally:

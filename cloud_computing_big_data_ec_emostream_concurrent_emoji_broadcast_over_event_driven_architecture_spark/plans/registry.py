@@ -16,6 +16,7 @@ Conventions (driver contract):
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -110,3 +111,30 @@ def oracle_sql() -> dict[str, str]:
 
 def headline_specs() -> dict[str, QuerySpec]:
     return {n: s for n, s in all_specs().items() if s.headline}
+
+
+def norm_cell(v):
+    """One result cell as the oracle comparison sees it: NaN becomes the
+    string "NaN" (two NaN floats never compare equal), a float is rounded
+    to 9 decimals, a date or datetime becomes naive ISO text, and a
+    nested list or tuple becomes a tuple of normalized cells."""
+    if isinstance(v, float):
+        return "NaN" if math.isnan(v) else round(v, 9)
+    if hasattr(v, "isoformat"):  # date/datetime: ignore tzinfo presence
+        try:
+            return v.replace(tzinfo=None).isoformat()
+        except (TypeError, AttributeError):
+            return v.isoformat()
+    if isinstance(v, (list, tuple)):
+        return tuple(norm_cell(x) for x in v)
+    return v
+
+
+def norm_rows(cols, rows) -> tuple[list[str], list[tuple]]:
+    """A result in comparable form: the lower-cased column names sorted,
+    and every row's normalized cells in that column order, rows sorted.
+    Two results match when both parts are equal."""
+    cols = [c.lower() for c in cols]
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    out = [tuple(norm_cell(r[i]) for i in order) for r in rows]
+    return sorted(cols), sorted(out, key=repr)

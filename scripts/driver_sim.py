@@ -19,11 +19,12 @@ from pyspark.sql import SparkSession
 
 sys.path.insert(0, ".")
 import __spark_entry__ as e  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents "
-    "embeddings"
-).split()
+from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.catalog import (  # noqa: E402,E501
+    TABLES,
+)
+from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.plans.registry import (  # noqa: E402,E501
+    norm_rows,
+)
 
 
 # Queries whose oracle must NEVER be memo-rewritten: each is the live,
@@ -251,19 +252,6 @@ def _family(fn) -> str:
     return _FAMILY_OF_MODULE.get(mod, "misc")
 
 
-def norm(v):
-    if isinstance(v, float):
-        return round(v, 9)
-    if hasattr(v, "isoformat"):
-        try:
-            return v.replace(tzinfo=None).isoformat()
-        except (TypeError, AttributeError):
-            return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return tuple(norm(x) for x in v)
-    return v
-
-
 def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     cores = os.environ.get("SPARK_GRAFT_SIM_CORES", "8")
@@ -386,21 +374,13 @@ def main() -> int:
                     f"[{time.perf_counter() - t_q:.1f}s]"
                 )
                 continue
-            s_cols = [c.lower() for c in sdf.columns]
-            s_rows = sorted(
-                (tuple(norm(v) for _, v in sorted(zip(s_cols, r)))
-                 for r in (tuple(row) for row in sdf.collect())),
-                key=repr,
-            )
+            s_cols, s_rows = norm_rows(sdf.columns, sdf.collect())
             t_spark = time.perf_counter() - t_q
             res = con.execute(rewrite(osql[name], name))
-            d_cols = [c[0].lower() for c in res.description]
-            d_rows = sorted(
-                (tuple(norm(v) for _, v in sorted(zip(d_cols, r)))
-                 for r in res.fetchall()),
-                key=repr,
+            d_cols, d_rows = norm_rows(
+                [c[0] for c in res.description], res.fetchall()
             )
-            ok = sorted(s_cols) == sorted(d_cols) and s_rows == d_rows
+            ok = s_cols == d_cols and s_rows == d_rows
             # total stays the soak_report.py parse target; the
             # spark/oracle split diagnoses WHICH side a slow soak query
             # spends its time in (the 10x embedding-dedup read was the
@@ -413,8 +393,8 @@ def main() -> int:
             )
             if not ok:
                 fails.append(name)
-                if sorted(s_cols) != sorted(d_cols):
-                    emit(f"  cols spark={sorted(s_cols)} duck={sorted(d_cols)}")
+                if s_cols != d_cols:
+                    emit(f"  cols spark={s_cols} duck={d_cols}")
                 else:
                     diffs = [(a, b) for a, b in zip(s_rows, d_rows) if a != b][:2]
                     emit(f"  first diffs: {diffs}")

@@ -4,7 +4,6 @@ order-insensitive value comparison)."""
 
 from __future__ import annotations
 
-import math
 import os
 
 import duckdb
@@ -13,6 +12,9 @@ from pyspark import SparkContext
 
 from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.catalog import (
     TABLES,
+)
+from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.plans.registry import (
+    norm_rows,
 )
 from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.session import (
     build_session,
@@ -65,42 +67,12 @@ def duck():
     con.close()
 
 
-def _norm_cell(v):
-    """Normalize a cell for cross-engine comparison."""
-    if v is None:
-        return None
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        # absorb float64 representation jitter far below our ROUND digits
-        return round(v, 9)
-    if hasattr(v, "isoformat"):  # datetime/date — ignore tzinfo presence
-        try:
-            return v.replace(tzinfo=None).isoformat()
-        except (TypeError, AttributeError):
-            return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return tuple(_norm_cell(x) for x in v)
-    return v
-
-
-def _norm_rows(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_norm_cell(r[i]) for i in order) for r in rows]
-    return sorted(cols), sorted(out, key=repr)
-
-
 def assert_matches_oracle(spark_df, duck_con, sql):
     """Mirror of the driver's check: same column names, same multiset of
     row values (column-order- and row-order-insensitive)."""
-    sdf = spark_df
-    s_cols = [c.lower() for c in sdf.columns]
-    s_rows = [tuple(r) for r in sdf.collect()]
+    sc, sr = norm_rows(spark_df.columns, spark_df.collect())
     res = duck_con.execute(sql)
-    d_cols = [c[0].lower() for c in res.description]
-    d_rows = res.fetchall()
-    sc, sr = _norm_rows(s_cols, s_rows)
-    dc, dr = _norm_rows(d_cols, d_rows)
+    dc, dr = norm_rows([c[0] for c in res.description], res.fetchall())
     assert sc == dc, f"schema mismatch: spark={sc} duck={dc}"
     assert len(sr) == len(dr), f"row count mismatch: spark={len(sr)} duck={len(dr)}"
     mismatches = [(a, b) for a, b in zip(sr, dr) if a != b]

@@ -10,6 +10,9 @@ from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event
     q_ann_ivf,
     q_similarity_topk,
 )
+from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.plans.profile import (
+    plan_nodes,
+)
 
 
 def test_ivf_recall_monotone_in_nprobe(spark, sf_dir):
@@ -67,14 +70,9 @@ def test_rhp_lsh_plan_is_bucketed_not_cartesian(spark, sf_dir):
         q_similarity_pairs,
     )
 
-    plan = (
-        q_similarity_pairs(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    names = [n.name for n in plan_nodes(q_similarity_pairs(spark, sf_dir))]
+    assert "CartesianProductExec" not in names
+    assert "BroadcastNestedLoopJoinExec" not in names
 
 
 def test_trained_centroids_recall_at_least_pseudo(spark, sf_dir):

@@ -5,8 +5,7 @@ on either side. This is the pre-partitioning lever for repeated joins at
 
 from __future__ import annotations
 
-import io
-import contextlib
+import itertools
 import uuid
 
 import pytest
@@ -15,6 +14,9 @@ from pyspark.sql import functions as F
 from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.catalog import (
     table,
     write_bucketed,
+)
+from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.plans.profile import (
+    plan_nodes,
 )
 
 
@@ -33,13 +35,20 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path_factory):
         joined = ob.join(cb, ob.o_custkey == cb.c_custkey).groupBy(
             "c_mktsegment"
         ).agg(F.count("*").alias("n"))
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain()
-        plan = buf.getvalue()
-        join_section = plan.split("HashAggregate")[-1]
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in join_section, join_section
+        nodes = plan_nodes(joined)
+        names = [n.name for n in nodes]
+        assert "SortMergeJoinExec" in names
+        i = names.index("SortMergeJoinExec")
+        below = itertools.takewhile(
+            lambda n: n.depth > nodes[i].depth, nodes[i + 1:]
+        )
+        exchanges = [
+            n.string for n in below
+            if n.name in (
+                "ShuffleExchangeExec", "BroadcastExchangeExec", "ReusedExchangeExec"
+            )
+        ]
+        assert not exchanges, exchanges
         # and the result matches the unbucketed join
         expected = (
             orders.join(customer, orders.o_custkey == customer.c_custkey)

@@ -8,6 +8,9 @@ from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event
     q_multimodal_features,
     q_multimodal_meta,
 )
+from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.plans.profile import (
+    plan_nodes,
+)
 
 
 def test_features_match_local_decode(spark, sf_dir):
@@ -32,10 +35,5 @@ def test_features_match_local_decode(spark, sf_dir):
 
 def test_meta_prunes_payload(spark, sf_dir):
     """Metadata query must not carry the binary payload through the plan."""
-    plan = (
-        q_multimodal_meta(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "payload" not in plan
+    nodes = plan_nodes(q_multimodal_meta(spark, sf_dir))
+    assert not [n.string for n in nodes if "payload" in n.string]

@@ -19,6 +19,9 @@ sys.path.insert(0, str(_REPO / "scripts"))
 sys.path.insert(0, str(_REPO))
 
 import driver_sim  # noqa: E402
+from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.plans.registry import (  # noqa: E402
+    norm_rows,
+)
 
 from tests.conftest import SF_DIR  # noqa: E402
 
@@ -35,20 +38,7 @@ def _connect():
 
 def _rows(con, sql):
     res = con.execute(sql)
-    cols = sorted(c[0].lower() for c in res.description)
-    rows = sorted(
-        (
-            tuple(
-                driver_sim.norm(v)
-                for _, v in sorted(
-                    zip((c[0].lower() for c in res.description), r)
-                )
-            )
-            for r in res.fetchall()
-        ),
-        key=repr,
-    )
-    return cols, rows
+    return norm_rows([c[0] for c in res.description], res.fetchall())
 
 
 def test_memoized_oracles_match_raw():

@@ -10,6 +10,9 @@ from pyspark.sql import functions as F
 from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.caches import (
     release_family,
 )
+from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.plans.profile import (
+    plan_nodes,
+)
 
 
 def _planted_clique_fixture(spark, tmp_path, m: int = 24, solo: int = 30):
@@ -70,11 +73,9 @@ def test_simhash_best_is_partial_agg_not_window(spark, sf_dir):
         q_dedup_simhash_best,
     )
 
-    plan = q_dedup_simhash_best(spark, sf_dir)._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        q_dedup_simhash_best(spark, sf_dir)._jdf.queryExecution(), "formatted"
-    )
-    assert "Window" not in plan
-    assert "CartesianProduct" not in plan
+    names = [n.name for n in plan_nodes(q_dedup_simhash_best(spark, sf_dir))]
+    assert "WindowExec" not in names
+    assert "CartesianProductExec" not in names
 
 
 def test_sharded_dedup_floor_parity_below_cap(spark, sf_dir):
@@ -207,9 +208,9 @@ def test_twolevel_ivf_build_shape(spark, sf_dir):
         a = _twolevel_assignment(spark, sf_dir)
         assert a.count() == n
         assert a.select("vec_id").distinct().count() == n
-        plan = q_ann_ivf_twolevel(spark, sf_dir)._jdf.queryExecution().explainString(  # noqa: SLF001
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-        assert "CartesianProduct" not in plan
+        nodes = plan_nodes(q_ann_ivf_twolevel(spark, sf_dir))
+        assert "CartesianProductExec" not in [n.name for n in nodes]
     finally:
         release_family("ivf_assignments")
+    # released, the assignment frame plans its whole build live
+    assert "CartesianProductExec" not in [n.name for n in plan_nodes(a)]
