@@ -11,7 +11,8 @@ its one-line description; `run` executes one against a scale-factor
 directory and shows the result; `explain` prints the formatted physical
 plan (the artifact to audit for scale); `profile` runs the query and
 prints one JSON document: its wall time and every live node of the
-executed plan with its SQL metrics (rows, time, bytes, spill);
+executed plan with its SQL metrics (rows, time, bytes, spill), plus the
+nodes of each cached relation whose build ran inside the query;
 `oracle` prints the DuckDB twin SQL.
 """
 

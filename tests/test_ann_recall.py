@@ -70,7 +70,8 @@ def test_rhp_lsh_plan_is_bucketed_not_cartesian(spark, sf_dir):
         q_similarity_pairs,
     )
 
-    names = [n.name for n in plan_nodes(q_similarity_pairs(spark, sf_dir))]
+    nodes = plan_nodes(q_similarity_pairs(spark, sf_dir), builds=True)
+    names = [n.name for n in nodes]
     assert "CartesianProductExec" not in names
     assert "BroadcastNestedLoopJoinExec" not in names
 

@@ -35,7 +35,7 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path_factory):
         joined = ob.join(cb, ob.o_custkey == cb.c_custkey).groupBy(
             "c_mktsegment"
         ).agg(F.count("*").alias("n"))
-        nodes = plan_nodes(joined)
+        nodes = plan_nodes(joined, builds=True)
         names = [n.name for n in nodes]
         assert "SortMergeJoinExec" in names
         i = names.index("SortMergeJoinExec")

@@ -35,5 +35,5 @@ def test_features_match_local_decode(spark, sf_dir):
 
 def test_meta_prunes_payload(spark, sf_dir):
     """Metadata query must not carry the binary payload through the plan."""
-    nodes = plan_nodes(q_multimodal_meta(spark, sf_dir))
+    nodes = plan_nodes(q_multimodal_meta(spark, sf_dir), builds=True)
     assert not [n.string for n in nodes if "payload" in n.string]

@@ -60,7 +60,7 @@ def test_real_table_path_matches_derived(spark, sf_dir, real_sf_dir, qname):
 def test_q9_real_path_runs_the_join(spark, real_sf_dir):
     # the real branch must actually join partsupp (no modular fusion):
     # the physical plan reads the partsupp parquet
-    nodes = plan_nodes(tp.q_tpch_q9(spark, real_sf_dir))
+    nodes = plan_nodes(tp.q_tpch_q9(spark, real_sf_dir), builds=True)
     assert any(
         "partsupp.parquet" in n.string
         for n in nodes

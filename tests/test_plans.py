@@ -3,13 +3,15 @@
 refactor that silently de-broadcasts a dim, drops a pushed filter, or
 turns a top-k into a global sort fails fast.
 
-Every assertion reads the live physical plan through
-``plans.profile.plan_nodes``: it counts live nodes by operator class,
-and checks a detail (a join type, a pushed filter, a file path) on the
-one-line string of the node it belongs to. A cached relation's stored
-build plan never runs again and is not part of the walk
-(``InMemoryTableScanExec`` is a leaf), so no assertion sees cached
-lineage.
+Every assertion reads the physical plan through
+``plans.profile.plan_nodes``: it counts nodes by operator class, and
+checks a detail (a join type, a pushed filter, a file path) on the
+one-line string of the node it belongs to. ``_nodes`` gives the live
+nodes followed by the stored build plan of every cached relation the
+query reads (a fresh ``persist()`` builds inside the query, and a memo
+built earlier ran that plan once), so a "never a cartesian" check also
+covers the builds. ``_live`` gives the live nodes only, for checks on
+what a query runs once its caches are built.
 """
 
 from __future__ import annotations
@@ -36,6 +38,14 @@ TOP_K = "TakeOrderedAndProjectExec"
 
 
 def _nodes(spark, sf_dir, name: str):
+    """The live nodes of query ``name``, then the stored build plans of
+    the cached relations it reads."""
+    return plan_nodes(SPECS[name].fn(spark, sf_dir), builds=True)
+
+
+def _live(spark, sf_dir, name: str):
+    """The live nodes of query ``name`` only: a cached relation that is
+    already built does not run its build plan again."""
     return plan_nodes(SPECS[name].fn(spark, sf_dir))
 
 
@@ -181,7 +191,7 @@ def test_containment_join_is_bucketed_not_nested_loop(spark, sf_dir):
     )
 
     _hashed_shingle_sets(spark, sf_dir).count()
-    nodes = _nodes(spark, sf_dir, "q_dedup_containment")
+    nodes = _live(spark, sf_dir, "q_dedup_containment")
     # the live plan contains the banded candidate join
     assert any("band" in s for s in _strings(nodes, *JOINS))
     assert not _count(nodes, CARTESIAN, BNLJ)
@@ -454,8 +464,11 @@ def test_triangles_all_equi_joins(spark, sf_dir):
     """Triangle enumeration is two equi-joins over the oriented edge
     list — never a cartesian, and the only nested-loop nodes are the
     upstream MinHash pipeline's 1-row scalar cross joins (Cross type);
-    the persisted pair list keeps that pipeline from running 3×."""
+    the persisted pair list keeps that pipeline from running 3×. The
+    pipeline is the pair list's build plan, which runs inside this
+    query."""
     nodes = _nodes(spark, sf_dir, "q_graph_triangles")
+    assert _count(nodes, BNLJ), "MinHash pipeline not walked"
     assert not _count(nodes, CARTESIAN)
     for s in _strings(nodes, BNLJ):
         assert "Cross" in s, f"non-scalar nested loop: {s}"
@@ -694,7 +707,7 @@ def test_dedup_tolerance_single_key_shuffle_no_join(spark, sf_dir):
 def test_degree_stats_aggs_only(spark, sf_dir):
     """Degree histogram: aggregations over the pair list only — the
     diagnostic must not itself join (that's what it protects against)."""
-    nodes = _nodes(spark, sf_dir, "q_graph_degree_stats")
+    nodes = _live(spark, sf_dir, "q_graph_degree_stats")
     assert not _count(nodes, CARTESIAN, BNLJ)
 
 
@@ -723,7 +736,7 @@ def test_bpe_train_chains_from_cached_vocab(spark, sf_dir):
     of the 4-row output) chains from vocab-sized persisted data — no
     live corpus scan, no sort-merge joins (argmax rows ride 1-row
     broadcasts)."""
-    nodes = _nodes(spark, sf_dir, "q_bpe_train_merges")
+    nodes = _live(spark, sf_dir, "q_bpe_train_merges")
     assert not _count(nodes, SCAN, SMJ)
 
 
@@ -731,7 +744,7 @@ def test_bpe_tokenize_cost_single_corpus_scan(spark, sf_dir):
     """Tokenizer apply: one corpus explode scan; the word->token-count
     vocab joins as a broadcast (memoized segmentation, never a re-fold
     per occurrence)."""
-    nodes = _nodes(spark, sf_dir, "q_bpe_tokenize_cost")
+    nodes = _live(spark, sf_dir, "q_bpe_tokenize_cost")
     assert _count(nodes, SCAN) == 1
     assert _count(nodes, BHJ)
     assert not _count(nodes, SMJ)
@@ -750,7 +763,7 @@ def test_ann_recall_audit_no_cartesian_product(spark, sf_dir):
     """Recall audit: the exact side is a deliberate broadcast
     nested-loop of the 16-query batch over the index (the audit's
     cost); nothing materializes a cartesian and nothing sort-merges."""
-    nodes = _nodes(spark, sf_dir, "q_ann_recall_audit")
+    nodes = _live(spark, sf_dir, "q_ann_recall_audit")
     assert not _count(nodes, CARTESIAN, SMJ)
 
 
@@ -783,7 +796,7 @@ def test_growth_accounting_single_data_shuffle(spark, sf_dir):
     """Cells dedup is the only data-sized exchange; the lag/lead window
     reuses the user_id partitioning (no second user-keyed Exchange of
     the cell table) and nothing degenerates to a nested loop."""
-    nodes = _nodes(spark, sf_dir, "q_growth_accounting")
+    nodes = _live(spark, sf_dir, "q_growth_accounting")
     assert not _count(nodes, CARTESIAN)
     # windows must not add a fresh hashpartitioning on user_id beyond
     # the dedup's own: count exchanges keyed by user_id
@@ -801,7 +814,7 @@ def test_audience_overlap_no_raw_pair_shuffle(spark, sf_dir):
     windows over the aggregated pair table, not from broadcast size
     joins (which each rebuilt the word aggregation from the fact
     table)."""
-    nodes = _nodes(spark, sf_dir, "q_audience_overlap")
+    nodes = _live(spark, sf_dir, "q_audience_overlap")
     assert not _count(nodes, CARTESIAN)
     assert _count(nodes, BHJ, SMJ, SHJ) == 1  # the word_id self-join only
     assert _count(nodes, "WindowExec") == 2  # users_a / users_b off the diagonal
@@ -816,7 +829,7 @@ def test_xcorr_grid_join_is_equi_not_nested_loop(spark, sf_dir):
     """The lag join must plan as a hash/sort-merge EQUI join on the
     shifted hour key (+ type inequality as a post-filter), never a
     nested loop over the grid."""
-    nodes = _nodes(spark, sf_dir, "q_xcorr_best_lag")
+    nodes = _live(spark, sf_dir, "q_xcorr_best_lag")
     assert not _count(nodes, CARTESIAN)
     assert _count(nodes, SMJ, BHJ, SHJ) >= 1
 
@@ -825,7 +838,7 @@ def test_bucketed_smb_join_reads_bucketed_scan(spark, sf_dir):
     """The registry query's join must consume the bucketed layout:
     SelectedBucketsCount appears on both scans and the orderkey join
     adds no Exchange on either side."""
-    nodes = _nodes(spark, sf_dir, "q_join_bucketed_smb")
+    nodes = _live(spark, sf_dir, "q_join_bucketed_smb")
     scans = _strings(nodes, SCAN)
     assert any(
         "Bucketed: true" in s or "SelectedBucketsCount" in s for s in scans
@@ -843,12 +856,12 @@ def test_rollup_reaggregate_merges_partials_not_raw(spark, sf_dir):
     """Day-grain distinct comes from OR-merging hour-grain words: the
     plan contains the two-level aggregate chain and no Expand (no
     count-distinct rewrite over raw user ids)."""
-    nodes = _nodes(spark, sf_dir, "q_rollup_reaggregate")
+    nodes = _live(spark, sf_dir, "q_rollup_reaggregate")
     assert not _count(nodes, "ExpandExec", CARTESIAN)
 
 
 def test_semdedup_sweep_single_pair_build(spark, sf_dir):
     """The sweep must not rebuild the candidate pairs per threshold:
     thresholds arrive via broadcast join onto ONE pair-build subtree."""
-    nodes = _nodes(spark, sf_dir, "q_semdedup_threshold_sweep")
+    nodes = _live(spark, sf_dir, "q_semdedup_threshold_sweep")
     assert not _count(nodes, CARTESIAN)

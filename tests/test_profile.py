@@ -1,6 +1,7 @@
 """The live-plan walker (``plans.profile``): it stops at a cached
 relation's scan instead of reading the relation's stored build plan, and
-``profile`` reports the metrics of the plan that ran.
+``profile`` reports the metrics of the plan that ran, the build plans
+that ran inside it included.
 
 Both call the module with the session fixture; the CLI's ``profile``
 verb would stop the shared session when it returns."""
@@ -42,3 +43,20 @@ def test_profile_reports_executed_rows(spark, sf_dir):
     scans = [n for n in nodes if n["name"] == "FileSourceScanExec"]
     assert scans
     assert all(n["metrics"]["numOutputRows"] > 0 for n in scans), scans
+
+
+def test_profile_reports_builds_run_inside_the_query(spark, sf_dir):
+    """q_graph_triangles persists its pair list afresh, so the MinHash
+    pipeline runs inside the query: profile lists it under ``builds``
+    with the pair count it wrote. A second run reads the built relation
+    and builds nothing."""
+    from cloud_computing_big_data_ec_emostream_concurrent_emoji_broadcast_over_event_driven_architecture_spark.caches import (
+        release_transients,
+    )
+
+    release_transients()
+    doc = profile(spark, "q_graph_triangles", sf_dir)
+    assert doc["builds"], "the pair list's build is not reported"
+    pairs = all_specs()["q_dedup_minhash"].fn(spark, sf_dir).count()
+    assert doc["builds"][0][0]["metrics"]["numOutputRows"] == pairs
+    assert profile(spark, "q_graph_triangles", sf_dir)["builds"] == []

@@ -73,7 +73,8 @@ def test_simhash_best_is_partial_agg_not_window(spark, sf_dir):
         q_dedup_simhash_best,
     )
 
-    names = [n.name for n in plan_nodes(q_dedup_simhash_best(spark, sf_dir))]
+    nodes = plan_nodes(q_dedup_simhash_best(spark, sf_dir), builds=True)
+    names = [n.name for n in nodes]
     assert "WindowExec" not in names
     assert "CartesianProductExec" not in names
 
@@ -208,9 +209,7 @@ def test_twolevel_ivf_build_shape(spark, sf_dir):
         a = _twolevel_assignment(spark, sf_dir)
         assert a.count() == n
         assert a.select("vec_id").distinct().count() == n
-        nodes = plan_nodes(q_ann_ivf_twolevel(spark, sf_dir))
+        nodes = plan_nodes(q_ann_ivf_twolevel(spark, sf_dir), builds=True)
         assert "CartesianProductExec" not in [n.name for n in nodes]
     finally:
         release_family("ivf_assignments")
-    # released, the assignment frame plans its whole build live
-    assert "CartesianProductExec" not in [n.name for n in plan_nodes(a)]
